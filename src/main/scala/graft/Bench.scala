@@ -106,19 +106,19 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** A JSON string literal: backslash, quote and every control char
+    * escaped (a \r or \t inside an error message or builder-authored SQL
+    * must not break the record, or the reader's json.load). */
+  private[graft] def jstr(s: String): String = s.flatMap {
+    case '\\'        => "\\\\"
+    case '"'         => "\\\""
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c           => c.toString
+  }.mkString("\"", "", "\"")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-bench", Session.scratchWarehouse("graft-wh"))
     spark.sparkContext.setLogLevel("WARN")
     warmup(spark, sfDir)
     // calibration pair AFTER warmup (so the probes measure the host, not
@@ -152,14 +152,6 @@ object Bench {
       // path has input — see BenchSplit's doc); 0.0 for everything else
       (name, totalS, math.min(BenchSplit.drainSeconds(), totalS), err)
     }
-    // escape control chars too (a \r or \t inside an error message —
-    // takeWhile above only cuts at the first \n — must not break the JSON)
-    def jstr(s: String) = s.flatMap {
-      case '\\'            => "\\\\"
-      case '"'             => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c               => c.toString
-    }.mkString("\"", "", "\"")
     val qs = results.map { case (k, v, _, err) =>
       s"\"" + k + "\":" + (if (err.isEmpty) s"$v" else "\"ERR\"")
     }.mkString("{", ",", "}")

@@ -15,7 +15,7 @@ package graft
   * per query and reports `setup_s` / `op_s` alongside the unchanged total.
   *
   * Since r20 the once-per-(JVM, corpus) persisted-index builds
-  * (Dedup.simhashPairs / bipartiteLabels) are also setup-attributed: the
+  * (`Dedup.PersistedIndex`) are also setup-attributed: the
   * shared build otherwise lands inside whichever query calls first, making
   * per-query diffs order-dependent (VERDICT r19 item 2 — d16 read 3.9× its
   * r18 figure purely because it drew the build that round).

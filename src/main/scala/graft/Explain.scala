@@ -1,136 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print `explain("formatted")` for the named queries
-  * (default: the scan/join/agg-heavy ones) against an sf dir. Usage:
+  * (default: every registry query) against an sf dir. Usage:
   *   runMain graft.Explain [sfDir] [queryName ...]
-  * Streaming queries (q19–q21) execute on .explain — skipped by default. */
+  * Queries that run a stream inside their builder run it here too. For
+  * the plan without AQE or broadcast joins, add
+  * `-Dspark.sql.adaptive.enabled=false -Dspark.sql.autoBroadcastJoinThreshold=-1`. */
 object Explain {
-  /** The default audit set: the scan/join/agg-heavy batch-planable
-    * queries. Shared with `PlanLintSpec`, which asserts catalog-wide
-    * plan invariants (no CartesianProduct) over exactly this list. */
-  val defaultNames: Seq[String] = Seq("q01_pricing_summary", "q02_revenue_by_segment",
-        "q04_top_lineitems_per_flag", "q13_revenue_by_part_class",
-        "q15_ingest_route_counts", "d02_minhash_lsh", "s02_lsh_near_pairs",
-        "t05_fingerprints", "q25_pivot_priority", "q27_asof_click_purchase",
-        "q28_value_tier_rangejoin", "q32_full_outer_join",
-        "t06_tfidf_top_terms", "d06_embedding_neardup",
-        "d08_keep_best_dedup", "s05_quantized_cosine", "t08_redaction_stats",
-        "q41_orc_roundtrip", "q44_topk_udaf", "m05_phash_neardup",
-        "q51_bloom_join", "q52_sessionize", "q53_scd2_merge",
-        "t12_decontamination", "t13_repetition_stats",
-        "d11_incremental_dedup", "s07_kmeans_update",
-        "s09_matryoshka_rerank", "t17_bpe_pair_counts", "q66_ordered_set_aggs",
-        "q68_dsv2_pushdown", "q70_nullsafe_join", "q71_theta_set_algebra",
-        "q73_dynamic_pivot", "d13_fuzzy_linkage",
-        "q77_waiting_supplier", "q78_regression_stats",
-        "q79_cumulative_distinct", "q82_business_days",
-        "q83_salted_skew_join", "s10_pq_encode", "t19_zipf_slope",
-        "t20_boilerplate_segments", "q86_incremental_agg",
-        "q87_ewma_fixed_point", "d14_minhash_calibration",
-        "q89_null_aware_anti_join", "q90_nested_collections",
-        "t21_train_test_shift", "t22_explode_outer_coverage",
-        "q94_two_pass_quartiles", "q109_sql_udf", "q110_collated_distinct",
-        "d16_persisted_lsh_index", "s13_ivf_incremental",
-        "t25_boilerplate_removal", "d17_canonical_corpus",
-        "q114_rank_functions", "t27_source_cap", "s14_hard_negatives",
-        "m11_cdc_chunking", "d19_source_minhash_matrix", "t28_bpe_encode",
-        "s16_recall_at_k", "q116_funnel_conversion", "m12_keyframe_select",
-        "t29_chunk_overlap", "d21_incremental_clusters",
-        "q120_geo_cell_join", "q121_attribution",
-        "q122_peak_concurrency", "q123_systematic_sample",
-        "d22_label_propagation", "s17_hamming_rerank",
-        "q124_skyline", "q125_interval_overlap_join",
-        "q126_assoc_rules", "d23_bfs_hops", "s18_kcenter_coreset",
-        "q127_markov_transitions", "m13_byte_hist_neardup",
-        "t30_bigram_lm_shift", "t31_heaps_law", "q128_file_lineage_audit",
-        "q129_sliding_distinct", "d25_clustering_coeff", "s19_centroid_drift",
-        "q130_time_weighted_avg", "q131_interval_coalesce",
-        "d26_exact_substring_spans", "t32_quality_classifier",
-        "d27_substring_dedup_apply", "m14_aspect_bucket_pack",
-        "t33_pmi_collocations", "q132_mad_outliers", "q133_psi_drift", "q134_path_mining", "d28_containment_dedup", "q136_cuped",
-        "q137_k_anonymity", "q138_deletion_sweep", "q139_pii_scan",
-        "q140_autocorrelation", "q141_benford_audit", "t34_term_burstiness", "q142_weighted_median",
-        // r15/r16 batch additions (streaming queries and driver-iterating
-        // builders — s21 power iterations, t26 BPE rounds — stay out, the
-        // t26 precedent)
-        "q143_retention_audit", "q144_mixture_sample", "q145_bitemporal_asof",
-        "q146_schema_drift", "q147_compaction_planner", "q148_corpus_datasheet",
-        "q149_ks_drift", "q152_weighted_reservoir", "q153_l_diversity",
-        "q155_incremental_join_view", "q156_score_calibration", "q158_srm_audit",
-        "q159_referential_orphans", "q160_candidate_keys", "q161_join_estimate",
-        "t35_ccnet_ppl_buckets", "t36_dsir_importance", "t37_gopher_rules",
-        "t38_novelty_scores", "t39_tokenizer_fertility", "t40_burned_benchmark",
-        "t41_good_turing", "t42_symspell_correct", "t43_kneser_ney",
-        "t44_ngram_coverage", "d39_lsh_bucket_audit", "d40_bucket_split_pairs",
-        "q168_salt_planner", "s29_delete_recall_curve", "q171_table_diff",
-        "s30_radius_search", "q172_bot_screen",
-        "q162_rfm_segments",
-        "d30_semantic_dedup", "d31_bloom_dedup_gate", "d32_leakage_safe_split",
-        "d33_soft_dedup_weights", "d34_semantic_decontam", "d35_detector_agreement",
-        "d36_threshold_sweep", "d37_translation_pairs", "d38_cluster_coherence",
-        "s20_knn_graph", "s22_prototype_prune", "s23_recall_probe_sweep",
-        "s24_filtered_ann", "s25_simplified_silhouette", "s26_anisotropy_probe",
-        "s27_pq_distortion", "q163_contract_check",
-        "q165_semi_additive", "q166_csv_quarantine", "q167_cusum_changepoint",
-        "s28_tombstone_search",
-        "m15_clip_gate", "m16_payload_quarantine", "m17_vision_token_budget",
-        "m18_template_captions",
-        "q170_training_manifest", "d41_simhash_rotated_pairs",
-        "q174_maintenance_plan", "d42_star_components", "q175_zorder_layout", "d43_probe_budget", "q176_replication_impact", "t45_sequence_packing", "m19_training_mix_manifest", "s31_ivf_skew", "q177_fair_share", "q178_recursive_hierarchy", "q179_variant_shredding", "d44_incremental_star", "s32_production_search", "s33_filtered_probe_sweep",
-        // r18 batch additions (the streaming pair q182/m20 stays out)
-        "s34_balanced_assign", "s35_compression_recall", "s36_rebalance_impact",
-        "q180_kmv_sketch", "q181_fk_cascade", "t46_interpolated_lm",
-        "t47_contamination_ensemble", "d45_similar_doc_topk",
-        "q183_watermark_autotune", "s37_self_retrieval_mrr",
-        // r18 second batch (s39 stays out: its output is a driver-built
-        // LocalRelation of the pick trajectory, the t26 precedent)
-        "q184_dp_release", "q185_deletion_vectors", "s38_multiprobe_lsh",
-        "t48_kneser_ney_lm", "m21_crosskind_dup", "m22_shared_scenes",
-        "q186_time_travel", "d46_dedup_survey", "s40_index_staleness",
-        "q188_partition_evolution", "d47_band_shape_ab", "q189_occ_conflicts",
-        "d48_sparsified_cc", "q190_pipe_syntax", "q191_crypto_shred",
-        "q192_wap_gate", "q193_freshness_sla", "t49_quota_allocation",
-        "q194_log_checkpoint", "q195_schema_evolution",
-        "d49_bipartite_components", "t50_dedup_lm_effect", "d50_bipartite_purity",
-        // r18 wave D
-        "q196_snapshot_expiry", "q197_orphan_vacuum", "q198_capacity_planner",
-        "t51_stupid_backoff", "t52_mattr_diversity", "s41_residual_quantizer",
-        "s42_nn_descent", "d51_weighted_jaccard", "m23_metadata_redaction",
-        // r18 wave E (the streaming q199 stays out, the q182 precedent)
-        "d52_cluster_stability", "t53_entropy_rate", "m24_shot_boundaries",
-        "s43_adaptive_nprobe",
-        // r18 wave F
-        "d53_bbit_minhash", "s44_bisect_hot_cell", "q200_rls_mask",
-        // r18 wave G (t54's MM loop is driver-iterating, the t26
-        // precedent — its final frame still plans, so it stays in)
-        "q201_shapley_attribution", "s45_adc_vs_sdc", "t54_bradley_terry",
-        // r18 wave H
-        "t55_filter_ablation", "d54_dup_aware_sampling", "q202_dsar_export",
-        "m25_compressibility", "d55_transitivity_audit",
-        // r19: the maintenance capstone, the re-rank curve, the epoch
-        // shuffle (q203's phase digests crossJoin broadcast 1-row frames
-        // — the q185 precedent; broadcast-pinned, not cartesian)
-        "q203_maintenance_session", "s46_rerank_depth", "q204_epoch_shuffle",
-        "d56_residual_dup_audit",
-        // r20: the audio VAD twin and the two composed decision
-        // frontiers (the streaming q205 stays out, the q199 precedent)
-        "m26_speech_segments", "s47_ann_frontier", "d57_detector_frontier",
-        "q206_tier_planner")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
-      if (args.length > 1) args.drop(1).toSeq else defaultNames
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      if (args.length > 1) args.drop(1).toSeq
+      else analytics.Registry.all.map(_.name).sorted
+    val spark = Session("graft-explain", Session.scratchWarehouse("graft-explain-wh"))
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import graft.ddl.BillingTables
 import graft.ingest.BillingIngest
 import graft.sources.TextFileSource
@@ -35,15 +34,7 @@ object IngestBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-ingest-bench-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session("graft-ingest-bench", Session.scratchWarehouse("graft-ingest-bench-wh"))
     spark.sparkContext.setLogLevel("WARN")
 
     val srcDir = Files.createTempDirectory("graft-ingest-bench-src")

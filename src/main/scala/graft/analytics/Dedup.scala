@@ -312,144 +312,123 @@ object Dedup {
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
     ORDER BY id1, id2"""))
 
-  /** Hamming-bucketed SimHash candidate pairs `(id1 < id2, distance ≤ 6)`
-    * — the near-dup edge list the whole d-graph family (d07/d09/d17/d18/
-    * d22/d23/d42/d44/d51/d55, …) starts from. Candidate generation is
-    * bucket-capped (see [[SimhashBucketCap]]): identical output at the
-    * correctness SFs, and bounded — never |bucket|²/2 — work on a
-    * template-heavy 100 TB corpus.
+  /** Once-per-(JVM, corpus) persisted intermediate results: the first caller
+    * of an index builds it into a scratch parquet, every later caller reads
+    * that parquet back instead of recomputing it. The read-back frame is
+    * storage-backed, so a consumer's `unpersist()` never evicts the shared
+    * index.
     *
-    * PERSISTED ONCE per (JVM, sfDir), the d16 persisted-index discipline:
-    * the first caller runs [[cappedSelfPairs]] (the ONE shared capped
-    * generator — this function must never inline its own copy of the
-    * join rule, or the persisted index could drift from d05/d21/d24)
-    * and writes the edge list to a [[Tables.tmpDir]] scratch parquet
-    * (JVM-exit-registered — a raw createTempDirectory here would leak
-    * the 700 k-row index per run); every later consumer reads that
-    * index back instead of re-running the signature pipeline +
-    * self-join (~3–6 s per query at sf0.1 before this, ×10+ call sites
-    * per bench run). The read-back frame is storage-backed, so
-    * callers' historical `unpersist()` calls are harmless no-ops and
-    * never evict the shared index. Keyed by (sfDir, corpus
-    * fingerprint): fixtures live in per-test temp dirs, and the
-    * fingerprint (size+mtime of documents.parquet, see
-    * [[corpusFingerprint]]) guarantees a REGENERATED corpus under a
-    * reused dir path can never silently serve a stale index.
+    * Keyed by (name, sf dir, extra key part, [[corpusFingerprint]]):
+    * fixtures live in per-test temp dirs, and the fingerprint makes sure a
+    * regenerated corpus under a reused dir never serves a stale index.
     *
-    * The one-time build is attributed to [[graft.BenchSplit]] SETUP,
-    * not to whichever query happens to call first: the shared ~4–6 s
-    * build landing inside an arbitrary first consumer's timing made
-    * per-query bench diffs order-dependent (r19: d16 read 3.9× its r18
-    * figure purely because it drew the build). Under Verify nothing
-    * drains the accumulator, so correctness runs are unaffected. */
-  private val pairsIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * The build is attributed to [[graft.BenchSplit]] setup, not to whichever
+    * query calls first (a shared multi-second build landing inside an
+    * arbitrary first consumer made per-query bench diffs order-dependent).
+    * A build that reads another index counts its time once.
+    *
+    * The scratch location is [[Tables.tmpDir]], driver-local and deleted on
+    * JVM exit. That only works under the `local[N]` driver contract: at
+    * 100 TB it must be shared storage (object store / DFS), because
+    * executors read the index back. */
+  private[graft] object PersistedIndex {
 
-  /** Cheap corpus identity for the persisted-index keys: total bytes and
-    * max mtime over the files of `dir/documents.parquet` (file or
-    * directory layout). Not a content hash — it only needs to change when
-    * the corpus files are rewritten, which any regeneration does. */
-  private def corpusFingerprint(dir: String): String = {
-    val root = java.nio.file.Paths.get(dir, "documents.parquet")
-    try {
-      val walk = java.nio.file.Files.walk(root)
+    /** One build per key; the lazy val serializes concurrent callers of the
+      * same key without holding the map while a build reads another index. */
+    private final class Entry(build: => String) { lazy val path: String = build }
+    private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+    /** The index `name` over the corpus in `dir`, built by `write` (which
+      * writes parquet to the path it is given) the first time per key. */
+    def apply(s: org.apache.spark.sql.SparkSession, name: String, dir: String, part: String = "")(
+        write: String => Unit): org.apache.spark.sql.DataFrame = {
+      val key = s"$name|$dir|$part|${corpusFingerprint(dir)}"
+      val entry = entries.computeIfAbsent(key, _ => new Entry(graft.BenchSplit.setup {
+        val p = Tables.tmpDir(s"graft-$name$part").resolve("idx").toString
+        write(p)
+        p
+      }))
+      s.read.parquet(entry.path)
+    }
+
+    /** Cheap corpus identity: total bytes and max mtime over the files of
+      * `dir/documents.parquet` (file or directory layout). Not a content
+      * hash — it only needs to change when the corpus files are rewritten,
+      * which any regeneration does. */
+    private[graft] def corpusFingerprint(dir: String): String = {
+      val root = java.nio.file.Paths.get(dir, "documents.parquet")
       try {
-        var bytes = 0L
-        var mtime = 0L
-        val it = walk.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          if (java.nio.file.Files.isRegularFile(p)) {
-            bytes += java.nio.file.Files.size(p)
-            mtime = math.max(mtime,
-              java.nio.file.Files.getLastModifiedTime(p).toMillis)
+        val walk = java.nio.file.Files.walk(root)
+        try {
+          var bytes = 0L
+          var mtime = 0L
+          val it = walk.iterator()
+          while (it.hasNext) {
+            val p = it.next()
+            if (java.nio.file.Files.isRegularFile(p)) {
+              bytes += java.nio.file.Files.size(p)
+              mtime = math.max(mtime,
+                java.nio.file.Files.getLastModifiedTime(p).toMillis)
+            }
           }
-        }
-        s"$bytes:$mtime"
-      } finally walk.close()
-    } catch { case _: Throwable => "absent" }
+          s"$bytes:$mtime"
+        } finally walk.close()
+      } catch { case _: Throwable => "absent" }
+    }
   }
 
   /** Persisted full-corpus SimHash SIGNATURE index `(doc_id, simhash)`
-    * — the signature pipeline (token explode + two aggregates) paid
-    * once per (JVM, corpus fingerprint) instead of once per consumer
-    * (d04/d39/d42/d44/d55 plus the pair-index build and the
-    * d21/d24 published-corpus setups). Same discipline as
-    * [[minhashIndex]]: setup-attributed build, fingerprint-keyed,
-    * 2 longs per doc so read-back decode is trivial. */
-  private val simhashIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def simhashIndex(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val key = s"$dir|${corpusFingerprint(dir)}"
-    val path = simhashIndexPath.computeIfAbsent(key, _ => graft.BenchSplit.setup {
-      // at 100 TB this scratch path must be SHARED storage (object store /
-      // DFS) — executors read it back; driver-local tmp only works under
-      // the local[N] driver contract
-      val p = Tables.tmpDir("graft-simhash-sigs").resolve("idx").toString
+    * (a [[PersistedIndex]]) — the signature pipeline (token explode + two
+    * aggregates) paid once per corpus instead of once per consumer
+    * (d04/d39/d42/d44/d55 plus the pair-index build and the d21/d24
+    * published-corpus setups); 2 longs per doc, so read-back decode is
+    * trivial. */
+  private[graft] def simhashIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
+    PersistedIndex(s, "simhash-sigs", dir) { p =>
       simhashDf(s, dir).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** The persisted pair index WITH its hamming column — d05's read, and
-    * the PRIMITIVE the plain variant below projects: computing the cache
-    * key once inside one computeIfAbsent removes the r21 hazard where a
-    * second corpusFingerprint walk (racing a corpus rewrite, or throwing
-    * into the "absent" sentinel) made `pairsIndexPath.get` return null
-    * and `read.parquet(null)` NPE instead of rebuilding (ADVICE r21). */
-  private[graft] def simhashPairsH(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val key = s"$dir|${corpusFingerprint(dir)}"
-    val path = pairsIndexPath.computeIfAbsent(key, _ => graft.BenchSplit.setup {
-      // at 100 TB this scratch path must be SHARED storage (object store /
-      // DFS) — executors read it back; driver-local tmp only works under
-      // the local[N] driver contract (same caveat as ConnectedComponents'
-      // localCheckpoint note)
-      val p = Tables.tmpDir("graft-simhash-pairs").resolve("idx").toString
-      // signatures come off the persisted signature index (storage-
-      // backed, so both self-join sides read a materialization)
+  /** Hamming-bucketed SimHash candidate pairs `(id1 < id2, distance ≤ 6)`
+    * WITH the hamming column — d05's read, and the edge list the whole
+    * d-graph family (d07/d09/d17/d18/d22/d23/d42/d44/d51/d55, …) starts
+    * from via [[simhashPairs]]. Candidate generation is bucket-capped (see
+    * [[SimhashBucketCap]]): identical output at the correctness SFs, and
+    * bounded — never |bucket|²/2 — work on a template-heavy 100 TB corpus.
+    *
+    * A [[PersistedIndex]]: the build runs [[cappedSelfPairsH]] (the ONE
+    * shared capped generator — this function must never inline its own
+    * copy of the join rule, or the index could drift from d05/d21/d24)
+    * over the persisted signature index (storage-backed, so both
+    * self-join sides read a materialization); every later consumer reads
+    * the edge list back instead of re-running the signature pipeline +
+    * self-join (~3–6 s per query at sf0.1, ×10+ call sites per bench
+    * run). */
+  private[graft] def simhashPairsH(s: org.apache.spark.sql.SparkSession, dir: String) =
+    PersistedIndex(s, "simhash-pairs", dir) { p =>
       val sigs = simhashIndex(s, dir)
         .withColumn("bucket", expr("shiftright(simhash, 8)"))
-      // the index stores the hamming column too (cappedSelfPairsH —
-      // same join); plain consumers project it away, d05 reads it
       cappedSelfPairsH(sigs).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   private[graft] def simhashPairs(s: org.apache.spark.sql.SparkSession, dir: String) =
     simhashPairsH(s, dir).select(col("id1"), col("id2"))
 
-  /** Persisted full-corpus MinHash SIGNATURE index `(doc_id, mhs)` —
-    * the [[simhashPairs]] discipline applied one level earlier, the
-    * r20-recorded lever: d02/d47/d48/d56/d57 each re-paid the
+  /** Persisted full-corpus MinHash SIGNATURE index `(doc_id, mhs)` (a
+    * [[PersistedIndex]]) — d02/d47/d48/d56/d57 each re-paid the
     * shingle→hash→minhash_sigs pass (the hash transform walks every
     * shingle's characters — the expensive half). The shingle-TABLE A/B
     * lost because arrays-of-strings decode beats the codegen'd
     * recompute (PERF.md r20); the signature is 8 longs per doc, so the
-    * decode argument flips. Build is BenchSplit-setup-attributed and
-    * the key carries [[corpusFingerprint]], exactly like the other two
-    * persisted indexes. Consumers that also need the shingle SETS for
+    * decode argument flips. Consumers that also need the shingle SETS for
     * exact-Jaccard verify keep their own cached shingle pass — this
     * index only replaces the signature derivation. */
-  private val minhashIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[analytics] def minhashIndex(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val key = s"$dir|${corpusFingerprint(dir)}"
-    val path = minhashIndexPath.computeIfAbsent(key, _ => graft.BenchSplit.setup {
-      // at 100 TB this scratch path must be SHARED storage (object store /
-      // DFS) — executors read it back; driver-local tmp only works under
-      // the local[N] driver contract
-      val p = Tables.tmpDir("graft-minhash-sigs").resolve("idx").toString
+  private[analytics] def minhashIndex(s: org.apache.spark.sql.SparkSession, dir: String) =
+    PersistedIndex(s, "minhash-sigs", dir) { p =>
       shingled(s, dir)
         .select(col("doc_id"), expr(s"transform(sh, x -> ${strHashExpr("x")})").as("hs"))
         .select(col("doc_id"), expr("minhash_sigs(hs)").as("mhs"))
         .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** [[minhashBandsOf]] over the FULL corpus, read off the persisted
     * signature index instead of re-running the shingle→hash→minhash_sigs
@@ -486,27 +465,17 @@ object Dedup {
   }
 
   /** Persisted full-corpus capped band-candidate PAIR index per band
-    * layout — [[simhashPairs]]' discipline applied to the MinHash side's
-    * candidate generation (VERDICT r21 item 3, generalized): the
+    * layout (a [[PersistedIndex]] keyed also by `rows`) — the
     * explode→sizes→tag→self-join→distinct pipeline above ran once per
     * consumer per layout. rows = 2 (the d02 production shape) serves
     * d02/d47/d48/d56/d57; rows = 4 serves d47/d57. rows = 1 is NOT
     * persisted: d57 is its only consumer, so a round-trip through scratch
-    * parquet would add IO without removing a recompute. Same key
-    * (sfDir + corpus fingerprint), same setup attribution, same
-    * shared-storage caveat at scale as the other three indexes. */
-  private val bandCandIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * parquet would add IO without removing a recompute. */
   private[graft] def bandCandIndex(
-      s: org.apache.spark.sql.SparkSession, dir: String, rows: Int) = {
-    val key = s"$dir|r$rows|${corpusFingerprint(dir)}"
-    val path = bandCandIndexPath.computeIfAbsent(key, _ => graft.BenchSplit.setup {
-      val p = Tables.tmpDir(s"graft-mh-cand-r$rows").resolve("idx").toString
+      s: org.apache.spark.sql.SparkSession, dir: String, rows: Int) =
+    PersistedIndex(s, "mh-cand", dir, s"-r$rows") { p =>
       bandCandPairs(minhashIndex(s, dir), rows).write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   // ---------------------------------------------------------------- d06
   // Embedding-cosine near-dedup: the last dedup family member — near-dup
@@ -3576,17 +3545,11 @@ object Dedup {
 
   /** d49's bipartite doc–rare-shingle CC labeling `(node, comp)` —
     * doc nodes < 2e9, shingle nodes ≥ 2e9. Shared by d49 and d50, and
-    * like [[simhashPairs]] PERSISTED ONCE per (JVM, sfDir + corpus
-    * fingerprint): the CC iteration (shingle explode + df filter +
-    * pointer jumping) costs ~10 s at sf0.1 and d49/d50 would otherwise
-    * each pay it. Build time is BenchSplit-setup-attributed and the key
-    * carries [[corpusFingerprint]] — same rationale as [[simhashPairs]]. */
-  private val bipartiteIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def bipartiteLabels(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val key = s"$dir|${corpusFingerprint(dir)}"
-    val path = bipartiteIndexPath.computeIfAbsent(key, _ => graft.BenchSplit.setup {
-      val p = Tables.tmpDir("graft-bipartite-cc").resolve("idx").toString
+    * a [[PersistedIndex]]: the CC iteration (shingle explode + df filter
+    * + pointer jumping) costs ~10 s at sf0.1 and d49/d50 would otherwise
+    * each pay it. */
+  private def bipartiteLabels(s: org.apache.spark.sql.SparkSession, dir: String) =
+    PersistedIndex(s, "bipartite-cc", dir) { p =>
       // the posting list feeds BOTH the df aggregate and the semi-join
       // side — materialize it once (eager: the two consumers are
       // independent stages, so a bare cache could race and compute the
@@ -3619,10 +3582,7 @@ object Dedup {
         graft.operators.ConnectedComponents.label(edges)
           .write.mode("overwrite").parquet(p)
       }
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** DuckDB CTE chain `sh0 … lab` mirroring [[bipartiteLabels]] (plus
     * `sh0` carrying the shingle sets for containment verifies). Must be

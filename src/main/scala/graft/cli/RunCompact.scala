@@ -45,7 +45,7 @@ object RunCompact {
 
   def main(args: Array[String]): Unit = {
     val opts = Args.parse(args)
-    val spark = Args.session("graft-compact")
+    val spark = graft.Session("graft-compact")
     val code = try run(spark, opts) finally spark.stop()
     if (code != 0) sys.exit(code)
   }

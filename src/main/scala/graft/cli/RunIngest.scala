@@ -53,7 +53,7 @@ object RunIngest {
 
   def main(args: Array[String]): Unit = {
     val opts = Args.parse(args)
-    val spark = Args.session("graft-ingest")
+    val spark = graft.Session("graft-ingest")
     val code = try run(spark, opts) finally spark.stop()
     if (code != 0) sys.exit(code)
   }
@@ -64,11 +64,4 @@ private[cli] object Args {
     args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
     }.toMap
-
-  def session(name: String): SparkSession = SparkSession.builder()
-    .appName(name)
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 }

@@ -104,7 +104,7 @@ object StateInspect {
   def main(args: Array[String]): Unit = {
     require(args.length == 1,
       "usage: StateInspect <checkpointDir>")
-    val spark = Args.session("graft-state-inspect")
+    val spark = graft.Session("graft-state-inspect")
     try {
       val stats = report(spark, args(0))
       println(f"${"op"}%-4s ${"operator"}%-24s ${"store"}%-28s ${"parts"}%6s ${"rows"}%10s ${"bytes"}%12s")

@@ -70,6 +70,26 @@ class CliSpec extends SparkSuite {
     spark.table(s"$db.storage").count() shouldBe 2L
   }
 
+  test("RunIngest main starts outside spark-submit with a -D warehouse") {
+    // the documented `sbt runMain` / plain `java` start: no launcher sets
+    // a master, so the session factory's local default must
+    val base = tmp()
+    val srcDir = Files.createDirectories(base.resolve("in"))
+    Files.writeString(srcDir.resolve("events.jsonl"), Fixtures.all.mkString("\n"))
+    val lockDir = Files.createDirectories(base.resolve("lock"))
+    val warehouse = base.resolve("warehouse")
+    val (exit, out) = ForkedJvm.run("graft.cli.RunIngest",
+      Seq("-Xmx1g", s"-Dspark.sql.warehouse.dir=$warehouse"),
+      Seq("--database", "climain", "--source-dir", srcDir.toString,
+        "--lock-dir", lockDir.toString, "--checkpoint", base.resolve("ckpt").toString))
+    withClue(ForkedJvm.tail(out)) {
+      exit shouldBe 0
+      Files.readString(lockDir.resolve("status_run_stream.txt")) shouldBe "0"
+      spark.read.parquet(warehouse.resolve("climain.db/storage").toString)
+        .count() shouldBe 2L
+    }
+  }
+
   test("a held lock blocks both drivers (shared run_stream.lock)") {
     val lockDir = tmp()
     Files.writeString(lockDir.resolve(LockProtocol.lockName), "")

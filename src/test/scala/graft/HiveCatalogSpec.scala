@@ -11,33 +11,10 @@ class HiveCatalogSpec extends SparkSuite {
 
   test("billing lifecycle runs end-to-end on a Hive metastore catalog") {
     val base = java.nio.file.Files.createTempDirectory("graft-hive-spec").toString
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    // Spark 4 on Java 17 needs the exact module opens sbt forked THIS
-    // JVM with — pass the current JVM's --add-opens straight through
-    // instead of maintaining a second copy of build.sbt's list
-    import scala.jdk.CollectionConverters._
-    val raw = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    // accept both the combined --add-opens=pkg form and the split
-    // ("--add-opens", "pkg") pair form, whichever the launcher used
-    val opens = raw.zipWithIndex.flatMap {
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case (a, i) if a == "--add-opens" && i + 1 < raw.length =>
-        Seq(s"--add-opens=${raw(i + 1)}")
-      case _ => Nil
-    }
-    val cmd = Seq(javaBin, "-Xmx3g",
-      "-cp", System.getProperty("java.class.path")) ++
-      opens ++ Seq("graft.HiveSmoke", base)
-    val out = new StringBuilder
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    scala.io.Source.fromInputStream(proc.getInputStream)
-      .getLines().foreach(l => out.append(l).append('\n'))
-    val exit = proc.waitFor()
-    withClue(out.toString.linesIterator.toSeq.takeRight(30).mkString("\n")) {
+    val (exit, out) = ForkedJvm.run("graft.HiveSmoke", Seq("-Xmx3g"), Seq(base))
+    withClue(ForkedJvm.tail(out)) {
       exit shouldBe 0
-      out.toString should include("[hive-smoke] PASS")
+      out should include("[hive-smoke] PASS")
     }
   }
 }

@@ -21,17 +21,11 @@ object HiveSmoke {
   private def check(cond: Boolean, what: String): Unit =
     if (!cond) { System.err.println(s"[hive-smoke] FAIL: $what"); sys.exit(1) }
 
-  private def session(base: String): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-hive-smoke")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", s"$base/warehouse")
-    .config("javax.jdo.option.ConnectionURL",
+  private def session(base: String): SparkSession = Session("graft-hive-smoke",
+    "spark.sql.catalogImplementation" -> "hive",
+    "spark.sql.warehouse.dir" -> s"$base/warehouse",
+    "javax.jdo.option.ConnectionURL" ->
       s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-    .config("spark.ui.enabled", "false")
-    .enableHiveSupport()
-    .getOrCreate()
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(

@@ -6,13 +6,14 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
 
 import graft.analytics.Registry
 
-/** Catalog-wide plan lint over [[Explain.defaultNames]] (the
-  * scan/join/agg-heavy batch-planable audit set): no query may plan a
-  * CartesianProductExec — the one join shape that can never survive a
-  * 100× scale-up. Deliberate 1-row cross joins (q48's final counts,
-  * q73's pivot values) plan as BroadcastNestedLoopJoin over broadcast
-  * scalars and pass; an accidental unkeyed join would fail here by name
-  * before it ever reaches a bench. Plus specific pins the sweep
+/** Catalog-wide plan lint over every [[Registry.all]] query: none may
+  * plan a CartesianProductExec — the one join shape that can never
+  * survive a 100× scale-up. Deliberate 1-row cross joins (q48's final
+  * counts, q73's pivot values) plan as BroadcastNestedLoopJoin over
+  * broadcast scalars and pass; an accidental unkeyed join would fail here
+  * by name before it ever reaches a bench. Queries that run a stream
+  * inside their builder run it here too; the frame they return is a
+  * batch frame and plans like any other. Plus specific pins the sweep
   * motivated: q116's one-scan/one-data-Exchange funnel plan. */
 class PlanLintSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -27,11 +28,10 @@ class PlanLintSpec extends SparkSuite {
   }
 
   test("no audited query plans a CartesianProduct") {
-    val offenders = Explain.defaultNames.flatMap { name =>
-      val plan = Registry.queries(name)(spark, dir).queryExecution.executedPlan
-      if (allNodes(plan).exists(_.isInstanceOf[CartesianProductExec])) Some(name)
-      else None
-    }
+    val offenders = Registry.all.filter { q =>
+      val plan = q.run(spark, dir).queryExecution.executedPlan
+      allNodes(plan).exists(_.isInstanceOf[CartesianProductExec])
+    }.map(_.name)
     assert(offenders.isEmpty,
       s"CartesianProduct planned by: ${offenders.mkString(", ")}")
   }

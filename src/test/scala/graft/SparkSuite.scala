@@ -8,19 +8,11 @@ import org.scalatest.matchers.should.Matchers
   * `Test / parallelExecution := false`); each suite isolates itself with
   * its own database / table prefix. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // same extension wiring as the Verify/Bench/production sessions, so
-    // suites exercise the injected functions and check rules for real
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-test-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // the program's own session factory, so suites exercise the injected
+  // functions and check rules for real; pinned to 4 cores whatever the host
+  lazy val spark: SparkSession = Session("graft-test",
+    "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4",
+    Session.scratchWarehouse("graft-test-warehouse"))
 }
 
 abstract class SparkSuite extends AnyFunSuite with Matchers {
