@@ -318,9 +318,10 @@ object Dedup {
     * storage-backed, so a consumer's `unpersist()` never evicts the shared
     * index.
     *
-    * Keyed by (name, sf dir, extra key part, [[corpusFingerprint]]):
-    * fixtures live in per-test temp dirs, and the fingerprint makes sure a
-    * regenerated corpus under a reused dir never serves a stale index.
+    * Keyed by (name, sf dir, extra key part, [[Tables.fingerprint]] of
+    * `dir/documents.parquet`): fixtures live in per-test temp dirs, and the
+    * fingerprint makes sure a regenerated corpus under a reused dir never
+    * serves a stale index.
     *
     * The build is attributed to [[graft.BenchSplit]] setup, not to whichever
     * query calls first (a shared multi-second build landing inside an
@@ -342,38 +343,13 @@ object Dedup {
       * writes parquet to the path it is given) the first time per key. */
     def apply(s: org.apache.spark.sql.SparkSession, name: String, dir: String, part: String = "")(
         write: String => Unit): org.apache.spark.sql.DataFrame = {
-      val key = s"$name|$dir|$part|${corpusFingerprint(dir)}"
+      val key = s"$name|$dir|$part|${Tables.fingerprint(s, s"$dir/documents.parquet").getOrElse("absent")}"
       val entry = entries.computeIfAbsent(key, _ => new Entry(graft.BenchSplit.setup {
         val p = Tables.tmpDir(s"graft-$name$part").resolve("idx").toString
         write(p)
         p
       }))
-      s.read.parquet(entry.path)
-    }
-
-    /** Cheap corpus identity: total bytes and max mtime over the files of
-      * `dir/documents.parquet` (file or directory layout). Not a content
-      * hash — it only needs to change when the corpus files are rewritten,
-      * which any regeneration does. */
-    private[graft] def corpusFingerprint(dir: String): String = {
-      val root = java.nio.file.Paths.get(dir, "documents.parquet")
-      try {
-        val walk = java.nio.file.Files.walk(root)
-        try {
-          var bytes = 0L
-          var mtime = 0L
-          val it = walk.iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            if (java.nio.file.Files.isRegularFile(p)) {
-              bytes += java.nio.file.Files.size(p)
-              mtime = math.max(mtime,
-                java.nio.file.Files.getLastModifiedTime(p).toMillis)
-            }
-          }
-          s"$bytes:$mtime"
-        } finally walk.close()
-      } catch { case _: Throwable => "absent" }
+      Tables.parquet(s, entry.path)
     }
   }
 

@@ -156,7 +156,7 @@ object Streams {
 
   private def eventsStream(s: org.apache.spark.sql.SparkSession, dir: String) = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.parquet(s, s"$dir/events.parquet").schema
     // normalizeTs is schema+withColumn only, so it lifts to streams as-is
     Tables.normalizeTs(
       s.readStream

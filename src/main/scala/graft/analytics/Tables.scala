@@ -1,14 +1,70 @@
 package graft.analytics
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders + numeric helpers shared by the analytics queries. */
 object Tables {
 
   def rd(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Read an immutable parquet input (a catalog table or a persisted
+    * index) with its schema inferred once per file version and parquet
+    * settings instead of once per call: inference runs a Spark job to
+    * read a footer that has not changed.
+    *
+    * The key is the [[fingerprint]] of the files under `path` plus the
+    * session's value of every set conf whose name contains `parquet` and
+    * `spark.sql.caseSensitive` — a rule rather than a list, so any
+    * inference flag (`inferTimestampNTZ`, `nanosAsLong`, binary-as-string,
+    * …) gets its own entry. Rewriting the files changes the fingerprint;
+    * a path with nothing under it is read uncached, so it fails as usual.
+    *
+    * Paths a query writes and reads back in the same call (format round
+    * trips, stream sinks) use plain `read.parquet`: their inference is
+    * part of the operator, and their fresh paths would only grow the map. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+        val key = s"$files|${spark.conf.get("spark.sql.caseSensitive")}|${confs.mkString(",")}"
+        // inference runs a Spark job, so never inside computeIfAbsent:
+        // a racing caller may infer too, and the first entry stored wins
+        val schema = Option(schemas.get(key)).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          Option(schemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Identity of the files under `path` (a file or a directory layout):
+    * qualified path, file count, total bytes and max mtime, from one
+    * recursive listing on the path's own filesystem. Not a content hash —
+    * it only needs to change when the files are rewritten. None when
+    * nothing is there. */
+  private[graft] def fingerprint(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      var files = 0
+      var bytes = 0L
+      var mtime = 0L
+      while (it.hasNext) {
+        val f = it.next()
+        files += 1
+        bytes += f.getLen
+        mtime = math.max(mtime, f.getModificationTime)
+      }
+      Some(s"${fs.makeQualified(p)}|$files:$bytes:$mtime")
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Normalize the events `ts` column to TimestampType whatever physical
     * encoding the data generator used — the encoding has flipped between

@@ -25,8 +25,9 @@ import graft.schema.BillingSchema
  *
  * Scale notes (100 TB):
  *   - partition sizes come from ONE catalog listing per table plus one
- *     `getContentSummary` RPC per partition directory — not a per-file
- *     `getFileStatus` loop on the driver (O(partitions), not O(files));
+ *     `getContentSummary` RPC per partition directory it rewrites — not a
+ *     per-file `getFileStatus` loop on the driver (O(partitions
+ *     compacted), not O(files) or O(table history));
  *   - the read side is materialized with `localCheckpoint()` before the
  *     overwrite: the dynamic overwrite would otherwise delete the very
  *     files its own scan is reading (Spark rejects the plan with "Cannot
@@ -61,14 +62,19 @@ class Compactor(
       .map(_.split("=")(1))
   }
 
-  /** partition value → stored bytes: one catalog call for the locations,
-    * one recursive content-summary RPC per partition directory. */
-  private def partitionSizes(table: String): Map[String, Long] = {
+  /** partition value → stored bytes for the `partitions` that exist (None
+    * = all): one catalog call for the locations, one recursive
+    * content-summary RPC per partition directory it keeps — a one-day
+    * compaction sizes one partition, not the table's whole history. */
+  private[graft] def partitionSizes(
+      table: String, partitions: Option[Seq[String]] = None): Map[String, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val wanted = partitions.map(_.toSet)
     spark.sessionState.catalog
       .listPartitions(TableIdentifier(table, Some(database)))
-      .map { part =>
-        val value = part.spec.getOrElse(BillingSchema.partitionField, nullPartition)
+      .map(part => part.spec.getOrElse(BillingSchema.partitionField, nullPartition) -> part)
+      .filter { case (value, _) => wanted.forall(_.contains(value)) }
+      .map { case (value, part) =>
         val loc = new Path(part.location)
         val bytes =
           try loc.getFileSystem(conf).getContentSummary(loc).getLength
@@ -100,7 +106,7 @@ class Compactor(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
       tables.foreach { table =>
-        val sizes = partitionSizes(table)
+        val sizes = partitionSizes(table, partitions)
         val parts = partitions.getOrElse(sizes.keys.toSeq.sorted)
         def filesFor(p: String): Int = math.max(1,
           math.ceil(sizes.getOrElse(p, 0L).toDouble / targetFileBytes).toInt)

@@ -79,4 +79,17 @@ class BillingParseSpec extends SparkSuite {
     val bin = Seq(Fixtures.transferJson.getBytes("UTF-8")).toDF("value")
     BillingParse.parse(bin).head().getAs[String]("msgType") shouldBe "transfer"
   }
+
+  test("the optimized parse plan holds exactly 3 from_json: top level, status, protocolInfo") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    // a file-backed input: over a local Seq the optimizer would fold the
+    // whole parse into a LocalRelation and no expression would be left
+    val dir = java.nio.file.Files.createTempDirectory("graft-parse").resolve("in").toString
+    Seq(Fixtures.transferJson).toDF("value").write.text(dir)
+    val plan = BillingParse.parse(spark.read.text(dir)).queryExecution.optimizedPlan
+    val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    parses.map(_.schema.simpleString).sorted shouldBe Seq(
+      BillingSchema.protocolInfoSchema, BillingSchema.statusSchema, BillingSchema.topLevel)
+      .map(_.simpleString).sorted
+  }
 }

@@ -106,6 +106,23 @@ class CompactorSpec extends SparkSuite {
     spark.table(s"$db.transfer").count() shouldBe before
   }
 
+  test("partition sizing covers exactly the requested partitions that exist") {
+    val tables = new BillingTables(spark, db)
+    tables.createDatabase(); tables.dropAll(); tables.createAll()
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
+    days.foreach(d => ingestTimes(1, Seq(Fixtures.transferJson.replace("2024-03-01", d))))
+    ingestTimes(1, Seq("""{"msgType":"transfer","pnfsid":"NULLDATE"}"""))
+    val nullPart = "__HIVE_DEFAULT_PARTITION__"
+    val c = new Compactor(spark, db)
+
+    c.partitionSizes("transfer").keySet shouldBe (days :+ nullPart).toSet
+    // a missing day is skipped, not sized; the NULL sentinel still matches
+    val some = c.partitionSizes("transfer", Some(Seq("2024-03-02", nullPart, "2099-01-01")))
+    some.keySet shouldBe Set("2024-03-02", nullPart)
+    some.values.foreach(_ should be > 0L)
+    c.partitionSizes("transfer", Some(Seq("2024-03-03"))).keySet shouldBe Set("2024-03-03")
+  }
+
   test("a rewrite job crashing mid-write leaves the partition readable and intact") {
     val tables = new BillingTables(spark, db)
     tables.createDatabase(); tables.dropAll(); tables.createAll()

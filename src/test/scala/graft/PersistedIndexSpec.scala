@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.analytics.Dedup
+import graft.analytics.{Dedup, Tables}
 import graft.analytics.Dedup.PersistedIndex
 
 /** The once-per-(JVM, corpus) index cache behind the Dedup indexes: one
@@ -45,10 +45,11 @@ class PersistedIndexSpec extends SparkSuite {
     idx(); idx()
     builds.get shouldBe 1
     val all = Dedup.simhashIndex(spark, dir).count()
-    val before = PersistedIndex.corpusFingerprint(dir)
+    def fingerprint = Tables.fingerprint(spark, s"$dir/documents.parquet")
+    val before = fingerprint
     spark.read.parquet(s"$sf/documents.parquet").orderBy("doc_id").limit(50)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    PersistedIndex.corpusFingerprint(dir) should not be before
+    fingerprint should not be before
     idx()
     builds.get shouldBe 2
     // a real index follows the rewritten corpus, not the stale build
