@@ -1356,8 +1356,9 @@ object Advanced {
            GROUP BY l_returnflag, l_linestatus
         |> ORDER BY l_returnflag, l_linestatus""")
       // analysis is eager, so the resolved plan survives the view drop
-      // (the sinkTable discipline) — a leaked temp view would otherwise
-      // pollute SHOW TABLES for every later caller in the session
+      // (Streams.drainToMemory drops its sink view the same way) — a
+      // leaked temp view would otherwise pollute SHOW TABLES for every
+      // later caller in the session
       s.catalog.dropTempView("graft_q104_lineitem")
       out
     },

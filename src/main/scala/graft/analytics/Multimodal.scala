@@ -458,14 +458,10 @@ object Multimodal {
           col("length").as("n_bytes"),
           md5(col("content")).as("content_md5"),
           hex(substring(col("content"), 1, 4)).as("head_hex"))
-      val q = fp.writeStream
+      Streams.drain(fp.writeStream
         .format("parquet")
         .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", ckpt))
       s.read.parquet(outDir).orderBy(col("doc_id"))
     },
     Some("""SELECT doc_id, source,
@@ -1240,7 +1236,7 @@ object Multimodal {
           regexp_extract(col("path"), "media_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
           regexp_extract(col("path"), "([^/]+)/media_\\d+\\.bin$", 1).as("kind"),
           col("content").cast("string").as("payload"))
-      val q = stream.writeStream
+      Streams.drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val verdict = batch
             .join(broadcast(meta), Seq("doc_id"))
@@ -1261,11 +1257,7 @@ object Multimodal {
             .partitionBy("batch_id").parquet(dlqDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-m20-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-m20-ckpt")))
       s.read.parquet(accDir).withColumn("sink", lit("accepted"))
         .unionByName(s.read.parquet(dlqDir).withColumn("sink", lit("dlq")))
         .groupBy(col("sink"), col("kind"), col("reason"))

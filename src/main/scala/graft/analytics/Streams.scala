@@ -1,16 +1,16 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import Tables._
 
 /**
  * Approximate and streaming operators (SURVEY §2.8 open rows):
  * `approx_count_distinct` (HLL++ — the scale-safe form of q09's exact
  * multi-distinct) and a real Structured Streaming event-time window with
- * a watermark, run to completion with `Trigger.AvailableNow` against a
- * file source and collected through the memory sink.
+ * a watermark, run to completion (an AvailableNow `drain`)
+ * against a file source and collected through the memory sink.
  *
  * Scale notes (100 TB): q18 is one partial/final aggregate whose state is
  * a constant-size sketch per group — the plan that replaces q09's Expand
@@ -21,7 +21,8 @@ import Tables._
  */
 object Streams {
 
-  /** Run `body` with streaming-sized shuffle parallelism, then restore.
+  /** State-store count of every catalog streaming query, set as its
+    * shuffle parallelism through `withShuffle(s, StreamStores)`.
     *
     * A streaming query's state-store count is fixed at start to
     * `spark.sql.shuffle.partitions`, and every micro-batch pays per-store
@@ -34,11 +35,90 @@ object Streams {
     * why it's per-query, not session-wide). The set is scoped and
     * restored in `finally`, so concurrent batch queries in the same
     * session are unaffected after the call and re-runs are idempotent. */
-  private def withStreamShuffle[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private val StreamStores = 4
+
+  /** The state store transformWithState requires; each query that needs
+    * it scopes it with `withConfs`, so sibling queries keep the default
+    * HDFS-backed store. */
+  private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run a streaming write to completion: `Trigger.AvailableNow` processes
+    * everything the source holds at start (in as many micro-batches as
+    * its admission control asks for, plus the final no-data batch that
+    * advances the watermark and flushes evictions), then the query ends. */
+  private[analytics] def drain(writer: DataStreamWriter[_]): Unit =
+    drain(writer.trigger(Trigger.AvailableNow()).start())
+
+  /** Wait for a started run-to-completion query; a failure surfaces here
+    * as the query's exception, and the query is stopped either way. */
+  private[analytics] def drain(q: StreamingQuery): Unit =
+    try q.awaitTermination() finally q.stop()
+
+  private val memorySinks = new java.util.concurrent.atomic.AtomicLong
+
+  /** Drain `df` into a memory sink in output `mode` and return what the
+    * sink collected. The sink's temp view is dropped in `finally`, also
+    * when the drain fails: DataFrame analysis is eager, so the returned
+    * frame keeps the resolved MemoryPlan while the session catalog stays
+    * clean (leaked sink views otherwise pollute SHOW TABLES for every
+    * later caller). Each call gets its own sink name, so concurrent or
+    * repeated drains never share a view. `checkpoint` pins the state
+    * store's location for callers that read it back afterwards. */
+  private[analytics] def drainToMemory(
+      df: DataFrame, mode: String, checkpoint: Option[String] = None): DataFrame = {
+    val s = df.sparkSession
+    val name = s"graft_memory_sink_${memorySinks.incrementAndGet()}"
+    val writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    checkpoint.foreach(writer.option("checkpointLocation", _))
+    try { drain(writer); s.table(name) }
+    finally s.catalog.dropTempView(name)
   }
+
+  /** A stream that delivers `frames` in order, one micro-batch each
+    * (batch id k carries frame k's rows). Each frame is staged as ONE
+    * parquet file whose mtime orders it (FileStreamSource sorts by mtime;
+    * `maxFilesPerTrigger = 1` then makes each file one batch). The
+    * schema is the frames' own — FileStreamSource forces it nullable, as
+    * a read-back would — so building the stream runs no job. Staging
+    * counts as harness setup. */
+  private[analytics] def stagedStream(
+      s: SparkSession, name: String, frames: Seq[DataFrame]): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    import scala.jdk.CollectionConverters._
+    val streamDir = Tables.tmpDir(s"graft-$name-stream")
+    graft.BenchSplit.setup {
+      frames.zipWithIndex.foreach { case (frame, k) =>
+        val stage = Tables.tmp(s"graft-$name-b$k")
+        frame.coalesce(1).write.mode("overwrite").parquet(stage)
+        // Files.list holds an open directory fd until the stream is
+        // closed: close it, or each staged file leaks one
+        val listing = Files.list(Paths.get(stage))
+        val part =
+          try listing.iterator().asScala
+            .find(_.getFileName.toString.startsWith("part-"))
+            .getOrElse(sys.error(s"no part file in $stage"))
+          finally listing.close()
+        val dest = streamDir.resolve(s"b$k.parquet")
+        Files.move(part, dest)
+        // Files.setLastModifiedTime throws on failure (File.setLastModified
+        // returns false silently) — a stale mtime would quietly break the
+        // batch order, so fail fast with the path
+        Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + k * 60000L))
+      }
+    }
+    s.readStream.schema(frames.head.schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(streamDir.toString)
+  }
+
+  /** Event-time cut below which every window or session of a stream
+    * watermarked 1 hour behind `events` is final after a drain: the
+    * watermark rests at max(ts) − 1h, less a 1-minute safety margin. */
+  private def finalizedCutUs(s: SparkSession, dir: String): Long =
+    events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
+      3600000000L - 60000000L
 
   // ---------------------------------------------------------------- q18
   // Approx distinct (HLL++) verified against its exact twin. The raw
@@ -83,23 +163,13 @@ object Streams {
   // windows across a multi-batch drain).
   private val q19 = QueryDef(
     "q19_stream_window",
-    (s, dir) => withStreamShuffle(s) {
-      val cutUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
-        3600000000L - 60000000L
+    (s, dir) => withShuffle(s, StreamStores) {
+      val cutUs = finalizedCutUs(s, dir)
       val windowed = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val sinkName = "q19_stream_window_sink"
-      val q = windowed.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(windowed, "append")
         .filter(unix_micros(col("window.end")) <= cutUs)
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("hour"),
@@ -114,27 +184,6 @@ object Streams {
     WHERE epoch_us(date_trunc('hour', ts)) + 3600000000 <= cut_us
     GROUP BY 1, 2 ORDER BY hour, event_type"""))
 
-  /** Move the single part file of a staged coalesce(1) parquet write to
-    * `dest` and stamp its mtime (FileStreamSource batch ordering).
-    * Files.list holds an open directory fd until the stream is closed —
-    * the try/finally keeps a multi-batch setup from leaking one fd per
-    * staged file. */
-  private def movePartFile(stage: String, dest: java.nio.file.Path, mtime: Long): Unit = {
-    import scala.jdk.CollectionConverters._
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-    val part =
-      try listing.iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(sys.error(s"no part file in $stage"))
-      finally listing.close()
-    java.nio.file.Files.move(part, dest)
-    // Files.setLastModifiedTime throws on failure (File.setLastModified
-    // returns false silently) — a stale mtime would quietly break
-    // FileStreamSource batch ordering, so fail fast with the path.
-    java.nio.file.Files.setLastModifiedTime(
-      dest, java.nio.file.attribute.FileTime.fromMillis(mtime))
-  }
-
   /** FileStreamSource needs a directory; the sf tables are single files. */
   private def streamDirFor(dir: String, table: String): String = {
     val streamDir = Tables.tmpDir(s"graft-stream-$table")
@@ -142,16 +191,6 @@ object Streams {
       streamDir.resolve(s"$table.parquet"),
       java.nio.file.Paths.get(s"$dir/$table.parquet"))
     streamDir.toString
-  }
-
-  /** Resolve the memory sink's temp view into a DataFrame and DROP the
-    * view: DataFrame analysis is eager, so the returned frame keeps the
-    * resolved MemoryPlan while the session catalog stays clean (leaked
-    * sink views otherwise pollute SHOW TABLES for every later caller). */
-  private def sinkTable(s: org.apache.spark.sql.SparkSession, name: String) = {
-    val t = s.table(name)
-    s.catalog.dropTempView(name)
-    t
   }
 
   private def eventsStream(s: org.apache.spark.sql.SparkSession, dir: String) = {
@@ -186,23 +225,13 @@ object Streams {
   // because a streaming query cannot chain two aggregations.
   private val q20 = QueryDef(
     "q20_session_windows",
-    (s, dir) => withStreamShuffle(s) {
-      val cutUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
-        3600000000L - 60000000L
+    (s, dir) => withShuffle(s, StreamStores) {
+      val cutUs = finalizedCutUs(s, dir)
       val sessions = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
-      val sinkName = "q20_session_windows_sink"
-      val q = sessions.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(sessions, "append")
         .filter(unix_micros(col("session_window.end")) <= cutUs)
         .groupBy(col("user_id"))
         .agg(
@@ -238,7 +267,7 @@ object Streams {
   // object is constant-size per group — the shape that scales.
   private val q21 = QueryDef(
     "q21_stateful_type_stats",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.GroupStateTimeout
       val typed = eventsStream(s, dir)
@@ -262,16 +291,7 @@ object Streams {
           (key, n, cents / 100.0, mx)
         }
         .toDF("event_type", "n", "sum_value", "max_value")
-      val sinkName = "q21_stateful_type_stats_sink"
-      val q = stats.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(stats, "update")
         .groupBy(col("event_type")) // last update per group wins
         .agg(max(col("n")).as("n"), max(col("sum_value")).as("sum_value"),
           max(col("max_value")).as("max_value"))
@@ -289,20 +309,11 @@ object Streams {
   // (deterministic) deduped KEY SET aggregated per type.
   private val q22 = QueryDef(
     "q22_stream_dedup",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val deduped = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicates("user_id", "event_type")
-      val sinkName = "q22_stream_dedup_sink"
-      val q = deduped.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(deduped, "append")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_unique_users"))
         .orderBy(col("event_type"))
@@ -323,21 +334,12 @@ object Streams {
   // equals the batch DISTINCT regardless of micro-batch boundaries.
   private val q84 = QueryDef(
     "q84_dedup_within_watermark",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val deduped = eventsStream(s, dir)
         .withColumn("day", to_date(col("ts")).cast("string"))
         .withWatermark("ts", "25 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
-      val sinkName = "q84_dedup_within_watermark_sink"
-      val q = deduped.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(deduped, "append")
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n_unique_users"))
         .orderBy(col("day"), col("event_type"))
@@ -359,23 +361,13 @@ object Streams {
   // is |open windows × types|, watermark-bounded and shrinking.
   private val q24 = QueryDef(
     "q24_sliding_window",
-    (s, dir) => withStreamShuffle(s) {
-      val cutUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
-        3600000000L - 60000000L
+    (s, dir) => withShuffle(s, StreamStores) {
+      val cutUs = finalizedCutUs(s, dir)
       val windowed = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val sinkName = "q24_sliding_window_sink"
-      val q = windowed.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(windowed, "append")
         .filter(unix_micros(col("window.end")) <= cutUs)
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("win_start"),
@@ -430,17 +422,10 @@ object Streams {
 
   private val q40 = QueryDef(
     "q40_transform_with_state",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      // the operator requires the RocksDB state store; scope the provider
-      // to this query and restore so sibling HDFS-backed queries are
-      // untouched
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConfs(s, RocksDbState) {
         val typed = eventsStream(s, dir)
           .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
           .as[(Long, String, Long)]
@@ -448,26 +433,12 @@ object Streams {
           .groupByKey(_._1)
           .transformWithState(new ProfileProcessor, TimeMode.None(), OutputMode.Update())
           .toDF("user_id", "n_events", "n_purchases", "last_us")
-        val sinkName = "q40_transform_with_state_sink"
-        val q = profiles.writeStream
-          .format("memory")
-          .queryName(sinkName)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.stop()
-        sinkTable(s, sinkName)
+        drainToMemory(profiles, "update")
           .groupBy(col("user_id")) // last update per key wins
           .agg(max(col("n_events")).as("n_events"),
             max(col("n_purchases")).as("n_purchases"),
             max(col("last_us")).as("last_us"))
           .orderBy(col("user_id"))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
     },
     Some("""SELECT user_id, COUNT(*) AS n_events,
@@ -542,7 +513,7 @@ object Streams {
   // finite replay, so the batch twin is an exact oracle.
   private val q30 = QueryDef(
     "q30_stream_stream_join",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val clicks = eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
@@ -555,16 +526,7 @@ object Streams {
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-      val sinkName = "q30_stream_stream_join_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(joined, "append")
         .groupBy(col("c_user").as("user_id"))
         .agg(
           count(lit(1)).as("n_pairs"),
@@ -595,7 +557,7 @@ object Streams {
   // global watermark) backwards and un-finalize rows near the cut.
   private val q81 = QueryDef(
     "q81_stream_left_outer",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       // The final watermark is min over SIDES of (that side's max event
       // time − 1h) — each watermark node only sees its own filtered
       // stream, so a sparse purchase tail drags the global watermark
@@ -629,16 +591,7 @@ object Streams {
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
         "left_outer")
-      val sinkName = "q81_stream_left_outer_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(joined, "append")
         .filter(unix_micros(col("c_ts")) <= cutUs)
         .groupBy(col("c_user").as("user_id"))
         .agg(
@@ -679,7 +632,7 @@ object Streams {
   // retained result table IS the answer, it cannot grow with the data.
   private val q38 = QueryDef(
     "q38_stream_static_join",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val tiers = rd(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
       val joined = eventsStream(s, dir)
@@ -689,16 +642,7 @@ object Streams {
         .join(Tables.bcastIfSmall(tiers, dir, "customer"), "user_id")
         .groupBy(col("segment"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val sinkName = "q38_stream_static_join_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName).orderBy(col("segment"), col("event_type"))
+      drainToMemory(joined, "complete").orderBy(col("segment"), col("event_type"))
     },
     Some(s"""SELECT c_mktsegment AS segment, event_type,
       COUNT(*) AS n, ${dsumSql("value")} AS sum_value
@@ -716,7 +660,7 @@ object Streams {
   // the batch NOT-EXISTS twin is an exact oracle.
   private val q111 = QueryDef(
     "q111_stream_static_anti",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val allow = rd(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").as("user_id"))
@@ -724,16 +668,7 @@ object Streams {
         .join(broadcast(allow), Seq("user_id"), "left_anti")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val sinkName = "q111_stream_static_anti_sink"
-      val q = kept.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName).orderBy(col("event_type"))
+      drainToMemory(kept, "complete").orderBy(col("event_type"))
     },
     Some(s"""SELECT event_type, COUNT(*) AS n, ${dsumSql("value")} AS sum_value
     FROM events e
@@ -752,18 +687,11 @@ object Streams {
   // the final read), so merge order cannot drift the result.
   private val q54 = QueryDef(
     "q54_stream_upsert",
-    (s, dir) => withStreamShuffle(s) {
-      val srcDir = Tables.tmpDir("graft-q54-src").toString
-      graft.BenchSplit.setup {
-        // normalized at write time, so the streamed copy always carries a
-        // plain TimestampType ts whatever the source encoding was
-        Tables.events(s, dir)
-          .repartition(3).write.mode("overwrite").parquet(srcDir)
-      }
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+    (s, dir) => withShuffle(s, StreamStores) {
+      // normalized at staging time, so the streamed copy always carries
+      // a plain TimestampType ts whatever the source encoding was
+      val stream = stagedStream(s, "q54",
+        (0 until 3).map(k => Tables.events(s, dir).filter(col("event_id") % 3 === k)))
       val partials = (b: org.apache.spark.sql.DataFrame) => b
         .select(col("event_type"),
           expr("unix_micros(ts) DIV 86400000000").as("day"),
@@ -773,10 +701,8 @@ object Streams {
           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("sum_value"))
       val tablePath =
         Tables.tmpDir("graft-q54-table").toString + "/result"
-      val q = graft.streaming.StreamUpsert.run(
-        stream, partials, Seq("event_type", "day"), Seq("n", "sum_value"), tablePath)
-      q.awaitTermination()
-      q.stop()
+      drain(graft.streaming.StreamUpsert.run(
+        stream, partials, Seq("event_type", "day"), Seq("n", "sum_value"), tablePath))
       graft.streaming.StreamUpsert.readTable(s, tablePath)
         .select(col("event_type"), col("day"), col("n"),
           col("sum_value").cast("double").as("sum_value"))
@@ -805,16 +731,9 @@ object Streams {
   // summed.
   private val q112 = QueryDef(
     "q112_stream_keyed_merge",
-    (s, dir) => withStreamShuffle(s) {
-      val srcDir = Tables.tmpDir("graft-q112-src").toString
-      graft.BenchSplit.setup {
-        Tables.events(s, dir)
-          .repartition(3).write.mode("overwrite").parquet(srcDir)
-      }
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+    (s, dir) => withShuffle(s, StreamStores) {
+      val stream = stagedStream(s, "q112",
+        (0 until 3).map(k => Tables.events(s, dir).filter(col("event_id") % 3 === k)))
       val reduce = (b: org.apache.spark.sql.DataFrame) => b
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
@@ -835,10 +754,8 @@ object Streams {
       // name keeps warm re-runs in one session from colliding
       val tableBase =
         "graft_q112.state_" + Integer.toHexString(tablePath.hashCode)
-      val q = graft.streaming.KeyedMerge.run(
-        stream, reduce, merge, tableBase, tablePath, "user_id", 8)
-      q.awaitTermination()
-      q.stop()
+      drain(graft.streaming.KeyedMerge.run(
+        stream, reduce, merge, tableBase, tablePath, "user_id", 8))
       graft.streaming.KeyedMerge.readTable(s, tableBase, tablePath)
         .select(col("user_id"), col("n_events"),
           col("last.event_type").as("last_event_type"),
@@ -882,7 +799,7 @@ object Streams {
   // n_before <> n_after ⇔ touched.
   private val q113 = QueryDef(
     "q113_snapshot_cdc",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val ev = Tables.events(s, dir)
         .withColumn("batch_k",
           when(col("event_type") === "purchase", lit(2L))
@@ -967,7 +884,7 @@ object Streams {
   // pins the plan and the delete-then-reseed/replay semantics).
   private val q115 = QueryDef(
     "q115_merge_tombstones",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val fatal = col("event_type") === "error" && col("event_id") % 21 === 0
       val ev = Tables.events(s, dir)
       val reduce = (b: org.apache.spark.sql.DataFrame) => b
@@ -1035,10 +952,10 @@ object Streams {
   // stateful operator, so every row lands regardless of watermark.
   private val q62 = QueryDef(
     "q62_stream_file_sink",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val out = Tables.tmp("graft-q62-sink")
       val ckpt = Tables.tmp("graft-q62-ckpt")
-      val q = eventsStream(s, dir)
+      drain(eventsStream(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .writeStream
@@ -1046,11 +963,7 @@ object Streams {
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .partitionBy("event_type")
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .partitionBy("event_type"))
       s.read.parquet(out)
         .groupBy(col("event_type"))
         .agg(
@@ -1077,7 +990,7 @@ object Streams {
   // (5 groups) — key-domain-bounded state, not stream-length-bounded.
   private val q69 = QueryDef(
     "q69_dsv2_stream",
-    (s, _) => withStreamShuffle(s) {
+    (s, _) => withShuffle(s, StreamStores) {
       val stream = s.readStream
         .format(classOf[graft.sources.SynthSource].getName)
         .option("rows", 50000).option("parts", 8)
@@ -1086,16 +999,7 @@ object Streams {
       val agg = stream
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      val sinkName = "q69_dsv2_stream_sink"
-      val q = agg.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName).orderBy(col("event_type"))
+      drainToMemory(agg, "complete").orderBy(col("event_type"))
     },
     Some(s"""WITH g AS (SELECT range AS id FROM range(50000))
     SELECT ${graft.sources.SynthSource.typeSql("id")} AS event_type,
@@ -1114,7 +1018,7 @@ object Streams {
   // (constant per group at any scale).
   private val q75 = QueryDef(
     "q75_flatmap_groups_state",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
       val typed = eventsStream(s, dir)
@@ -1133,16 +1037,7 @@ object Streams {
           m.iterator.map { case (b, n) => (key, b, n) }
         }
         .toDF("event_type", "bucket", "n")
-      val sinkName = "q75_flatmap_groups_state_sink"
-      val q = hist.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(hist, "update")
         .groupBy(col("event_type"), col("bucket")) // counts are monotone
         .agg(max(col("n")).as("n"))
         .orderBy(col("event_type"), col("bucket"))
@@ -1165,9 +1060,8 @@ object Streams {
   // watermark-finalized prefix (end ≤ max(ts) − 1h − 1min margin).
   private val q76 = QueryDef(
     "q76_dynamic_session_gap",
-    (s, dir) => withStreamShuffle(s) {
-      val cutUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
-        3600000000L - 60000000L
+    (s, dir) => withShuffle(s, StreamStores) {
+      val cutUs = finalizedCutUs(s, dir)
       val gap = when(col("event_type") === "click", "5 minutes")
         .when(col("event_type") === "view", "10 minutes")
         .otherwise("30 minutes")
@@ -1175,16 +1069,7 @@ object Streams {
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), gap), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
-      val sinkName = "q76_dynamic_session_gap_sink"
-      val q = sessions.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(sessions, "append")
         .filter(unix_micros(col("session_window.end")) <= cutUs)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_sessions"),
@@ -1232,7 +1117,7 @@ object Streams {
   // spuriously "unmatched" in one engine).
   private val q95 = QueryDef(
     "q95_stream_full_outer",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val maxRow = events(s, dir)
         .agg(
           max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
@@ -1257,16 +1142,7 @@ object Streams {
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
         "full_outer")
-      val sinkName = "q95_stream_full_outer_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(joined, "append")
         .filter(
           (col("c_ts").isNull || unix_micros(col("c_ts")) <= cutUs) &&
             (col("p_ts").isNull || unix_micros(col("p_ts")) <= cutUs))
@@ -1318,9 +1194,8 @@ object Streams {
   // cannot drift the result; the oracle aggregates straight to days.
   private val q96 = QueryDef(
     "q96_chained_window_agg",
-    (s, dir) => withStreamShuffle(s) {
-      val cutUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
-        3600000000L - 60000000L
+    (s, dir) => withShuffle(s, StreamStores) {
+      val cutUs = finalizedCutUs(s, dir)
       val hourly = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -1330,16 +1205,7 @@ object Streams {
       val daily = hourly
         .groupBy(window(window_time(col("window")), "1 day"), col("event_type"))
         .agg(sum(col("n")).as("n"), sum(col("sv")).as("sv"))
-      val sinkName = "q96_chained_window_agg_sink"
-      val q = daily.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(daily, "append")
         .filter(unix_micros(col("window.end")) <= cutUs)
         .select(
           date_format(col("window.start"), "yyyy-MM-dd").as("day"),
@@ -1372,7 +1238,7 @@ object Streams {
   // detail, nondeterministic across shuffle-partition settings).
   private val q97 = QueryDef(
     "q97_state_reader",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val wmUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
         3600000000L
       val ckpt = Tables.tmp("graft-q97-ckpt")
@@ -1380,17 +1246,7 @@ object Streams {
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-      val sinkName = "q97_state_reader_sink"
-      val q = windowed.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      s.catalog.dropTempView(sinkName)
+      drainToMemory(windowed, "append", Some(ckpt))
       s.read.format("statestore").load(ckpt)
         .select(
           date_format(col("key.window.start"), "yyyy-MM-dd HH:00:00").as("hour"),
@@ -1534,14 +1390,10 @@ object Streams {
 
   private val q101 = QueryDef(
     "q101_mapstate_histogram",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConfs(s, RocksDbState) {
         val typed = eventsStream(s, dir)
           .select(col("event_type"), col("value"))
           .as[(String, Double)]
@@ -1550,24 +1402,10 @@ object Streams {
           .transformWithState(new MapHistogramProcessor,
             TimeMode.None(), OutputMode.Update())
           .toDF("event_type", "bucket", "n")
-        val sinkName = "q101_mapstate_histogram_sink"
-        val q = hist.writeStream
-          .format("memory")
-          .queryName(sinkName)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.stop()
-        sinkTable(s, sinkName)
+        drainToMemory(hist, "update")
           .groupBy(col("event_type"), col("bucket")) // counts are monotone
           .agg(max(col("n")).as("n"))
           .orderBy(col("event_type"), col("bucket"))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
     },
     Some("""SELECT event_type, CAST(FLOOR(value / 100) AS BIGINT) AS bucket,
@@ -1619,14 +1457,10 @@ object Streams {
 
   private val q102 = QueryDef(
     "q102_initial_state_bootstrap",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConfs(s, RocksDbState) {
         // the batch table being migrated into stream state: exact cents
         val seed = rd(s, dir, "customer")
           .select(col("c_custkey"),
@@ -1643,25 +1477,11 @@ object Streams {
           .transformWithState(new BootstrapProcessor,
             TimeMode.None(), OutputMode.Update(), seed)
           .toDF("user_id", "n_events", "total_cents")
-        val sinkName = "q102_initial_state_bootstrap_sink"
-        val q = totals.writeStream
-          .format("memory")
-          .queryName(sinkName)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.stop()
-        sinkTable(s, sinkName)
+        drainToMemory(totals, "update")
           .groupBy(col("user_id")) // last update wins; both cols monotone
           .agg(max(col("n_events")).as("n_events"),
             (max(col("total_cents")).cast("double") / 100.0).as("balance_plus_value"))
           .orderBy(col("user_id"))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
     },
     Some("""SELECT user_id, COUNT(*) AS n_events,
@@ -1686,7 +1506,7 @@ object Streams {
   // identically.
   private val q100 = QueryDef(
     "q100_stream_right_outer",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val maxRow = events(s, dir)
         .agg(
           max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
@@ -1711,16 +1531,7 @@ object Streams {
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
         "right_outer")
-      val sinkName = "q100_stream_right_outer_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(joined, "append")
         .filter(
           unix_micros(col("p_ts")) <= cutUs &&
             (col("c_ts").isNull || unix_micros(col("c_ts")) <= cutUs))
@@ -1775,7 +1586,7 @@ object Streams {
   // stay far from int64 edges at any scale.
   private val q99 = QueryDef(
     "q99_join_state_reader",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val maxRow = events(s, dir)
         .agg(
           max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
@@ -1800,17 +1611,7 @@ object Streams {
         col("c_user") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-      val sinkName = "q99_join_state_reader_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      s.catalog.dropTempView(sinkName)
+      drainToMemory(joined, "append", Some(ckpt))
       // per-side retained-state profile; boundary = the side's eviction law
       def sideAgg(side: String, tsCol: String, userCol: String, boundaryUs: Long) =
         s.read.format("statestore").option("joinSide", side).load(ckpt)
@@ -1854,17 +1655,11 @@ object Streams {
 
   private val q98 = QueryDef(
     "q98_timer_sessions",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val cutUs = events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
-        3600000000L - 60000000L
-      // transformWithState requires the RocksDB provider (q40's scoping)
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      val cutUs = finalizedCutUs(s, dir)
+      withConfs(s, RocksDbState) {
         val typed = eventsStream(s, dir)
           .withWatermark("ts", "1 hour")
           .select(col("user_id"), unix_micros(col("ts")).as("us"))
@@ -1874,16 +1669,7 @@ object Streams {
           .transformWithState(new SessionTimerProcessor(600000000L),
             TimeMode.EventTime(), OutputMode.Append())
           .toDF("user_id", "start_us", "end_us", "n_events")
-        val sinkName = "q98_timer_sessions_sink"
-        val q = sess.writeStream
-          .format("memory")
-          .queryName(sinkName)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.stop()
-        sinkTable(s, sinkName)
+        drainToMemory(sess, "append")
           .filter(col("end_us") <= cutUs)
           .groupBy(col("user_id"))
           .agg(
@@ -1891,11 +1677,6 @@ object Streams {
             sum(col("n_events")).as("n_events"),
             max(col("n_events")).as("max_session_events"))
           .orderBy(col("user_id"))
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
       }
     },
     // q20's gaps-and-islands twin: same gap, same finalized-prefix cut
@@ -1936,7 +1717,7 @@ object Streams {
   // q19; both sink output and oracle restrict to that prefix.
   private val q103 = QueryDef(
     "q103_union_two_watermarks",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val maxRow = events(s, dir)
         .agg(
           max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
@@ -1960,16 +1741,7 @@ object Streams {
       val unioned = clicks.union(purchases)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      val sinkName = "q103_union_two_watermarks_sink"
-      val q = unioned.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
-      sinkTable(s, sinkName)
+      drainToMemory(unioned, "append")
         .filter(unix_micros(col("window.end")) <= cutUs)
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("hour"),
@@ -2003,7 +1775,7 @@ object Streams {
   // oracle is the batch EXISTS over the same events.
   private val q108 = QueryDef(
     "q108_stream_semi_join",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val clicks = eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
@@ -2017,19 +1789,10 @@ object Streams {
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
         "left_semi")
-      val sinkName = "q108_stream_semi_join_sink"
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
       // integer checksum over the emitted clicks: exactly-once emission
       // is part of what the hash gate proves (a duplicate would shift n
       // AND the sum)
-      sinkTable(s, sinkName)
+      drainToMemory(joined, "append")
         .groupBy(col("c_user").as("user_id"))
         .agg(
           count(lit(1)).as("n_converting_clicks"),
@@ -2068,7 +1831,7 @@ object Streams {
 
   private val q118 = QueryDef(
     "q118_stream_funnel",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
       val typed = eventsStream(s, dir)
@@ -2103,20 +1866,11 @@ object Streams {
             t3.getOrElse(-1L), t4.getOrElse(-1L)))
         }
         .toDF("user_id", "n_seen", "s_ts", "v_ts", "c_ts", "p_ts")
-      val sinkName = "q118_stream_funnel_sink"
-      val q = traj.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
       // last emission per user is the complete trajectory (n_seen is
       // strictly monotone per user across batches)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("n_seen").desc)
-      sinkTable(s, sinkName)
+      drainToMemory(traj, "update")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1 && col("s_ts") >= 0L)
         .agg(
@@ -2156,12 +1910,10 @@ object Streams {
   // through the KeyedMerge two-phase-commit discipline (q112).
   private val q119 = QueryDef(
     "q119_stream_dedup_gate",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       graft.functions.PolyHash.register(s)
-      val streamDir = Tables.tmpDir("graft-q119-stream")
       graft.BenchSplit.setup {
-        // publish the corpus band index (pre-exists at scale) and lay the
-        // delta out as 3 mtime-ordered batch files (doc_id%6 = 1, 3, 5)
+        // publish the corpus band index (pre-exists at scale)
         s.sql(s"CREATE DATABASE IF NOT EXISTS graft_q119 LOCATION '${Tables.tmp("graft-q119-db")}'")
         s.sql("DROP TABLE IF EXISTS graft_q119.band_idx")
         // published corpus half off the persisted signature index
@@ -2171,21 +1923,13 @@ object Streams {
           .select(col("doc_id"), col("mhs"), col("band"))
           .write.option("path", Tables.tmp("graft-q119-idx"))
           .saveAsTable("graft_q119.band_idx")
-        val baseT = 1700000000000L
-        (1 to 3).foreach { b =>
-          val stage = Tables.tmp(s"graft-q119-b$b")
-          docs(s, dir).filter(col("doc_id") % 6 === (2 * b - 1))
-            .select(col("doc_id"), col("text"), col("source"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
       }
-      val schema = s.read.parquet(streamDir.toString).schema
+      // the delta as 3 batches (doc_id%6 = 1, 3, 5)
+      val stream = stagedStream(s, "q119", (1 to 3).map(b =>
+        docs(s, dir).filter(col("doc_id") % 6 === (2 * b - 1))
+          .select(col("doc_id"), col("text"), col("source"))))
       val resultsDir = Tables.tmp("graft-q119-verdicts")
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-      val q = stream.writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val b = batch.localCheckpoint() // pinned: feeds sigs, bands, verdicts
           // batch frames belong to the stream's CLONED session, whose
@@ -2222,11 +1966,7 @@ object Streams {
           accepted.write.mode("append").insertInto("graft_q119.band_idx")
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q119-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q119-ckpt")))
       s.read.parquet(resultsDir)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_delta"), sum(col("flag")).as("n_flagged"))
@@ -2286,9 +2026,8 @@ object Streams {
   // indistinguishable from rebuilding the graph from scratch.
   private val d24 = QueryDef(
     "d24_stream_kcore",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       graft.functions.PolyHash.register(s)
-      val streamDir = Tables.tmpDir("graft-d24-stream")
       val sigIdxDir = Tables.tmp("graft-d24-sigidx")
       val edgesDir = Tables.tmp("graft-d24-edges")
       val degDir = Tables.tmp("graft-d24-deg")
@@ -2312,21 +2051,12 @@ object Streams {
         ce.write.parquet(edgesDir)
         degDeltas(ce).write.parquet(degDir)
         corpus.unpersist()
-        // lay the delta out as 3 mtime-ordered batch files (q119 layout)
-        val baseT = 1700000000000L
-        (1 to 3).foreach { b =>
-          val stage = Tables.tmp(s"graft-d24-b$b")
-          docs(s, dir).filter(col("doc_id") % 6 === (2 * b - 1))
-            .select(col("doc_id"), col("text"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
       }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-      val q = stream.writeStream
+      // the delta as 3 batches (q119 layout)
+      val stream = stagedStream(s, "d24", (1 to 3).map(b =>
+        docs(s, dir).filter(col("doc_id") % 6 === (2 * b - 1))
+          .select(col("doc_id"), col("text"))))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           val bs = batch.sparkSession
           val sigs = Dedup.simhashOf(batch)
@@ -2349,11 +2079,7 @@ object Streams {
           sigs.write.mode("append").parquet(sigIdxDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-d24-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-d24-ckpt")))
       // peel from maintained state: round 1 = a degree-ledger read
       val e1 = s.read.parquet(edgesDir)
       val edges = e1.union(e1.select(col("id2").as("id1"), col("id1").as("id2"))).cache()
@@ -2405,10 +2131,9 @@ object Streams {
 
   private val d29 = QueryDef(
     "d29_stream_substring_gate",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       graft.functions.PolyHash.register(s)
       graft.functions.NgramHashes.register(s)
-      val streamDir = Tables.tmpDir("graft-d29-stream")
       val idxDir = Tables.tmp("graft-d29-gramidx")
       val resultsDir = Tables.tmp("graft-d29-verdicts")
       def gramsOf(df: org.apache.spark.sql.DataFrame) =
@@ -2417,25 +2142,16 @@ object Streams {
           .select(col("doc_id"),
             posexplode(expr(s"ngram_hashes(th, $GateGram)")).as(Seq("pos", "gh")))
       graft.BenchSplit.setup {
-        // publish the corpus gram index (pre-exists at scale) and lay the
-        // delta out as 3 mtime-ordered batch files (the q119/d24 layout)
+        // publish the corpus gram index (pre-exists at scale)
         gramsOf(docs(s, dir).filter(col("doc_id") % 2 === 0))
           .select(col("gh")).distinct()
           .write.parquet(idxDir)
-        val baseT = 1700000000000L
-        (1 to 3).foreach { b =>
-          val stage = Tables.tmp(s"graft-d29-b$b")
-          docs(s, dir).filter(col("doc_id") % 6 === (2 * b - 1))
-            .select(col("doc_id"), col("text"), col("source"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
       }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-      val q = stream.writeStream
+      // the delta as 3 batches (the q119/d24 layout)
+      val stream = stagedStream(s, "d29", (1 to 3).map(b =>
+        docs(s, dir).filter(col("doc_id") % 6 === (2 * b - 1))
+          .select(col("doc_id"), col("text"), col("source"))))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val bs = batch.sparkSession
           // hash every token ONCE per batch: grams and the token count
@@ -2480,11 +2196,7 @@ object Streams {
           novel.write.mode("append").parquet(idxDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-d29-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-d29-ckpt")))
       s.read.parquet(resultsDir)
         .groupBy(col("source"))
         .agg(
@@ -2557,8 +2269,7 @@ object Streams {
   // so DuckDB reproduces every micro-batch exactly.
   private val q135 = QueryDef(
     "q135_stream_drift_gate",
-    (s, dir) => withStreamShuffle(s) {
-      val streamDir = Tables.tmpDir("graft-q135-stream")
+    (s, dir) => withShuffle(s, StreamStores) {
       val resultsDir = Tables.tmp("graft-q135-drift")
       val edgesDir = Tables.tmp("graft-q135-edges")
       val refDir = Tables.tmp("graft-q135-ref")
@@ -2598,21 +2309,11 @@ object Streams {
           .select(col("g"), col("k"),
             expr("greatest(1L, ((c + 1) * 1000000) DIV (n + 10))").as("p_ppm"))
           .write.mode("overwrite").parquet(refDir)
-        // the stream: odd events as 3 mtime-ordered batch files
-        val baseT = 1700000000000L
-        (1 to 3).foreach { b =>
-          val stage = Tables.tmp(s"graft-q135-b$b")
-          ev.filter(col("event_id") % 6 === (2 * b - 1))
-            .select(col("g"), col("x"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
       }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-      val q = stream.writeStream
+      // the stream: odd events as 3 batches
+      val stream = stagedStream(s, "q135", (1 to 3).map(b =>
+        ev.filter(col("event_id") % 6 === (2 * b - 1)).select(col("g"), col("x"))))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           // no localCheckpoint: unlike q119 nothing here reads a table it
           // later appends to — the batch re-derives from its own files
@@ -2647,11 +2348,7 @@ object Streams {
             .write.mode("append").parquet(resultsDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q135-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q135-ckpt")))
       s.read.parquet(resultsDir)
         .select(col("g"), col("batch_id"), col("n_cur"), col("psi_scaled"))
         .orderBy(col("g"), col("batch_id"))
@@ -2921,27 +2618,15 @@ object Streams {
 
   private val q151 = QueryDef(
     "q151_stream_rate_limit",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import org.apache.spark.sql.expressions.Window
-      val streamDir = Tables.tmpDir("graft-q151-stream")
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q151-b$b")
-          events(s, dir).filter(col("event_id") % 3 === b)
-            .select(col("event_id"), unix_micros(col("ts")).as("us"),
-              col("user_id"), col("event_type"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
-      }
-      val schema = s.read.parquet(streamDir.toString).schema
+      val stream = stagedStream(s, "q151", (0 to 2).map(b =>
+        events(s, dir).filter(col("event_id") % 3 === b)
+          .select(col("event_id"), unix_micros(col("ts")).as("us"),
+            col("user_id"), col("event_type"))))
       val resultsDir = Tables.tmp("graft-q151-verdicts")
       val stateRoot = Tables.tmp("graft-q151-state")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val bs = batch.sparkSession
           val b = batch.localCheckpoint()
@@ -2973,11 +2658,7 @@ object Streams {
             .write.mode("overwrite").parquet(s"$stateRoot/v$bid")
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q151-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q151-ckpt")))
       s.read.parquet(resultsDir)
         .groupBy(col("batch_id"))
         .agg(
@@ -3047,11 +2728,10 @@ object Streams {
   // checksum, not just counts).
   private val q154 = QueryDef(
     "q154_stream_late_router",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       graft.functions.PolyHash.register(s)
-      val streamDir = Tables.tmpDir("graft-q154-stream")
-      var lateD = 0L // span/24, set during stream construction below
-      graft.BenchSplit.setup {
+      // lateD = span/24, the allowed lateness
+      val (lateD, stream) = graft.BenchSplit.setup {
         val base = events(s, dir)
           .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
         // event-time bounds: one bounded agg drives the span-scaled
@@ -3059,7 +2739,6 @@ object Streams {
         val rb = base.agg(min(col("us")), max(col("us"))).head
         val (umn, umx) = (rb.getLong(0), rb.getLong(1))
         val jitterMod = (umx - umn + 1) / 6
-        lateD = (umx - umn + 1) / 24
         // poly_hash of sequential id strings is nearly AFFINE in the id
         // (each digit step shifts the polynomial by a constant), so its
         // low bits alone still track event order — the Knuth
@@ -3070,25 +2749,14 @@ object Streams {
           expr(s"us + (((${Tables.strHashExpr("CAST(event_id AS STRING)")} * 2654435761) % 4096) * $jitterMod) DIV 4096"))
         val ra = withArr.agg(min(col("arr")), max(col("arr"))).head
         val (mn, mx) = (ra.getLong(0), ra.getLong(1))
-        val baseT = 1700000000000L
         val tiers = withArr.withColumn("b",
           expr(s"least(2, ((arr - $mn) * 3) DIV ${mx - mn + 1})"))
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q154-b$b")
-          tiers.filter(col("b") === b)
-            .select(col("event_id"), col("user_id"), col("us"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
+        ((umx - umn + 1) / 24, stagedStream(s, "q154", (0 to 2).map(b =>
+          tiers.filter(col("b") === b).select(col("event_id"), col("user_id"), col("us")))))
       }
-      val LateD = lateD
-      val schema = s.read.parquet(streamDir.toString).schema
       val resultsDir = Tables.tmp("graft-q154-verdicts")
       val stateRoot = Tables.tmp("graft-q154-state")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val bs = batch.sparkSession
           val b = batch.localCheckpoint()
@@ -3096,7 +2764,7 @@ object Streams {
           // allowed lateness; batch 0 has no watermark yet
           val wmUs: Option[Long] =
             if (bid == 0) None
-            else Some(bs.read.parquet(s"$stateRoot/v${bid - 1}").head.getLong(0) - LateD)
+            else Some(bs.read.parquet(s"$stateRoot/v${bid - 1}").head.getLong(0) - lateD)
           val verdicts = b
             .withColumn("late",
               wmUs.map(w => (col("us") < w).cast("long")).getOrElse(lit(0L)))
@@ -3111,16 +2779,12 @@ object Streams {
             .write.mode("append").parquet(resultsDir)
           // advance the watermark clock: running max of event time
           val batchMax = verdicts.agg(max(col("us"))).head.getLong(0)
-          val newMax = wmUs.map(w => math.max(w + LateD, batchMax)).getOrElse(batchMax)
+          val newMax = wmUs.map(w => math.max(w + lateD, batchMax)).getOrElse(batchMax)
           bs.range(1).select(lit(newMax).as("max_us"))
             .write.mode("overwrite").parquet(s"$stateRoot/v$bid")
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q154-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q154-ckpt")))
       s.read.parquet(resultsDir)
         .groupBy(col("batch_id"))
         .agg(
@@ -3178,32 +2842,22 @@ object Streams {
   // agree row-for-row (per-attr counts + (user, valid_from) checksum).
   private val q157 = QueryDef(
     "q157_stream_scd2",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import org.apache.spark.sql.expressions.Window
-      val streamDir = Tables.tmpDir("graft-q157-stream")
-      graft.BenchSplit.setup {
+      val stream = graft.BenchSplit.setup {
         val base = events(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type").as("attr"),
             unix_micros(col("ts")).as("us"))
         val rb = base.agg(min(col("us")), max(col("us"))).head
         val (mn, mx) = (rb.getLong(0), rb.getLong(1))
-        val baseT = 1700000000000L
         val tiers = base.withColumn("b",
           expr(s"least(2, ((us - $mn) * 3) DIV ${mx - mn + 1})"))
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q157-b$b")
+        stagedStream(s, "q157", (0 to 2).map(b =>
           tiers.filter(col("b") === b)
-            .select(col("event_id"), col("user_id"), col("attr"), col("us"))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
+            .select(col("event_id"), col("user_id"), col("attr"), col("us"))))
       }
-      val schema = s.read.parquet(streamDir.toString).schema
       val stateRoot = Tables.tmp("graft-q157-state")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val bs = batch.sparkSession
           val w = Window.partitionBy(col("user_id"))
@@ -3243,11 +2897,7 @@ object Streams {
             .write.mode("overwrite").parquet(s"$stateRoot/v$bid")
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q157-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q157-ckpt")))
       s.read.parquet(s"$stateRoot/v2")
         .groupBy(col("attr"))
         .agg(
@@ -3299,26 +2949,18 @@ object Streams {
   // the final report aggregate.
   private val q164 = QueryDef(
     "q164_stream_contract_gate",
-    (s, dir) => withStreamShuffle(s) {
-      val streamDir = Tables.tmpDir("graft-q164-stream")
+    (s, dir) => withShuffle(s, StreamStores) {
       val corrupt = Seq(
         "CASE WHEN event_id % 23 = 0 THEN -value ELSE value END AS value",
         """CASE WHEN event_id % 23 <> 0 AND event_id % 29 = 0
            THEN concat('zz_', event_type) ELSE event_type END AS event_type""",
         """CASE WHEN event_id % 23 <> 0 AND event_id % 29 <> 0 AND event_id % 31 = 0
            THEN us - 800000000000000 ELSE us END AS us""")
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q164-b$b")
-          events(s, dir).filter(col("event_id") % 3 === b)
-            .select(col("event_id"), unix_micros(col("ts")).as("us"),
-              col("user_id"), col("event_type"), col("value"))
-            .selectExpr(Seq("event_id", "user_id") ++ corrupt: _*)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
-      }
+      val stream = stagedStream(s, "q164", (0 to 2).map(b =>
+        events(s, dir).filter(col("event_id") % 3 === b)
+          .select(col("event_id"), unix_micros(col("ts")).as("us"),
+            col("user_id"), col("event_type"), col("value"))
+          .selectExpr(Seq("event_id", "user_id") ++ corrupt: _*)))
       val verdictExpr =
         """CASE WHEN value < 0 THEN 'r1_value_negative'
                 WHEN event_type NOT IN ('click', 'view', 'purchase', 'signup', 'error')
@@ -3326,13 +2968,9 @@ object Streams {
                 WHEN us < 1577836800000000 OR us >= 1893456000000000
                   THEN 'r3_ts_implausible'
                 ELSE 'ok' END"""
-      val schema = s.read.parquet(streamDir.toString).schema
       val admittedDir = Tables.tmp("graft-q164-admitted")
       val dlqDir = Tables.tmp("graft-q164-dlq")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val v = batch.withColumn("verdict", expr(verdictExpr))
             .withColumn("batch_id", lit(bid))
@@ -3343,11 +2981,7 @@ object Streams {
             .write.mode("append").parquet(dlqDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q164-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q164-ckpt")))
       s.read.parquet(admittedDir).unionByName(s.read.parquet(dlqDir))
         .groupBy(col("batch_id"), col("verdict"))
         .agg(count(lit(1)).as("n"),
@@ -3394,11 +3028,9 @@ object Streams {
   // batch unrolling.
   private val q169 = QueryDef(
     "q169_stream_temporal_enrich",
-    (s, dir) => withStreamShuffle(s) {
-      val streamDir = Tables.tmpDir("graft-q169-stream")
+    (s, dir) => withShuffle(s, StreamStores) {
       val dimPath = Tables.tmp("graft-q169-dim")
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
+      val stream = graft.BenchSplit.setup {
         val ev = events(s, dir)
           .select(col("event_id"), unix_micros(col("ts")).as("us"),
             col("user_id"), col("value"))
@@ -3410,20 +3042,11 @@ object Streams {
           .selectExpr("user_id",
             "stack(2, 0L, mid, user_id % 3, mid, 9223372036854775807L, user_id % 3 + 10) AS (valid_from, valid_to, tier)")
           .write.mode("overwrite").parquet(dimPath)
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q169-b$b")
-          ev.filter(col("event_id") % 3 === b)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
+        stagedStream(s, "q169", (0 to 2).map(b => ev.filter(col("event_id") % 3 === b)))
       }
       val dim = s.read.parquet(dimPath)
-      val schema = s.read.parquet(streamDir.toString).schema
       val resultsDir = Tables.tmp("graft-q169-enriched")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           batch.join(dim, Seq("user_id"))
             .filter(col("us") >= col("valid_from") && col("us") < col("valid_to"))
@@ -3433,11 +3056,7 @@ object Streams {
             .write.mode("append").parquet(resultsDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q169-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q169-ckpt")))
       s.read.parquet(resultsDir)
         .groupBy(col("batch_id"), col("tier"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"),
@@ -3489,8 +3108,7 @@ object Streams {
 
   private val q173 = QueryDef(
     "q173_stream_table_diff",
-    (s, dir) => withStreamShuffle(s) {
-      val streamDir = Tables.tmpDir("graft-q173-stream")
+    (s, dir) => withShuffle(s, StreamStores) {
       val ledgerDir = Tables.tmp("graft-q173-ledger")
       val rowsDir = Tables.tmp("graft-q173-rows")
       def kv(df: org.apache.spark.sql.DataFrame) =
@@ -3506,20 +3124,11 @@ object Streams {
           .write.partitionBy("batch_id").parquet(rowsDir)
         q173Digest(base).withColumn("batch_id", lit(-1L))
           .write.partitionBy("batch_id").parquet(ledgerDir)
-        // the delta: 3 mtime-ordered batch files (odd keys, q119 layout)
-        val baseT = 1700000000000L
-        (1 to 3).foreach { b =>
-          val stage = Tables.tmp(s"graft-q173-b$b")
-          kv(rd(s, dir, "orders")).filter(col("k") % 6 === (2 * b - 1))
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
       }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-      val q = stream.writeStream
+      // the delta: 3 batches (odd keys, q119 layout)
+      val stream = stagedStream(s, "q173", (1 to 3).map(b =>
+        kv(rd(s, dir, "orders")).filter(col("k") % 6 === (2 * b - 1))))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           // the ingest path: rows and the batch's OWN delta digest land
           // as a batchId-keyed DYNAMIC partition overwrite — neither
@@ -3536,11 +3145,7 @@ object Streams {
             .partitionBy("batch_id").parquet(ledgerDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q173-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q173-ckpt")))
       // ---- diff phase: ledger fold vs the replica's one-scan digest ----
       val ledger = s.read.parquet(ledgerDir)
       val cur = q173DigestFold(s, ledgerDir)
@@ -3651,28 +3256,15 @@ object Streams {
   // k the sketch IS exact; above k the (k−1)·M/h_k estimate engages).
   private val q182 = QueryDef(
     "q182_stream_kmv_gate",
-    (s, dir) => withStreamShuffle(s) {
-      val streamDir = Tables.tmpDir("graft-q182-stream")
+    (s, dir) => withShuffle(s, StreamStores) {
       val ledgerDir = Tables.tmp("graft-q182-ledger")
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
-        val ev = events(s, dir).select(col("event_id"), col("user_id"))
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q182-b$b")
-          // batch by USER cohort, not event slice — each arriving batch
-          // brings genuinely new subjects, so the prefix curve grows
-          // (an event_id split would put every user in every batch and
-          // flatline the gate)
-          ev.filter(col("user_id") % 3 === b)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
-      }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      val ev = events(s, dir).select(col("event_id"), col("user_id"))
+      // batch by USER cohort, not event slice — each arriving batch
+      // brings genuinely new subjects, so the prefix curve grows
+      // (an event_id split would put every user in every batch and
+      // flatline the gate)
+      val stream = stagedStream(s, "q182", (0 to 2).map(b => ev.filter(col("user_id") % 3 === b)))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           import org.apache.spark.sql.expressions.Window
           batch
@@ -3686,11 +3278,7 @@ object Streams {
             .partitionBy("batch_id").parquet(ledgerDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q182-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q182-ckpt")))
       import org.apache.spark.sql.expressions.Window
       val ledger = s.read.parquet(ledgerDir)
       val batches = s.range(0, 3).select(col("id").as("b"))
@@ -3769,38 +3357,22 @@ object Streams {
 
   private val q187 = QueryDef(
     "q187_lambda_cutover",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       val cut = "2024-01-16"
-      val streamDir = Tables.tmpDir("graft-q187-stream")
       val digestDir = Tables.tmp("graft-q187-digest")
       val ev = Tables.events(s, dir).select(col("event_id"),
         expr("CAST(ts AS DATE)").as("day"),
         expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q187-b$b")
-          ev.filter(col("day") >= lit(cut) && col("event_id") % 3 === b)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
-      }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-      val q = stream.writeStream
+      val stream = stagedStream(s, "q187", (0 to 2).map(b =>
+        ev.filter(col("day") >= lit(cut) && col("event_id") % 3 === b)))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           q187Digest(batch).withColumn("batch_id", lit(bid))
             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id").parquet(digestDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q187-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q187-ckpt")))
       // per-day digests are disjoint by event_id across micro-batches, so
       // folding the ledger is a plain per-day sum (ck re-modded)
       val streamSide = s.read.parquet(digestDir).groupBy(col("day"))
@@ -3883,9 +3455,8 @@ object Streams {
   // rescans data files.
   private val q199 = QueryDef(
     "q199_stream_expiry_gate",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import org.apache.spark.sql.expressions.Window
-      val streamDir = Tables.tmpDir("graft-q199-stream")
       val ledgerDir = Tables.tmp("graft-q199-ledger")
       val files = rd(s, dir, "orders")
         .select((col("o_orderkey") % 97).as("file_id")).distinct()
@@ -3900,31 +3471,16 @@ object Streams {
         .unionByName(act(5L, "A", col("file_id") % 10 === 5))
         .unionByName(act(6L, "R", col("file_id") % 11 === 2))
         .localCheckpoint()
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
-        (0 to 2).foreach { b =>
-          val stage = Tables.tmp(s"graft-q199-b$b")
-          ops.filter(col("ver") === 2L * b + 1 || col("ver") === 2L * b + 2)
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$b.parquet"), baseT + b * 60000L)
-        }
-      }
-      val schema = s.read.parquet(streamDir.toString).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      val stream = stagedStream(s, "q199", (0 to 2).map(b =>
+        ops.filter(col("ver") === 2L * b + 1 || col("ver") === 2L * b + 2)))
+      drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           batch.withColumn("batch_id", lit(bid))
             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id").parquet(ledgerDir)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q199-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q199-ckpt")))
       val batches = s.range(0, 3).select(col("id").as("b"))
       // per-prefix expiry digests from any (b, ver, act, file_id) frame
       def digests(pref: org.apache.spark.sql.DataFrame) = {
@@ -4060,7 +3616,7 @@ object Streams {
 
   private val q205 = QueryDef(
     "q205_stream_maintenance",
-    (s, dir) => withStreamShuffle(s) {
+    (s, dir) => withShuffle(s, StreamStores) {
       import org.apache.spark.sql.DataFrame
       import org.apache.spark.sql.expressions.Window
       // planning replay (q183's rule): arrival = event time + scrambled
@@ -4101,20 +3657,11 @@ object Streams {
       // empty sweep (no tier met the SLA) → largest tier, never an NPE
       val delayUs =
         if (qualifying.isEmpty) Q205Tiers.last._2 else qualifying.min
-      // fixture: one file per arrival batch, mtime-ordered (q199's
-      // movePartFile discipline pins file→batchId)
-      val streamDir = Tables.tmpDir("graft-q205-stream")
+      // fixture: one micro-batch per arrival batch (stagedStream pins
+      // frame k to batchId k)
+      val batches = (0 to 2).map(k => ev.filter(col("b") === k).drop("b"))
+      val stream = stagedStream(s, "q205", batches)
       val ledgerDir = Tables.tmp("graft-q205-ledger")
-      graft.BenchSplit.setup {
-        val baseT = 1700000000000L
-        (0 to 2).foreach { k =>
-          val stage = Tables.tmp(s"graft-q205-b$k")
-          ev.filter(col("b") === k).drop("b")
-            .coalesce(1).write.mode("overwrite").parquet(stage)
-          movePartFile(stage, streamDir.resolve(s"b$k.parquet"),
-            baseT + k * 60000L)
-        }
-      }
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_q205 LOCATION '${Tables.tmp("graft-q205-db")}'")
       val tablePath = Tables.tmpDir("graft-q205-table").toString + "/state"
       val tableBase =
@@ -4129,11 +3676,7 @@ object Streams {
             (coalesce(col("t.n_events"), lit(0L)) +
               coalesce(col("b.n_events"), lit(0L))).as("n_events"),
             greatest(col("t.last"), col("b.last")).as("last"))
-      val q = s.readStream
-        .schema(s.read.parquet(streamDir.toString).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir.toString)
-        .writeStream
+      drain(stream.writeStream
         .foreachBatch { (batch: DataFrame, bid: Long) =>
           val ss = batch.sparkSession
           // engine watermark from the LEDGER: prior batches' max event
@@ -4165,11 +3708,7 @@ object Streams {
             tableBase, tablePath, "user_id", 8)
           ()
         }
-        .option("checkpointLocation", Tables.tmp("graft-q205-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.stop()
+        .option("checkpointLocation", Tables.tmp("graft-q205-ckpt")))
       def stDig(df: DataFrame) = df.agg(count(lit(1)).as("n_keys"),
         coalesce(sum(col("n_events")), lit(0L)).as("n_events_total"),
         (coalesce(sum((col("user_id") * 1000003L + col("n_events") * 101L +
@@ -4181,7 +3720,7 @@ object Streams {
       // hazard: redeliver batch 1, raw and ungated; the marker guard
       // must no-op it
       graft.streaming.KeyedMerge.applyBatch(
-        s.read.parquet(streamDir.resolve("b1.parquet").toString),
+        batches(1),
         1L, reduce, merge, tableBase, tablePath, "user_id", 8)
       val dig2 = stDig(graft.streaming.KeyedMerge.readTable(s, tableBase, tablePath))
         .select(col("n_keys").as("k2"), col("n_events_total").as("e2"),

@@ -1,6 +1,6 @@
 package graft.cli
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.time.Duration
 import org.apache.spark.sql.SparkSession
 import graft.ddl.BillingTables
@@ -15,7 +15,9 @@ import graft.sources.{BillingSource, KafkaSource, TextFileSource}
  *
  * Args (`--key value`):
  *   --database <db>            target database        (default billing)
- *   --checkpoint <dir>         checkpoint location    (default temp dir)
+ *   --checkpoint <dir>         checkpoint location    (default
+ *                              <lock-dir>/checkpoint_run_stream, so each
+ *                              cron window resumes where the last ended)
  *   --lock-dir <dir>           lock + status files    (default /tmp)
  *   --trigger-s <n>            micro-batch seconds; omit → AvailableNow
  *                              drain (modern idiom for the cron window)
@@ -39,7 +41,7 @@ object RunIngest {
       tables.createAll()
       val ingest = new BillingIngest(spark, source.load(spark), db)
       val ckpt = opts.getOrElse("checkpoint",
-        Files.createTempDirectory("graft-ingest-ckpt").toString)
+        lockDir.resolve("checkpoint_run_stream").toString)
       opts.get("trigger-s") match {
         case Some(s) =>
           // reference parity: stream for at most two trigger intervals

@@ -320,9 +320,6 @@ class AdvancedOpsSpec extends SparkSuite {
     out.filter(col("sum_gap_us") > col("n_pairs") * 1800000000L)
       .count() shouldBe 0
     out.unpersist()
-    // the memory sink registers a session temp view; drop it so suites
-    // asserting exact catalog contents (BillingTablesSpec) stay isolated
-    spark.catalog.dropTempView("q30_stream_stream_join_sink")
   }
 
   test("q18/q58 sketch estimates bound the exact distinct counts") {

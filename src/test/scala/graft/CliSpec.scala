@@ -70,6 +70,26 @@ class CliSpec extends SparkSuite {
     spark.table(s"$db.storage").count() shouldBe 2L
   }
 
+  test("RunIngest without --checkpoint resumes: a second window over the same source adds nothing") {
+    val db = "cliresume"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    val srcDir = tmp()
+    Files.writeString(srcDir.resolve("events.jsonl"), Fixtures.all.mkString("\n"))
+    val lockDir = tmp()
+    val opts = Map("database" -> db, "source-dir" -> srcDir.toString,
+      "lock-dir" -> lockDir.toString)
+    def counts() = graft.schema.BillingSchema.tableSchemas.keys.toSeq.sorted.map { t =>
+      spark.catalog.refreshTable(s"$db.$t")
+      t -> spark.table(s"$db.$t").count()
+    }
+    RunIngest.run(spark, opts) shouldBe 0
+    val once = counts()
+    once.map(_._2).sum should be > 0L
+    RunIngest.run(spark, opts) shouldBe 0
+    counts() shouldBe once
+    Files.isDirectory(lockDir.resolve("checkpoint_run_stream")) shouldBe true
+  }
+
   test("RunIngest main starts outside spark-submit with a -D warehouse") {
     // the documented `sbt runMain` / plain `java` start: no launcher sets
     // a master, so the session factory's local default must

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.analytics.Tables
@@ -28,30 +26,7 @@ class SchemaCacheSpec extends SparkSuite {
     dir.toString
   }
 
-  /** Spark jobs started by `body`. Listener events arrive asynchronously
-    * but in order, so the count is complete once a marker job submitted
-    * after `body` has been seen. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger(0)
-    @volatile var done = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("graft.marker") == marker) done = true
-        else if (!done) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty("graft.marker", marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!done && System.nanoTime() < deadline) Thread.sleep(10)
-      done shouldBe true
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsIn[T](body: => T): (T, Int) = JobCount.jobsIn(spark)(body)
 
   test("a second Tables.rd of the same file runs no Spark job and returns an equal schema") {
     val dir = copyOf("nation")
