@@ -1997,13 +1997,7 @@ object Dedup {
       // nearest-centroid assignment (s04's inverted-list shape),
       // materialized once: the self-join reads it twice and the
       // per-cluster totals a third time
-      val assigned = q.join(broadcast(cent)) // bounded: one row per label
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(Window
-          .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val assigned = Similarity.ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("vec_id"), col("qv"), col("norm2"), col("c_label"))
         .cache()
       val l = assigned.select(col("c_label"),

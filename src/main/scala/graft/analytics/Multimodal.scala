@@ -458,7 +458,7 @@ object Multimodal {
           col("length").as("n_bytes"),
           md5(col("content")).as("content_md5"),
           hex(substring(col("content"), 1, 4)).as("head_hex"))
-      Streams.drain(fp.writeStream
+      graft.streaming.drain(fp.writeStream
         .format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt))
@@ -1236,7 +1236,7 @@ object Multimodal {
           regexp_extract(col("path"), "media_(\\d+)\\.bin$", 1).cast("long").as("doc_id"),
           regexp_extract(col("path"), "([^/]+)/media_\\d+\\.bin$", 1).as("kind"),
           col("content").cast("string").as("payload"))
-      Streams.drain(stream.writeStream
+      graft.streaming.drain(stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
           val verdict = batch
             .join(broadcast(meta), Seq("doc_id"))

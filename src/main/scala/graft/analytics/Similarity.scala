@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import Tables._
 
@@ -110,6 +111,35 @@ object Similarity {
       .withColumn("cnorm2", expr(dotExpr("cqv", "cqv")))
       .select(col("label").as("c_label"), col("cqv"), col("cnorm2"))
 
+  /** Nearest-centroid assignment, the one IVF index derivation: every row
+    * of `vecs` (`vec_id`, `qv`, `norm2`, …) against each broadcast
+    * centroid of `cent` (`c_label`, `cqv`, `cnorm2`; K rows), with its
+    * cosine `csim` and rank `crnk` (1 = nearest, ties broken by
+    * `c_label`). Every column of `vecs` is kept: `crnk === 1` gives the
+    * inverted lists ([[ivfLists]]), `crnk <= nprobe` the probes
+    * ([[ivfProbes]]). */
+  private[analytics] def ivfAssign(vecs: DataFrame, cent: DataFrame): DataFrame =
+    vecs.join(broadcast(cent)) // bounded: one row per centroid
+      .withColumn("csim",
+        expr(dotExpr("qv", "cqv")).cast("double") /
+          (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+      .withColumn("crnk", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
+
+  /** The inverted lists of an [[ivfAssign]]: each vector in its nearest
+    * centroid's list, `(vec_id, qv, norm2, list_label)`. */
+  private[analytics] def ivfLists(assigned: DataFrame): DataFrame =
+    assigned.filter(col("crnk") === 1)
+      .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+
+  /** The anchors' (`vec_id < 8`) probes of an [[ivfAssign]]: one row per
+    * anchor and each of its `nprobe` nearest centroids,
+    * `(q_id, q_qv, q_norm2, probe_label)`. */
+  private[analytics] def ivfProbes(assigned: DataFrame, nprobe: Int): DataFrame =
+    assigned.filter(col("vec_id") < 8 && col("crnk") <= nprobe)
+      .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
+        col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+
   // ---------------------------------------------------------------- s03
   // IVF-style assignment: per-label centroids (exact integer sums, floored
   // to a quantized centroid), broadcast, each vector assigned to its
@@ -119,13 +149,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      q.join(broadcast(cent))
-        .withColumn("sim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_label"))))
-        .filter(col("rnk") === 1)
+      ivfAssign(q, cent).filter(col("crnk") === 1)
         .groupBy(col("label"), col("c_label"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("label"), col("c_label"))
@@ -156,19 +180,10 @@ object Similarity {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
       // nearest-centroid assignment for every vector → inverted lists
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val assigned = ivfAssign(q, cent)
+      val lists = ivfLists(assigned)
       // queries probe their nearest 2 centroids
-      val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val probes = ivfProbes(assigned, 2)
       val winQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       lists.join(broadcast(probes),
@@ -321,13 +336,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val assigned = q.join(broadcast(cent))
-        .withColumn("sim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_label"))))
-        .filter(col("rnk") === 1)
+      val assigned = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("c_label").as("cluster"), col("qv"))
       assigned.select(col("cluster"), posexplode(col("qv")).as(Seq("pos", "v")))
         .groupBy(col("cluster"), (col("pos") + 1).cast("long").as("pos"))
@@ -558,16 +567,9 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
+      val assigned = ivfAssign(q, cent)
       // inverted lists, each member carrying its 4 PQ codes
-      val lists0 = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val lists0 = ivfLists(assigned)
       // distance array hoisted into its own projection per subspace
       // (s10's discipline): inlining it under array_position AND
       // array_min would evaluate the 16-centroid transform twice per
@@ -583,9 +585,7 @@ object Similarity {
           .drop(s"ld$m")
       }
       // queries probe 2 cells and precompute their ADC lookup tables
-      val probes0 = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val probes0 = ivfProbes(assigned, 2)
       val probes = (0 until PqM).foldLeft(probes0) { (df, m) =>
         df.withColumn(s"dq$m", expr(
           s"""transform(${pqBookSpark(m)}, c ->
@@ -681,13 +681,7 @@ object Similarity {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
       // nearest-centroid assignment (s03's probe shape, centroids broadcast)
-      val asg = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("rnk") === 1)
+      val asg = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("c_label"), col("vec_id"), col("qv"), col("norm2"))
         .cache()
       val a = asg.select(col("c_label"), col("vec_id").as("id1"),
@@ -751,13 +745,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
+      val assigned = ivfAssign(q, cent)
       // build the index: inverted lists as hive partitions, probe table as
       // plain parquet (harness setup — at scale both pre-exist and only
       // the probe join is the query). Probes are MATERIALIZED, not kept as
@@ -769,12 +757,9 @@ object Similarity {
       val out = tmp("graft-annidx")
       val probesOut = tmp("graft-annprobe")
       graft.BenchSplit.setup {
-        assigned.filter(col("crnk") === 1)
-          .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+        ivfLists(assigned)
           .write.mode("overwrite").partitionBy("list_label").parquet(out)
-        assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+        ivfProbes(assigned, 2)
           .write.mode("overwrite").parquet(probesOut)
       }
       // q_id < 8 re-applied on the re-read: DPP only fires off a build
@@ -816,15 +801,8 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val assigned = ivfAssign(q, cent)
+      val lists = ivfLists(assigned)
       val out = tmp("graft-annincr")
       val probesOut = tmp("graft-annincrprobe")
       graft.BenchSplit.setup {
@@ -834,9 +812,7 @@ object Similarity {
         // day 1: delta ingest — append-only into the same layout
         lists.filter(col("vec_id") % 5 === 0)
           .write.mode("append").partitionBy("list_label").parquet(out)
-        assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+        ivfProbes(assigned, 2)
           .write.mode("overwrite").parquet(probesOut)
       }
       // identical probe shape to s12 (materialized probes keep DPP alive)
@@ -872,13 +848,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
+      val assigned = ivfAssign(q, cent)
       val lists = assigned.filter(col("crnk") === 1)
         .select(col("vec_id"), col("label"), col("qv"), col("norm2"),
           col("c_label").as("list_label"))
@@ -1054,18 +1024,9 @@ object Similarity {
         .filter(col("t_rnk") <= 5)
         .select(col("q_id"), col("t_rnk"), col("c_id"))
       val cent = labelCentroids(all)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = all.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
-      val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val assigned = ivfAssign(all, cent)
+      val lists = ivfLists(assigned)
+      val probes = ivfProbes(assigned, 2)
       val ivf = lists.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
         .withColumn("sim",
@@ -1396,14 +1357,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val assigned = q.join(broadcast(cent)) // bounded: one row per label
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val assigned = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("vec_id"), col("qv"), col("norm2"), col("c_label"))
         .cache()
       assigned.count()
@@ -1691,15 +1645,8 @@ object Similarity {
         .filter(col("t_rnk") <= 5)
         .select(col("q_id"), col("c_id"))
       val cent = labelCentroids(all)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = all.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val assigned = ivfAssign(all, cent)
+      val lists = ivfLists(assigned)
       val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= 3)
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
           col("norm2").as("q_norm2"), col("c_label").as("probe_label"),
@@ -1807,19 +1754,11 @@ object Similarity {
         .select(col("q_id"), col("t_rnk"), col("c_id"))
       // filtered-IVF side: s04's probe shape, predicate on list entries
       val cent = labelCentroids(all)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = all.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
+      val assigned = ivfAssign(all, cent)
       val lists = assigned.filter(col("crnk") === 1)
         .select(col("vec_id"), col("label"), col("qv"), col("norm2"),
           col("c_label").as("list_label"))
-      val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val probes = ivfProbes(assigned, 2)
       val ivf = lists.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id") &&
             col("label") % 3 === col("q_id") % 3)
@@ -2133,20 +2072,11 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val assigned = ivfAssign(q, cent)
+      val lists = ivfLists(assigned)
       // the delete set is a predicate on the probed cells — no rebuild
       val live = lists.filter(col("vec_id") % 9 =!= 0)
-      val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val probes = ivfProbes(assigned, 2)
       val winQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       live.join(broadcast(probes),
@@ -2189,19 +2119,10 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val assigned = ivfAssign(q, cent)
+      val lists = ivfLists(assigned)
         .cache()
-      val probesDf = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val probesDf = ivfProbes(assigned, 2)
         .cache()
       val queries = assigned.filter(col("vec_id") < 8 && col("crnk") === 1)
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))
@@ -2351,13 +2272,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val sizes = q.join(broadcast(cent))
-        .withColumn("sim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val sizes = ivfAssign(q, cent).filter(col("crnk") === 1)
         .groupBy(col("c_label")).agg(count(lit(1)).as("sz"))
       sizes.agg(
           count(lit(1)).as("n_cells"),
@@ -2405,13 +2320,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
+      val assigned = ivfAssign(q, cent)
       val lists = assigned.filter(col("crnk") === 1)
         .select(col("vec_id"), col("label"), col("qv"), col("norm2"),
           col("c_label").as("list_label"))
@@ -2420,9 +2329,7 @@ object Similarity {
       val servable = lists
         .filter(col("vec_id") % 9 =!= 0)        // s28's delete set
         .filter(col("label") % 4 === 1)          // s24's attribute filter
-      val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= 2)
-        .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-          col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+      val probes = ivfProbes(assigned, 2)
         .cache()
       val winQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
@@ -2494,13 +2401,7 @@ object Similarity {
     (s, dir) => {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val winAll = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winAll))
+      val assigned = ivfAssign(q, cent)
         .cache()
       assigned.count()
       val servable = assigned.filter(col("crnk") === 1)
@@ -2521,9 +2422,7 @@ object Similarity {
         .cache()
       truth.count()
       val curves = (1L to 4L).map { np =>
-        val probes = assigned.filter(col("vec_id") < 8 && col("crnk") <= np)
-          .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
-            col("norm2").as("q_norm2"), col("c_label").as("probe_label"))
+        val probes = ivfProbes(assigned, np.toInt)
         val ivf = top5(servable.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id")))
         ivf.join(truth, Seq("q_id", "c_id")).agg(count(lit(1)).as("n_hits"))
@@ -2603,13 +2502,7 @@ object Similarity {
       import org.apache.spark.sql.expressions.Window
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val sims = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(Window
-          .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") <= 2)
+      val sims = ivfAssign(q, cent).filter(col("crnk") <= 2)
         .select(col("vec_id"), col("c_label"), col("csim"), col("crnk"))
         .cache()
       sims.count()
@@ -2993,14 +2886,7 @@ object Similarity {
       val all = withQuant(dir, s)
       val cent = labelCentroids(all)
       // inverted lists (s04's nearest-centroid rule)
-      val winV = W.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))
-      val assigned = all.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(winV))
-      val lists = assigned.filter(col("crnk") === 1)
-        .select(col("vec_id"), col("qv"), col("norm2"), col("c_label").as("list_label"))
+      val lists = ivfLists(ivfAssign(all, cent))
       // corrupted queries: flip the sign of dims where (vec_id + i) % 16 = 0
       val queries = all.filter(col("vec_id") < 32)
         .select(col("vec_id").as("q_id"), expr(
@@ -3350,18 +3236,11 @@ object Similarity {
   private val s40 = QueryDef(
     "s40_index_staleness",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val q = withQuant(dir, s).select(col("vec_id"), col("qv"), col("norm2")).cache()
       q.count()
       val c0 = labelCentroids(withQuant(dir, s))
-      def assign(cent: org.apache.spark.sql.DataFrame, tag: String) =
-        q.join(broadcast(cent))
-          .withColumn("sim",
-            expr(dotExpr("qv", "cqv")).cast("double") /
-              (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-          .withColumn("rnk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_label"))))
-          .filter(col("rnk") === 1)
+      def assign(cent: DataFrame, tag: String) =
+        ivfAssign(q, cent).filter(col("crnk") === 1)
           .select(col("vec_id"), col("qv"), col("c_label").as(tag))
       val a0 = assign(c0, "cell0").localCheckpoint()
       // one Lloyd step from the deployed assignment: the refreshed codebook
@@ -3560,13 +3439,7 @@ object Similarity {
       import org.apache.spark.sql.expressions.Window
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val assigned = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("vec_id"), col("qv"), col("norm2"), col("c_label"))
         .localCheckpoint()
       val n = assigned.count() // vec_ids are contiguous 0..N-1
@@ -3718,13 +3591,7 @@ object Similarity {
       import org.apache.spark.sql.expressions.Window
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val assigned = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("vec_id"), col("qv"), col("norm2"), col("c_label"))
         .localCheckpoint()
       val queries = assigned.filter(col("vec_id") < 8)
@@ -3866,18 +3733,11 @@ object Similarity {
   private val s44 = QueryDef(
     "s44_bisect_hot_cell",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       def dist2(a: String, b: String) = expr(
         s"aggregate(zip_with($a, $b, (x, y) -> x - y), 0L, (acc, d) -> acc + d * d)")
       val q = withQuant(dir, s)
       val cent = labelCentroids(q)
-      val assigned = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val assigned = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("vec_id"), col("qv"), col("c_label"))
         // lazy checkpoints (r22): these op-bounded frames feed broadcast
         // subqueries of the ONE final action; eager was 4 serialized jobs
@@ -4211,13 +4071,7 @@ object Similarity {
       val n = q.count()
       val cent = labelCentroids(q).localCheckpoint() // K rows
       val k = cent.count()
-      val assigned1 = q.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
-        .withColumn("crnk", row_number().over(Window.partitionBy(col("vec_id"))
-          .orderBy(col("csim").desc, col("c_label"))))
-        .filter(col("crnk") === 1)
+      val assigned1 = ivfAssign(q, cent).filter(col("crnk") === 1)
         .select(col("vec_id"), col("qv"), col("norm2"), col("bucket"),
           col("cv"), col("c_label"))
       val anchors = q.filter(col("vec_id") < 8)

@@ -2,7 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import graft.streaming.drain
 import Tables._
 
 /**
@@ -42,18 +42,6 @@ object Streams {
     * HDFS-backed store. */
   private val RocksDbState = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Run a streaming write to completion: `Trigger.AvailableNow` processes
-    * everything the source holds at start (in as many micro-batches as
-    * its admission control asks for, plus the final no-data batch that
-    * advances the watermark and flushes evictions), then the query ends. */
-  private[analytics] def drain(writer: DataStreamWriter[_]): Unit =
-    drain(writer.trigger(Trigger.AvailableNow()).start())
-
-  /** Wait for a started run-to-completion query; a failure surfaces here
-    * as the query's exception, and the query is stopped either way. */
-  private[analytics] def drain(q: StreamingQuery): Unit =
-    try q.awaitTermination() finally q.stop()
 
   private val memorySinks = new java.util.concurrent.atomic.AtomicLong
 
@@ -701,8 +689,8 @@ object Streams {
           sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))).as("sum_value"))
       val tablePath =
         Tables.tmpDir("graft-q54-table").toString + "/result"
-      drain(graft.streaming.StreamUpsert.run(
-        stream, partials, Seq("event_type", "day"), Seq("n", "sum_value"), tablePath))
+      graft.streaming.StreamUpsert.run(
+        stream, partials, Seq("event_type", "day"), Seq("n", "sum_value"), tablePath)
       graft.streaming.StreamUpsert.readTable(s, tablePath)
         .select(col("event_type"), col("day"), col("n"),
           col("sum_value").cast("double").as("sum_value"))
@@ -754,8 +742,8 @@ object Streams {
       // name keeps warm re-runs in one session from colliding
       val tableBase =
         "graft_q112.state_" + Integer.toHexString(tablePath.hashCode)
-      drain(graft.streaming.KeyedMerge.run(
-        stream, reduce, merge, tableBase, tablePath, "user_id", 8))
+      graft.streaming.KeyedMerge.run(
+        stream, reduce, merge, tableBase, tablePath, "user_id", 8)
       graft.streaming.KeyedMerge.readTable(s, tableBase, tablePath)
         .select(col("user_id"), col("n_events"),
           col("last.event_type").as("last_event_type"),

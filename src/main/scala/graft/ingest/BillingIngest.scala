@@ -99,8 +99,6 @@ class BillingIngest(
   /** Bounded run: drain everything available, then stop. Modern idiom for
     * the reference's cron-driven `awaitTermination(2*trigger); stop()`
     * window (`Dcache_kafka_to_hive.py:305,345-347`). */
-  def runBounded(checkpointDir: String): Unit = {
-    val q = writer(checkpointDir).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+  def runBounded(checkpointDir: String): Unit =
+    graft.streaming.drain(writer(checkpointDir))
 }

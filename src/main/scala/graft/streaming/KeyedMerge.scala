@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Streaming keyed MERGE against a BUCKETED state table — the
@@ -87,7 +86,9 @@ object KeyedMerge {
     readVersion(spark, qualifiedTable, v)
   }
 
-  /** @param stream         streaming DataFrame (micro-batched by source)
+  /** Runs `stream` to completion ([[drain]]), merging each micro-batch
+    * into the state table; returns once the query has stopped.
+    * @param stream         streaming DataFrame (micro-batched by source)
     * @param reduceBatch    reduces one micro-batch to ONE row per key
     * @param merge          MERGE rule: (state, batchReduced) → new state;
     *                       both sides carry `keyCol`, the result must too.
@@ -131,8 +132,7 @@ object KeyedMerge {
     *                       unit: create and destroy them together.
     *                       `None` (fresh Spark-managed temp checkpoint)
     *                       is sound ONLY for a single `run` against a
-    *                       fresh `tablePath` (bench/test usage).
-    * @return the started query (AvailableNow — drains and stops) */
+    *                       fresh `tablePath` (bench/test usage). */
   def run(
       stream: DataFrame,
       reduceBatch: DataFrame => DataFrame,
@@ -143,15 +143,14 @@ object KeyedMerge {
       buckets: Int = 8,
       onBatch: Long => Unit = _ => (),
       deleteKeys: Option[DataFrame => DataFrame] = None,
-      checkpointLocation: Option[String] = None): StreamingQuery = {
+      checkpointLocation: Option[String] = None): Unit = {
     val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, batchId, reduceBatch, merge, qualifiedTable,
           tablePath, keyCol, buckets, onBatch, deleteKeys)
       }
-      .trigger(Trigger.AvailableNow())
     checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
+    drain(writer)
   }
 
   /** One merge-and-commit step; public so the retry contract is directly

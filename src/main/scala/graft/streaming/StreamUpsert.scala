@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Streaming UPSERT-maintained aggregate table — the `foreachBatch` merge
@@ -71,27 +70,26 @@ object StreamUpsert {
     spark.read.parquet(s"$tablePath/v$v")
   }
 
-  /** @param stream      streaming DataFrame (micro-batched by the source)
+  /** Runs `stream` to completion ([[drain]]), merging each micro-batch
+    * into the table at `tablePath`; returns once the query has stopped.
+    * @param stream      streaming DataFrame (micro-batched by the source)
     * @param partials    reduces one batch to per-key partial measures
     * @param keyCols     grouping key columns of the partials
     * @param measureCols additive measure columns of the partials
     * @param tablePath   root dir of the versioned result table
-    * @param onBatch     test hook, called with each batch id
-    * @return the started query (AvailableNow trigger — drains and stops) */
+    * @param onBatch     test hook, called with each batch id */
   def run(
       stream: DataFrame,
       partials: DataFrame => DataFrame,
       keyCols: Seq[String],
       measureCols: Seq[String],
       tablePath: String,
-      onBatch: Long => Unit = _ => ()): StreamingQuery =
-    stream.writeStream
+      onBatch: Long => Unit = _ => ()): Unit =
+    drain(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, batchId, partials, keyCols, measureCols, tablePath,
           onBatch)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+      })
 
   /** One merge-and-commit step; public so the retry contract is directly
     * testable (calling it twice with the same batchId must be a no-op the

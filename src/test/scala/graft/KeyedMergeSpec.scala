@@ -256,14 +256,14 @@ class KeyedMergeSpec extends SparkSuite {
     Seq(("a", 1L, "a1")).toDF("k", "seq", "tag")
       .coalesce(1).write.mode("append").parquet(srcDir)
     KeyedMerge.run(stream, reduce, merge, table, path, "k", 4,
-      checkpointLocation = Some(ckpt)).awaitTermination()
+      checkpointLocation = Some(ckpt))
     KeyedMerge.committedBatch(spark, path) shouldBe 0L
     // second run, SAME checkpoint + tablePath: the new file must land as
     // batch id 1, not a replayed id 0
     Seq(("a", 2L, "a2"), ("b", 1L, "b1")).toDF("k", "seq", "tag")
       .coalesce(1).write.mode("append").parquet(srcDir)
     KeyedMerge.run(stream, reduce, merge, table, path, "k", 4,
-      checkpointLocation = Some(ckpt)).awaitTermination()
+      checkpointLocation = Some(ckpt))
     KeyedMerge.committedBatch(spark, path) shouldBe 1L
     val got = KeyedMerge.readTable(spark, table, path)
       .select(col("k"), col("n"), col("last.tag"))

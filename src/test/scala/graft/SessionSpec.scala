@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 import org.apache.spark.SparkConf
 
 /** The session factory: shared defaults fill only unset keys, so a
@@ -40,12 +39,8 @@ class SessionSpec extends SparkSuite {
 
   test("no SparkSession is built outside the factory") {
     val needle = "SparkSession" + ".builder("
-    val st = Files.walk(Paths.get("src"))
-    val sources: Seq[Path] =
-      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally st.close()
-    val builders = sources.filter(p => Files.readString(p).contains(needle))
-      .map(_.toString)
+    val builders = SourceScan.files("src")
+      .collect { case (p, lines) if lines.exists(_.contains(needle)) => p.toString }
     builders shouldBe Seq(Paths.get("src/main/scala/graft/Session.scala").toString)
   }
 }

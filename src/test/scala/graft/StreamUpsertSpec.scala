@@ -29,13 +29,11 @@ class StreamUpsertSpec extends SparkSuite {
       java.nio.file.Files.createTempDirectory("upsert-table").toString + "/t"
 
     var batches = 0L
-    val q = StreamUpsert.run(
+    StreamUpsert.run(
       stream,
       b => b.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("sum_v")),
       Seq("k"), Seq("n", "sum_v"), tablePath,
       onBatch = _ => batches += 1)
-    q.awaitTermination()
-    q.stop()
 
     batches shouldBe 3L
     val got = StreamUpsert.readTable(spark, tablePath)

@@ -1,14 +1,13 @@
 package graft.analytics
 
-import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.{JobCount, SparkSuite}
+import graft.{JobCount, SourceScan, SparkSuite}
 
 /** The run-to-completion helpers every catalog streaming query drains
-  * through (`Streams.drain`, `drainToMemory`, `stagedStream`): failures
+  * through (`graft.streaming.drain`, `drainToMemory`, `stagedStream`): failures
   * surface and leave nothing running or registered, staged frames arrive
   * one per micro-batch in order, and the mechanisms stay in one place. */
 class StreamDrainSpec extends SparkSuite {
@@ -22,7 +21,7 @@ class StreamDrainSpec extends SparkSuite {
   test("a foreachBatch that throws surfaces the exception and leaves no active query") {
     val stream = Streams.stagedStream(spark, "drain-spec-fail", Seq(spark.range(3).toDF("x")))
     val fail: (DataFrame, Long) => Unit = (_, _) => sys.error("boom in batch")
-    val e = intercept[Exception](Streams.drain(stream.writeStream.foreachBatch(fail)))
+    val e = intercept[Exception](graft.streaming.drain(stream.writeStream.foreachBatch(fail)))
     messages(e).exists(_.contains("boom in batch")) shouldBe true
     spark.streams.active shouldBe empty
   }
@@ -55,7 +54,7 @@ class StreamDrainSpec extends SparkSuite {
       val rows = b.select(col("id"), input_file_name()).collect()
       batches.add((id, rows.map(_.getLong(0)).toSeq.sorted, rows.map(_.getString(1)).distinct.toSeq))
     }
-    Streams.drain(stream.writeStream.foreachBatch(record))
+    graft.streaming.drain(stream.writeStream.foreachBatch(record))
     val got = batches.asScala.toSeq.sortBy(_._1)
     got.map(_._1) shouldBe Seq(0L, 1L, 2L)
     got.map(_._2) shouldBe frames.map(_.collect().map(_.getLong(0)).toSeq.sorted)
@@ -67,15 +66,11 @@ class StreamDrainSpec extends SparkSuite {
   test("the drain mechanisms live only in the helpers at the top of Streams.scala") {
     // the helpers precede the first query definition in Streams.scala;
     // anywhere else under analytics these mark a hand-rolled drain
-    val helperOnly = Seq("Trigger.AvailableNow", "format(\"memory\")")
+    val helperOnly = Seq("format(\"memory\")")
     val nowhere = Seq("movePartFile", "withStreamShuffle", "conf.getOption(provKey)")
-    val st = Files.walk(Paths.get("src/main/scala/graft/analytics"))
-    val sources: Seq[Path] =
-      try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally st.close()
-    sources.map(_.getFileName.toString) should contain("Streams.scala")
-    val offenders = sources.flatMap { p =>
-      val lines = Files.readAllLines(p).asScala.toSeq
+    val sources = SourceScan.files("src/main/scala/graft/analytics")
+    sources.map(_._1.getFileName.toString) should contain("Streams.scala")
+    val offenders = sources.flatMap { case (p, lines) =>
       val helpersEnd =
         if (p.getFileName.toString == "Streams.scala") lines.indexWhere(_.contains("QueryDef("))
         else 0
@@ -85,5 +80,15 @@ class StreamDrainSpec extends SparkSuite {
       }
     }
     offenders shouldBe empty
+  }
+
+  test("Trigger.AvailableNow is set in one place in the program, graft.streaming.drain") {
+    val drainFile = java.nio.file.Paths.get("src/main/scala/graft/streaming/package.scala")
+    val mentions = for {
+      (p, lines) <- SourceScan.files("src/main")
+      l <- lines if l.contains("Trigger.AvailableNow")
+    } yield (p, l.trim)
+    mentions.filter(_._1 != drainFile) shouldBe empty
+    mentions.count(_._2.contains("Trigger.AvailableNow()")) shouldBe 1
   }
 }
