@@ -24,7 +24,7 @@ object Bench {
       .groupBy(org.apache.spark.sql.functions.col("l_returnflag")).count().count()
     catch { case _: Throwable => () }
     try {
-      graft.functions.PolyHash.register(spark)
+      graft.functions.GraftExtensions.register(spark)
       // one aggregate + one window + one HOF fold: the three codegen paths
       // nearly every registered query exercises
       val w = org.apache.spark.sql.expressions.Window

@@ -629,7 +629,6 @@ object Advanced {
   private val q50 = QueryDef(
     "q50_consistent_sample",
     (s, dir) => {
-      graft.functions.PolyHash.register(s)
       val custS = rd(s, dir, "customer")
         .filter(expr(s"${strHashExpr("CAST(c_custkey AS STRING)")} % 100") < 20)
       val ordS = rd(s, dir, "orders")

@@ -349,7 +349,11 @@ object Dedup {
         write(p)
         p
       }))
-      Tables.parquet(s, entry.path)
+      // a failed build leaves no entry behind: a lazy val whose
+      // initializer threw would rerun THIS caller's closure (its session,
+      // its `write`) for the next caller of the key
+      val path = try entry.path catch { case e: Throwable => entries.remove(key, entry); throw e }
+      Tables.parquet(s, path)
     }
   }
 
@@ -473,9 +477,7 @@ object Dedup {
       val l = b.select(col("bucket"), col("vec_id").as("id1"), col("qv").as("qv1"), col("norm2").as("n1"))
       val r = b.select(col("bucket").as("bucket2"), col("vec_id").as("id2"), col("qv").as("qv2"), col("norm2").as("n2"))
       val drops = l.join(r, col("bucket") === col("bucket2") && col("id1") < col("id2"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .filter(col("sim") >= 0.3)
         .select(col("id2").as("drop_id"))
         .distinct()
@@ -2006,9 +2008,7 @@ object Dedup {
         col("vec_id").as("id2"), col("qv").as("qv2"), col("norm2").as("n2"))
       val dropped = l.join(r,
           col("c_label") === col("cl2") && col("id1") < col("id2"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .filter(col("sim") >= SemDedupSim)
         .select(col("c_label"), col("id2")).distinct()
       val out = assigned.groupBy(col("c_label")).agg(count(lit(1)).as("n_vecs"))
@@ -2066,7 +2066,6 @@ object Dedup {
   private val d31 = QueryDef(
     "d31_bloom_dedup_gate",
     (s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val S = 4L // shard count — config constant, not data-scaled
       val base = docsNarrow(s, dir).withColumn("fp",
         expr(strHashExpr("concat_ws(' ', slice(split(text, ' '), 1, 8))")))
@@ -2298,9 +2297,7 @@ object Dedup {
           col("norm2").as("e_norm2"))
       q.filter(col("vec_id") >= 64)
         .join(broadcast(ev))
-        .withColumn("sim",
-          expr(dotExpr("qv", "e_qv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("e_norm2").cast("double"))))
+        .withColumn("sim", cosine("qv", "norm2", "e_qv", "e_norm2"))
         .groupBy(col("vec_id"))
         .agg(max(struct(col("sim"), (-col("eval_id")).as("neg_eval"))).as("m"))
         .select(col("vec_id"), (-col("m.neg_eval")).as("eval_id"),
@@ -2482,9 +2479,7 @@ object Dedup {
       // pair whose id order disagrees with the lang order (≈ half)
       val out = l.join(r, col("bucket") === col("bucket2") &&
           col("id1") < col("id2") && col("lang1") =!= col("lang2"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .filter(col("sim") >= XlingTau)
         .groupBy(least(col("lang1"), col("lang2")).as("lang_lo"),
           greatest(col("lang1"), col("lang2")).as("lang_hi"))

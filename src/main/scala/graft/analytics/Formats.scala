@@ -206,7 +206,6 @@ object Formats {
   private val q80 = QueryDef(
     "q80_zorder_layout",
     (s, dir) => {
-      graft.functions.ZInterleave.register(s)
       val out = tmp("graft-zorder")
       graft.BenchSplit.setup {
         rd(s, dir, "lineitem")
@@ -465,7 +464,6 @@ object Formats {
   private val q175 = QueryDef(
     "q175_zorder_layout",
     (s, dir) => {
-      graft.functions.ZInterleave.register(s)
       def coords = rd(s, dir, "orders").select(
         expr("o_custkey & 1023").as("x"),
         expr("(unix_date(CAST(o_orderdate AS DATE))) & 1023").as("y"))

@@ -1132,7 +1132,6 @@ object Governance {
   private val q184 = QueryDef(
     "q184_dp_release",
     (s, dir) => {
-      graft.functions.PolyHash.register(s)
       rd(s, dir, "customer")
         .select(col("c_mktsegment").as("seg"),
           expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
@@ -1218,7 +1217,6 @@ object Governance {
   private val q191 = QueryDef(
     "q191_crypto_shred",
     (s, dir) => {
-      graft.functions.PolyHash.register(s)
       val enc = rd(s, dir, "customer").select(col("c_custkey").as("subject"),
           expr(s"CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) + $ShredOffset")
             .as("plain"))

@@ -334,9 +334,7 @@ object Multimodal {
       val meta = docs(s, dir).select(col("doc_id"), col("source"), col("lang"))
       all.select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(Tables.dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -625,7 +623,6 @@ object Multimodal {
   private val m13 = QueryDef(
     "m13_byte_hist_neardup",
     (s, dir) => {
-      graft.functions.DotI64.register(s)
       val base = docs(s, dir).filter(col("n_chars") > 0).select(
         col("doc_id"),
         expr("CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END").as("kind"),
@@ -800,7 +797,6 @@ object Multimodal {
   private val m15 = QueryDef(
     "m15_clip_gate",
     (s, dir) => {
-      graft.functions.DotI64.register(s)
       val base = docsNarrow(s, dir).filter(col("n_chars") > 0)
       val hist = base
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -1047,7 +1043,6 @@ object Multimodal {
   private val m19 = QueryDef(
     "m19_training_mix_manifest",
     (s, dir) => {
-      graft.functions.DotI64.register(s)
       val rec = docs(s, dir).select(
         col("doc_id"),
         expr("CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END").as("kind"),

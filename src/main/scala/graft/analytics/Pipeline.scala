@@ -34,7 +34,6 @@ object Pipeline {
   private val q51 = QueryDef(
     "q51_bloom_join",
     (s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val dim = rd(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey"))
@@ -1134,7 +1133,6 @@ object Pipeline {
   private val q152 = QueryDef(
     "q152_weighted_reservoir",
     (s, dir) => {
-      graft.functions.PolyHash.register(s)
       val base = rd(s, dir, "orders")
         .select(col("o_orderpriority").as("stratum"), col("o_orderkey").as("key"),
           expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("w"))

@@ -21,7 +21,13 @@ object Registry {
     // fail loudly at first touch instead
     val dups = defs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
-    defs
+    // the one seam every runner (SparkEntry, Verify, Bench, Explain)
+    // passes through: each query resolves the native functions whether
+    // or not its session was built with GraftExtensions
+    defs.map(q => q.copy(run = (s: SparkSession, dir: String) => {
+      graft.functions.GraftExtensions.register(s)
+      q.run(s, dir)
+    }))
   }
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =

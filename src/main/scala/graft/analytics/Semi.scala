@@ -251,7 +251,6 @@ object Semi {
   private val q107 = QueryDef(
     "q107_cms_frequency",
     (s, dir) => {
-      graft.functions.CmsEstimate.register(s)
       val ev = events(s, dir)
       val head = ev.agg(
         call_function("count_min_sketch",

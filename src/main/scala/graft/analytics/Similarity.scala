@@ -45,9 +45,7 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))
       all.select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -87,9 +85,7 @@ object Similarity {
       val l = b.select(col("bucket"), col("vec_id").as("id1"), col("qv").as("qv1"), col("norm2").as("n1"))
       val r = b.select(col("bucket").as("bucket2"), col("vec_id").as("id2"), col("qv").as("qv2"), col("norm2").as("n2"))
       l.join(r, col("bucket") === col("bucket2") && col("id1") < col("id2"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .filter(col("sim") >= 0.4)
         .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim"))
         .orderBy(col("id1"), col("id2"))
@@ -120,9 +116,7 @@ object Similarity {
     * ([[ivfProbes]]). */
   private[analytics] def ivfAssign(vecs: DataFrame, cent: DataFrame): DataFrame =
     vecs.join(broadcast(cent)) // bounded: one row per centroid
-      .withColumn("csim",
-        expr(dotExpr("qv", "cqv")).cast("double") /
-          (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+      .withColumn("csim", cosine("qv", "norm2", "cqv", "cnorm2"))
       .withColumn("crnk", row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_label"))))
 
@@ -188,9 +182,7 @@ object Similarity {
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       lists.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ).cast("long"))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("vec_id").as("c_id"), round(col("sim"), 6).as("sim"))
@@ -250,9 +242,7 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"), col("norm2").as("q_norm2"))
       all.select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -288,9 +278,7 @@ object Similarity {
         .select(col("vec_id").as("c_id"), col("label").as("c_label"),
           col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
@@ -382,9 +370,7 @@ object Similarity {
       val cand = coarse
         .select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(q8), col("c_id") =!= col("q_id"))
-        .withColumn("csim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("csim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("crnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("csim").desc, col("c_id"))))
@@ -397,9 +383,7 @@ object Similarity {
         .join(full.select(col("vec_id").as("fc_id"), col("qv").as("fc_qv"),
           col("norm2").as("fc_norm2")), col("c_id") === col("fc_id"))
         .join(broadcast(qf), col("q_id") === col("fq_id"))
-        .withColumn("sim",
-          expr(dotExpr("fq_qv", "fc_qv")).cast("double") /
-            (sqrt(col("fq_norm2").cast("double")) * sqrt(col("fc_norm2").cast("double"))))
+        .withColumn("sim", cosine("fq_qv", "fq_norm2", "fc_qv", "fc_norm2"))
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -446,9 +430,7 @@ object Similarity {
       val cand = full
         .select(col("vec_id").as("c_id"), col("pv").as("c_pv"), col("pnorm2").as("c_pnorm2"))
         .join(broadcast(qp), col("c_id") =!= col("q_id"))
-        .withColumn("psim",
-          expr(dotExpr("q_pv", "c_pv")).cast("double") /
-            (sqrt(col("q_pnorm2").cast("double")) * sqrt(col("c_pnorm2").cast("double"))))
+        .withColumn("psim", cosine("q_pv", "q_pnorm2", "c_pv", "c_pnorm2"))
         .withColumn("crnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("psim").desc, col("c_id"))))
@@ -460,9 +442,7 @@ object Similarity {
         .join(full.select(col("vec_id").as("fc_id"), col("qv").as("fc_qv"),
           col("norm2").as("fc_norm2")), col("c_id") === col("fc_id"))
         .join(broadcast(qf), col("q_id") === col("fq_id"))
-        .withColumn("sim",
-          expr(dotExpr("fq_qv", "fc_qv")).cast("double") /
-            (sqrt(col("fq_norm2").cast("double")) * sqrt(col("fc_norm2").cast("double"))))
+        .withColumn("sim", cosine("fq_qv", "fq_norm2", "fc_qv", "fc_norm2"))
         .withColumn("rnk",
           row_number().over(org.apache.spark.sql.expressions.Window
             .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
@@ -603,9 +583,7 @@ object Similarity {
           (0 until PqM).map(m => expr(s"element_at(dq$m, code$m)")).reduce(_ + _))
         .withColumn("arnk", row_number().over(winAdc))
         .filter(col("arnk") <= 20)
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winSim).cast("long"))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("vec_id").as("c_id"),
@@ -689,9 +667,7 @@ object Similarity {
       val b = asg.select(col("c_label").as("cl2"), col("vec_id").as("id2"),
         col("qv").as("qv2"), col("norm2").as("n2"))
       val dropped = a.join(b, col("c_label") === col("cl2") && col("id1") < col("id2"))
-        .withColumn("psim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("psim", cosine("qv1", "n1", "qv2", "n2"))
         .filter(col("psim") >= 0.3)
         .select(col("cl2").as("c_label"), col("id2").as("vec_id")).distinct()
       asg.groupBy(col("c_label")).agg(count(lit(1)).as("n_members"))
@@ -770,9 +746,7 @@ object Similarity {
       s.read.parquet(out)
         .join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ).cast("long"))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("vec_id").as("c_id"), round(col("sim"), 6).as("sim"))
@@ -822,9 +796,7 @@ object Similarity {
       s.read.parquet(out)
         .join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ).cast("long"))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("vec_id").as("c_id"), round(col("sim"), 6).as("sim"))
@@ -861,9 +833,7 @@ object Similarity {
       lists.join(broadcast(probes),
           col("list_label") === col("probe_label") &&
             col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ).cast("long"))
         .filter(col("rnk") <= 3)
         .select(col("q_id"), col("rnk"), col("vec_id").as("neg_id"),
@@ -921,9 +891,7 @@ object Similarity {
       val cands = all
         .select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(q), col("c_id") =!= col("q_id"))
-        .withColumn("rel",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("rel", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("crnk", row_number().over(winRel))
         .filter(col("crnk") <= MmrCand)
         .select(col("q_id"), col("c_id"), col("c_qv"), col("c_norm2"), col("rel"))
@@ -943,9 +911,7 @@ object Similarity {
         val sel = selected.select(col("q_id").as("s_qid"),
           col("c_qv").as("s_qv"), col("c_norm2").as("s_norm2"))
         val red = rem.join(sel, col("q_id") === col("s_qid"))
-          .withColumn("ssim",
-            expr(dotExpr("c_qv", "s_qv")).cast("double") /
-              (sqrt(col("c_norm2").cast("double")) * sqrt(col("s_norm2").cast("double"))))
+          .withColumn("ssim", cosine("c_qv", "c_norm2", "s_qv", "s_norm2"))
           .groupBy(col("q_id"), col("c_id")).agg(max(col("ssim")).as("maxsim"))
         val winMmr = org.apache.spark.sql.expressions.Window
           .partitionBy(col("q_id")).orderBy(col("mmr").desc, col("c_id"))
@@ -1017,9 +983,7 @@ object Similarity {
       val truth = all
         .select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(anchors), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("t_rnk", row_number().over(winQ).cast("long"))
         .filter(col("t_rnk") <= 5)
         .select(col("q_id"), col("t_rnk"), col("c_id"))
@@ -1029,9 +993,7 @@ object Similarity {
       val probes = ivfProbes(assigned, 2)
       val ivf = lists.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))))
         .filter(col("rnk") <= 5)
@@ -1123,9 +1085,7 @@ object Similarity {
         .withColumn("hrnk", row_number().over(
           W.partitionBy(col("q_id")).orderBy(col("hamming"), col("c_id"))))
         .filter(col("hrnk") <= 16)
-        .withColumn("sim",
-          expr(dotExpr("a_qv", "c_qv")).cast("double") /
-            (sqrt(col("a_n2").cast("double")) * sqrt(col("c_n2").cast("double"))))
+        .withColumn("sim", cosine("a_qv", "a_n2", "c_qv", "c_n2"))
         .withColumn("rnk", row_number().over(
           W.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))).cast("long"))
         .filter(col("rnk") <= 5)
@@ -1367,9 +1327,7 @@ object Similarity {
         col("vec_id").as("dst"), col("qv").as("qv2"), col("norm2").as("n2"))
       val edges = a.join(b,
           col("c_label") === col("cl2") && col("src") =!= col("dst"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .withColumn("rnk", row_number().over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))))
@@ -1583,9 +1541,7 @@ object Similarity {
       val q = withQuant(dir, s)
       val cent = labelCentroids(q) // bounded: one row per cluster label
       q.join(broadcast(cent), col("label") === col("c_label"))
-        .withColumn("sim",
-          expr(dotExpr("qv", "cqv")).cast("double") /
-            (sqrt(col("norm2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+        .withColumn("sim", cosine("qv", "norm2", "cqv", "cnorm2"))
         .withColumn("pruned", col("sim") < 0.0d)
         .groupBy(col("label").cast("long").as("label"))
         .agg(
@@ -1638,9 +1594,7 @@ object Similarity {
       val truth = all
         .select(col("vec_id").as("c_id"), col("qv").as("c_qv"), col("norm2").as("c_norm2"))
         .join(broadcast(anchors), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("t_rnk", row_number().over(winQ).cast("long"))
         .filter(col("t_rnk") <= 5)
         .select(col("q_id"), col("c_id"))
@@ -1656,9 +1610,7 @@ object Similarity {
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
         .crossJoin(broadcast(budgets)) // bounded: 3 budget rows
         .filter(col("probe_rnk") <= col("p"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("p"), col("q_id")).orderBy(col("sim").desc, col("vec_id"))))
         .filter(col("rnk") <= 5)
@@ -1746,9 +1698,7 @@ object Similarity {
       val winQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
       val truth = filtered
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .withColumn("t_rnk", row_number().over(winQ).cast("long"))
         .filter(col("t_rnk") <= 5)
         .select(col("q_id"), col("t_rnk"), col("c_id"))
@@ -1762,9 +1712,7 @@ object Similarity {
       val ivf = lists.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id") &&
             col("label") % 3 === col("q_id") % 3)
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))))
         .filter(col("rnk") <= 5)
@@ -2081,9 +2029,7 @@ object Similarity {
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       live.join(broadcast(probes),
           col("list_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ).cast("long"))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("vec_id").as("c_id"), round(col("sim"), 6).as("sim"))
@@ -2137,9 +2083,7 @@ object Similarity {
       // correctness SFs.
       val qsims = lists
         .join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .select(col("q_id"), col("vec_id"), col("list_label"), col("sim"))
         .localCheckpoint() // 8 × |vectors| rows, read 8× below
       val probePairs = probesDf.select(col("q_id").as("p_qid"), col("probe_label"))
@@ -2229,9 +2173,7 @@ object Similarity {
       all.select(col("vec_id").as("c_id"), col("qv").as("c_qv"),
           col("norm2").as("c_norm2"))
         .join(broadcast(anchors), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("c_norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "c_qv", "c_norm2"))
         .groupBy(col("q_id"))
         .agg(
           sum(when(col("sim") >= 0.8, 1L).otherwise(0L)).as("n_r80"),
@@ -2334,9 +2276,7 @@ object Similarity {
       val winQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       def top5(cand: org.apache.spark.sql.DataFrame) = cand
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("vec_id").as("c_id"))
@@ -2410,9 +2350,7 @@ object Similarity {
       val winQ = org.apache.spark.sql.expressions.Window
         .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       def top5(cand: org.apache.spark.sql.DataFrame) = cand
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_norm2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_norm2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("vec_id").as("c_id"))
@@ -2676,12 +2614,8 @@ object Similarity {
         .select(col("vec_id").as("c_id"), col("qv"), col("norm2"), col("q8"),
           col("n8"), col("h1"), col("h2"))
         .join(broadcast(anch), col("c_id") =!= col("q_id"))
-        .withColumn("sim_t",
-          expr(dotExpr("a_qv", "qv")).cast("double") /
-            (sqrt(col("a_n2").cast("double")) * sqrt(col("norm2").cast("double"))))
-        .withColumn("sim_8",
-          expr(dotExpr("a_q8", "q8")).cast("double") /
-            (sqrt(col("a_n8").cast("double")) * sqrt(col("n8").cast("double"))))
+        .withColumn("sim_t", cosine("a_qv", "a_n2", "qv", "norm2"))
+        .withColumn("sim_8", cosine("a_q8", "a_n8", "q8", "n8"))
         .withColumn("ham",
           (expr("bit_count(h1 ^ a_h1)") + expr("bit_count(h2 ^ a_h2)")).cast("long"))
         .localCheckpoint()
@@ -2782,8 +2716,7 @@ object Similarity {
         .join(broadcast(anchors), Seq("q_id"))
       val truth = qv.select(col("vec_id").as("c_id"), col("qv"), col("norm2"))
         .join(broadcast(anchors), col("c_id") =!= col("q_id"))
-        .withColumn("sim", expr(dotExpr("a_qv", "qv")).cast("double") /
-          (sqrt(col("a_n2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("a_qv", "a_n2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(
           W.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
         .filter(col("rnk") <= 5).select(col("q_id"), col("c_id"))
@@ -2794,8 +2727,7 @@ object Similarity {
             col("c_label") === col("probe_label") && col("vec_id") =!= col("q_id"))
           .localCheckpoint()
         val top5 = cand
-          .withColumn("sim", expr(dotExpr("a_qv", "qv")).cast("double") /
-            (sqrt(col("a_n2").cast("double")) * sqrt(col("norm2").cast("double"))))
+          .withColumn("sim", cosine("a_qv", "a_n2", "qv", "norm2"))
           .withColumn("rnk", row_number().over(
             W.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))))
           .filter(col("rnk") <= 5)
@@ -2893,18 +2825,14 @@ object Similarity {
           "transform(qv, (x, i) -> CASE WHEN (vec_id + i) % 16 = 0 THEN -x ELSE x END)").as("cq"))
         .withColumn("cn2", expr(dotExpr("cq", "cq")))
       val probes = queries.join(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("cq", "cqv")).cast("double") /
-            (sqrt(col("cn2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+        .withColumn("csim", cosine("cq", "cn2", "cqv", "cnorm2"))
         .withColumn("prnk", row_number().over(
           W.partitionBy(col("q_id")).orderBy(col("csim").desc, col("c_label"))))
         .filter(col("prnk") <= 2)
         .select(col("q_id"), col("cq"), col("cn2"), col("c_label").as("probe_label"))
       val winQ = W.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))
       def ranks(cand: org.apache.spark.sql.DataFrame) = cand
-        .withColumn("sim",
-          expr(dotExpr("cq", "qv")).cast("double") /
-            (sqrt(col("cn2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("cq", "cn2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(winQ).cast("long"))
         .filter(col("rnk") <= 10 && col("vec_id") === col("q_id"))
         .select(col("q_id"), col("rnk"))
@@ -3012,15 +2940,11 @@ object Similarity {
         .unionByName(flips)
       val cand = qb.join(broadcast(probes), // |queries|×9 rows — bounded
           col("bucket") === col("pkey") && col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_n2", "qv", "norm2"))
         .select(col("q_id"), col("tier"), col("vec_id"), col("sim"))
       val bt5 = qb.join(broadcast(anchors.select(col("q_id"), col("q_qv"), col("q_n2"))),
           col("vec_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_n2", "qv", "norm2"))
         .withColumn("rnk", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id"))))
         .filter(col("rnk") <= 5)
@@ -3450,9 +3374,7 @@ object Similarity {
           col("norm2").as("n1"), col("c_label").as("lab1")), Seq("src"))
         .join(side.select(col("vec_id").as("dst"), col("qv").as("qv2"),
           col("norm2").as("n2"), col("c_label").as("lab2")), Seq("dst"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .withColumn("rnk", row_number().over(
           Window.partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))))
         .filter(col("rnk") <= 3)
@@ -3483,9 +3405,7 @@ object Similarity {
         .select(col("vec_id").as("src"), col("qv").as("qv1"), col("norm2").as("n1"))
         .join(bcastIfSmall(assigned.select(col("vec_id").as("dst"), col("qv").as("qv2"),
           col("norm2").as("n2")), dir, "embeddings"), col("src") =!= col("dst"))
-        .withColumn("sim",
-          expr(dotExpr("qv1", "qv2")).cast("double") /
-            (sqrt(col("n1").cast("double")) * sqrt(col("n2").cast("double"))))
+        .withColumn("sim", cosine("qv1", "n1", "qv2", "n2"))
         .withColumn("rnk", row_number().over(
           Window.partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))))
         .filter(col("rnk") <= 3)
@@ -3598,9 +3518,7 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"), col("norm2").as("q_n2"))
       // probe order: all K centroids per query, ranked by centroid sim
       val qc = broadcast(queries).crossJoin(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("q_qv", "cqv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+        .withColumn("csim", cosine("q_qv", "q_n2", "cqv", "cnorm2"))
         .withColumn("j", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("c_label"))))
         .select(col("q_id"), col("c_label"), col("csim"), col("j"))
@@ -3609,9 +3527,7 @@ object Similarity {
         .select(col("vec_id").as("c_id"), col("qv").as("c_qv"),
           col("norm2").as("c_n2"), col("c_label"))
         .join(broadcast(queries), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("c_n2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_n2", "c_qv", "c_n2"))
         .localCheckpoint() // feeds cell-bests, the probe set, and the truth
       val cellBest = scored.groupBy(col("q_id"), col("c_label"))
         .agg(max(col("sim")).as("best"))
@@ -3873,21 +3789,15 @@ object Similarity {
       val base = coded.select(col("vec_id").as("c_id"), col("cv").as("c_cv"),
         col("cn2").as("c_cn2"))
       val adc = top5(base.join(broadcast(qFull), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_cv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("c_cn2").cast("double")))),
+        .withColumn("sim", cosine("q_qv", "q_n2", "c_cv", "c_cn2")),
         "adc")
       val sdc = top5(base.join(broadcast(qCode), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_cv", "c_cv")).cast("double") /
-            (sqrt(col("q_cn2").cast("double")) * sqrt(col("c_cn2").cast("double")))),
+        .withColumn("sim", cosine("q_cv", "q_cn2", "c_cv", "c_cn2")),
         "sdc")
       val truth = full.select(col("vec_id").as("c_id"), col("qv").as("c_qv"),
           col("norm2").as("c_n2"))
         .join(broadcast(qFull), col("c_id") =!= col("q_id"))
-        .withColumn("sim",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("c_n2").cast("double"))))
+        .withColumn("sim", cosine("q_qv", "q_n2", "c_qv", "c_n2"))
         .withColumn("rnk", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))))
         .filter(col("rnk") <= 5)
@@ -3968,9 +3878,7 @@ object Similarity {
           col("norm2").as("c_n2"), col("cv").as("c_cv"))
         .join(broadcast(anchors), col("c_id") =!= col("q_id"))
         .withColumn("coarse", expr(dotExpr("q_cv", "c_cv")))
-        .withColumn("exact",
-          expr(dotExpr("q_qv", "c_qv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("c_n2").cast("double"))))
+        .withColumn("exact", cosine("q_qv", "q_n2", "c_qv", "c_n2"))
       val coarseTop = scored.withColumn("crnk", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("coarse").desc, col("c_id"))))
         .filter(col("crnk") <= S46Depths.max)
@@ -4081,9 +3989,7 @@ object Similarity {
         .localCheckpoint() // 8 rows
       // the one fixture-scale truth pass: exact AND coarse per (q, c)
       val scored = assigned1.join(broadcast(anchors), col("vec_id") =!= col("q_id"))
-        .withColumn("exact",
-          expr(dotExpr("q_qv", "qv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("norm2").cast("double"))))
+        .withColumn("exact", cosine("q_qv", "q_n2", "qv", "norm2"))
         .withColumn("coarse", expr(dotExpr("q_cv", "cv")))
         .select(col("q_id"), col("vec_id").as("c_id"), col("c_label"),
           col("bucket").as("c_bucket"), col("exact"), col("coarse"))
@@ -4095,9 +4001,7 @@ object Similarity {
         .localCheckpoint() // 40 rows
       // centroid probe order per anchor (shared by ivf + adaptive)
       val qc = broadcast(anchors).crossJoin(broadcast(cent))
-        .withColumn("csim",
-          expr(dotExpr("q_qv", "cqv")).cast("double") /
-            (sqrt(col("q_n2").cast("double")) * sqrt(col("cnorm2").cast("double"))))
+        .withColumn("csim", cosine("q_qv", "q_n2", "cqv", "cnorm2"))
         .withColumn("j", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("csim").desc, col("c_label"))))
         .select(col("q_id"), col("c_label"), col("csim"), col("j"))

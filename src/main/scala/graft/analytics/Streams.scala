@@ -108,6 +108,48 @@ object Streams {
     events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0) -
       3600000000L - 60000000L
 
+  /** Clicks joined to purchases by the same user within 30 minutes, as a
+    * stream-stream `how` join: each side is `eventsStream` filtered to
+    * its event type and watermarked 1 hour behind, so join state is
+    * droppable. Columns: `c_user`, `c_ts`, `p_user`, `p_ts`. */
+  private def clickPurchaseJoin(s: SparkSession, dir: String, how: String): DataFrame = {
+    val clicks = eventsStream(s, dir)
+      .filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    val purchases = eventsStream(s, dir)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("c_user") === col("p_user") &&
+        col("p_ts") >= col("c_ts") &&
+        col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
+      how)
+  }
+
+  /** The watermark, in µs, at which a drained [[clickPurchaseJoin]] rests:
+    * the min over SIDES of (that side's max event time − 1h). Each
+    * watermark node only sees its own filtered stream, so a sparse
+    * purchase tail drags the global watermark back. `name` is the query
+    * the `require` blames when a side has no events. */
+  private def joinWatermarkUs(s: SparkSession, dir: String, name: String): Long = {
+    val maxRow = events(s, dir)
+      .agg(
+        max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
+        max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
+      .head
+    // getAs[java.lang.Long], not a Row(Long, Long) pattern match: max()
+    // over a side with NO events is NULL, and the pattern would throw
+    // an opaque MatchError instead of naming the problem
+    val (maxClick, maxPurch) =
+      (maxRow.getAs[java.lang.Long]("c"), maxRow.getAs[java.lang.Long]("p"))
+    require(maxClick != null && maxPurch != null,
+      s"$name needs both click and purchase events at $dir " +
+        s"(max click us = $maxClick, max purchase us = $maxPurch)")
+    math.min(maxClick.longValue, maxPurch.longValue) - 3600000000L
+  }
+
   // ---------------------------------------------------------------- q18
   // Approx distinct (HLL++) verified against its exact twin. The raw
   // estimates are sketch-implementation-specific (DuckDB's HLL differs),
@@ -502,18 +544,7 @@ object Streams {
   private val q30 = QueryDef(
     "q30_stream_stream_join",
     (s, dir) => withShuffle(s, StreamStores) {
-      val clicks = eventsStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
+      val joined = clickPurchaseJoin(s, dir, "inner")
       drainToMemory(joined, "append")
         .groupBy(col("c_user").as("user_id"))
         .agg(
@@ -546,39 +577,10 @@ object Streams {
   private val q81 = QueryDef(
     "q81_stream_left_outer",
     (s, dir) => withShuffle(s, StreamStores) {
-      // The final watermark is min over SIDES of (that side's max event
-      // time − 1h) — each watermark node only sees its own filtered
-      // stream, so a sparse purchase tail drags the global watermark
-      // back. Finalized clicks are those a further 30min (join bound)
-      // + 1min safety margin below it.
-      val maxRow = events(s, dir)
-        .agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
-        .head
-      // getAs[java.lang.Long], not a Row(Long, Long) pattern match: max()
-      // over a side with NO events is NULL, and the pattern would throw
-      // an opaque MatchError instead of naming the problem
-      val (maxClick, maxPurch) =
-        (maxRow.getAs[java.lang.Long]("c"), maxRow.getAs[java.lang.Long]("p"))
-      require(maxClick != null && maxPurch != null,
-        s"q81 needs both click and purchase events at $dir " +
-          s"(max click us = $maxClick, max purchase us = $maxPurch)")
-      val cutUs = math.min(maxClick.longValue, maxPurch.longValue) -
-        3600000000L - 1800000000L - 60000000L
-      val clicks = eventsStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
+      // Finalized clicks are those a further 30min (join bound) + 1min
+      // safety margin below the join's final watermark.
+      val cutUs = joinWatermarkUs(s, dir, "q81") - 1800000000L - 60000000L
+      val joined = clickPurchaseJoin(s, dir, "left_outer")
       drainToMemory(joined, "append")
         .filter(unix_micros(col("c_ts")) <= cutUs)
         .groupBy(col("c_user").as("user_id"))
@@ -1106,30 +1108,8 @@ object Streams {
   private val q95 = QueryDef(
     "q95_stream_full_outer",
     (s, dir) => withShuffle(s, StreamStores) {
-      val maxRow = events(s, dir)
-        .agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
-        .head
-      val (maxClick, maxPurch) =
-        (maxRow.getAs[java.lang.Long]("c"), maxRow.getAs[java.lang.Long]("p"))
-      require(maxClick != null && maxPurch != null,
-        s"q95 needs both click and purchase events at $dir")
-      val cutUs = math.min(maxClick.longValue, maxPurch.longValue) -
-        3600000000L - 1800000000L - 60000000L
-      val clicks = eventsStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-        "full_outer")
+      val cutUs = joinWatermarkUs(s, dir, "q95") - 1800000000L - 60000000L
+      val joined = clickPurchaseJoin(s, dir, "full_outer")
       drainToMemory(joined, "append")
         .filter(
           (col("c_ts").isNull || unix_micros(col("c_ts")) <= cutUs) &&
@@ -1495,30 +1475,8 @@ object Streams {
   private val q100 = QueryDef(
     "q100_stream_right_outer",
     (s, dir) => withShuffle(s, StreamStores) {
-      val maxRow = events(s, dir)
-        .agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
-        .head
-      val (maxClick, maxPurch) =
-        (maxRow.getAs[java.lang.Long]("c"), maxRow.getAs[java.lang.Long]("p"))
-      require(maxClick != null && maxPurch != null,
-        s"q100 needs both click and purchase events at $dir")
-      val cutUs = math.min(maxClick.longValue, maxPurch.longValue) -
-        3600000000L - 1800000000L - 60000000L
-      val clicks = eventsStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-        "right_outer")
+      val cutUs = joinWatermarkUs(s, dir, "q100") - 1800000000L - 60000000L
+      val joined = clickPurchaseJoin(s, dir, "right_outer")
       drainToMemory(joined, "append")
         .filter(
           unix_micros(col("p_ts")) <= cutUs &&
@@ -1575,30 +1533,10 @@ object Streams {
   private val q99 = QueryDef(
     "q99_join_state_reader",
     (s, dir) => withShuffle(s, StreamStores) {
-      val maxRow = events(s, dir)
-        .agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
-        .head
-      val (maxClick, maxPurch) =
-        (maxRow.getAs[java.lang.Long]("c"), maxRow.getAs[java.lang.Long]("p"))
-      require(maxClick != null && maxPurch != null,
-        s"q99 needs both click and purchase events at $dir")
-      val wmUs = math.min(maxClick.longValue, maxPurch.longValue) - 3600000000L
+      val wmUs = joinWatermarkUs(s, dir, "q99")
       val marginUs = 60000000L
       val ckpt = Tables.tmp("graft-q99-ckpt")
-      val clicks = eventsStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
+      val joined = clickPurchaseJoin(s, dir, "inner")
       drainToMemory(joined, "append", Some(ckpt))
       // per-side retained-state profile; boundary = the side's eviction law
       def sideAgg(side: String, tsCol: String, userCol: String, boundaryUs: Long) =
@@ -1764,19 +1702,7 @@ object Streams {
   private val q108 = QueryDef(
     "q108_stream_semi_join",
     (s, dir) => withShuffle(s, StreamStores) {
-      val clicks = eventsStream(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_semi")
+      val joined = clickPurchaseJoin(s, dir, "left_semi")
       // integer checksum over the emitted clicks: exactly-once emission
       // is part of what the hash gate proves (a duplicate would shift n
       // AND the sum)
@@ -1899,7 +1825,6 @@ object Streams {
   private val q119 = QueryDef(
     "q119_stream_dedup_gate",
     (s, dir) => withShuffle(s, StreamStores) {
-      graft.functions.PolyHash.register(s)
       graft.BenchSplit.setup {
         // publish the corpus band index (pre-exists at scale)
         s.sql(s"CREATE DATABASE IF NOT EXISTS graft_q119 LOCATION '${Tables.tmp("graft-q119-db")}'")
@@ -2015,7 +1940,6 @@ object Streams {
   private val d24 = QueryDef(
     "d24_stream_kcore",
     (s, dir) => withShuffle(s, StreamStores) {
-      graft.functions.PolyHash.register(s)
       val sigIdxDir = Tables.tmp("graft-d24-sigidx")
       val edgesDir = Tables.tmp("graft-d24-edges")
       val degDir = Tables.tmp("graft-d24-deg")
@@ -2120,8 +2044,6 @@ object Streams {
   private val d29 = QueryDef(
     "d29_stream_substring_gate",
     (s, dir) => withShuffle(s, StreamStores) {
-      graft.functions.PolyHash.register(s)
-      graft.functions.NgramHashes.register(s)
       val idxDir = Tables.tmp("graft-d29-gramidx")
       val resultsDir = Tables.tmp("graft-d29-verdicts")
       def gramsOf(df: org.apache.spark.sql.DataFrame) =
@@ -2717,7 +2639,6 @@ object Streams {
   private val q154 = QueryDef(
     "q154_stream_late_router",
     (s, dir) => withShuffle(s, StreamStores) {
-      graft.functions.PolyHash.register(s)
       // lateD = span/24, the allowed lateness
       val (lateD, stream) = graft.BenchSplit.setup {
         val base = events(s, dir)

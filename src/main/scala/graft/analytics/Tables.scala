@@ -233,20 +233,10 @@ object Tables {
     * bench tax there with no win — r11 verdict). Hash-heavy per-row
     * consumers (poly_hash / ngram_hashes over whole documents) must use
     * [[docs]], where the widen bounds the single-task-scan failure mode. */
-  def docsNarrow(spark: SparkSession, dir: String): DataFrame = {
-    // every poly_hash / ngram_hashes consumer reads documents; make the
-    // functions available even under a session built without GraftExtensions
-    graft.functions.PolyHash.register(spark)
-    graft.functions.NgramHashes.register(spark)
-    graft.functions.CdcCuts.register(spark)
-    graft.functions.MinHashSigs.register(spark)
+  def docsNarrow(spark: SparkSession, dir: String): DataFrame =
     rd(spark, dir, "documents")
-  }
-  def embs(spark: SparkSession, dir: String): DataFrame = {
-    // dot_i64 is the hot-path primitive of every embeddings consumer
-    graft.functions.DotI64.register(spark)
+  def embs(spark: SparkSession, dir: String): DataFrame =
     rd(spark, dir, "embeddings")
-  }
 
   // ------------------------------------------------------------------
   // Cross-engine-deterministic vector arithmetic (SURVEY §2.8 similarity
@@ -271,13 +261,22 @@ object Tables {
     * native codegen'd [[graft.functions.DotI64]] expression
     * (value-identical to the `aggregate(zip_with(...))` fold it replaced;
     * the fold is CodegenFallback and allocates a zipped array per row).
-    * Callers must load via [[embs]] or register [[graft.functions.GraftExtensions]]. */
+    * Registered in every catalog query's session by [[Registry]]. */
   def dotExpr(a: String, b: String): String =
     s"dot_i64($a, $b)"
 
   /** DuckDB twin of [[dotExpr]] (zip then left-fold, same order as Spark). */
   def dotSql(a: String, b: String): String =
     s"list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (acc, v) -> acc + v)"
+
+  /** Cosine of two quantized vector columns `a` and `b` whose squared
+    * norms (`dotExpr(v, v)`) are the columns `aNorm2` and `bNorm2`: the
+    * exact int64 dot product and norms, each cast to double, then divided,
+    * so the value is bitwise the DuckDB oracles' `CAST(dot AS DOUBLE) /
+    * (sqrt(CAST(n1 AS DOUBLE)) * sqrt(CAST(n2 AS DOUBLE)))`. */
+  def cosine(a: String, aNorm2: String, b: String, bNorm2: String): Column =
+    expr(dotExpr(a, b)).cast("double") /
+      (sqrt(col(aNorm2).cast("double")) * sqrt(col(bNorm2).cast("double")))
 
   // ------------------------------------------------------------------
   // Cross-engine-deterministic string hashing (dedup/fingerprint rows):
@@ -290,8 +289,8 @@ object Tables {
   /** SparkSQL expr: polynomial hash of a string expression — the native
     * codegen'd [[graft.functions.PolyHash]] expression (value-identical
     * to the pure-SQL `aggregate(transform(split(s, ''), ...))` fold it
-    * replaced, without a per-character array per row). Callers must load
-    * via [[docs]] or register [[graft.functions.GraftExtensions]]. */
+    * replaced, without a per-character array per row). Registered in
+    * every catalog query's session by [[Registry]]. */
   def strHashExpr(sExpr: String): String =
     s"poly_hash($sExpr)"
 

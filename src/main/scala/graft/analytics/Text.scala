@@ -2663,8 +2663,7 @@ object Text {
       // the two reads run as concurrent stages of one job
       val best = vec.filter(col("doc_id") % 97 =!= 0)
         .join(broadcast(ev))
-        .withColumn("sim", expr(Tables.dotExpr("v", "evv")).cast("double") /
-          (sqrt(col("n2").cast("double")) * sqrt(col("en2").cast("double"))))
+        .withColumn("sim", cosine("v", "n2", "evv", "en2"))
         .groupBy(col("doc_id"))
         .agg(max(col("sim")).as("best_sim"))
       val sem = best.filter(col("best_sim") >= 0.98)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -45,12 +44,4 @@ object BloomFunctions {
         s"might_contain expects 2 arguments (bloom, value), got ${other.length}")
     })
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      aggDescriptor._1, aggDescriptor._2, aggDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      mightContainDescriptor._1, mightContainDescriptor._2, mightContainDescriptor._3)
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -86,9 +85,4 @@ object CmsEstimate {
     new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
     (children: Seq[Expression]) => CmsEstimate(children(0), children(1)))
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      descriptor._1, descriptor._2, descriptor._3)
 }

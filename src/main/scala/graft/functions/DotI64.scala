@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -88,9 +87,4 @@ object DotI64 {
     new ExpressionInfo(classOf[DotI64].getName, "dot_i64"),
     (children: Seq[Expression]) => DotI64(children(0), children(1)))
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      descriptor._1, descriptor._2, descriptor._3)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -122,9 +121,4 @@ object GramStrHashes {
     new ExpressionInfo(classOf[GramStrHashes].getName, "gram_str_hashes"),
     (children: Seq[Expression]) => GramStrHashes(children(0), children(1)))
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      descriptor._1, descriptor._2, descriptor._3)
 }

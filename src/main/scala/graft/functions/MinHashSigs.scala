@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -121,9 +120,4 @@ object MinHashSigs {
     new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
     (children: Seq[Expression]) => MinHashSigs(children.head))
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      descriptor._1, descriptor._2, descriptor._3)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -88,9 +87,4 @@ object NgramHashes {
     new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes"),
     (children: Seq[Expression]) => NgramHashes(children(0), children(1)))
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]]. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      descriptor._1, descriptor._2, descriptor._3)
 }

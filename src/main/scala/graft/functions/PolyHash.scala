@@ -79,29 +79,43 @@ object PolyHash {
     new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
     (children: Seq[Expression]) => PolyHash(children.head))
 
-  /** Imperative registration for sessions built without
-    * [[GraftExtensions]] (e.g. a driver-owned session). Idempotent. */
+}
+
+/** The program's native functions, declared once: [[GraftExtensions]]
+  * injects them into every session built with the extension, and
+  * [[GraftExtensions.register]] adds them to a session built without it
+  * (a driver-owned or cloned session). `analytics.Registry` calls
+  * `register` before every catalog query, so each query resolves them
+  * whichever way its session was built. */
+object GraftExtensions {
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    PolyHash.descriptor,
+    DotI64.descriptor,
+    NgramHashes.descriptor,
+    GramStrHashes.descriptor,
+    CdcCuts.descriptor,
+    ZInterleave.descriptor,
+    MinHashSigs.descriptor,
+    BloomFunctions.aggDescriptor,
+    BloomFunctions.mightContainDescriptor,
+    CmsEstimate.descriptor)
+
+  /** Register every one of [[functions]] in `spark`'s own function
+    * registry. Idempotent: a descriptor is one value, so re-registering
+    * replaces a function with itself. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      descriptor._1, descriptor._2, descriptor._3)
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }
 
 /** Session extension wiring (`spark.sql.extensions=graft.functions.GraftExtensions`):
-  * injects the custom functions into every session built with it, plus the
-  * [[graft.plans.PartitionFilterGuard]] plan check (no-op until its conf
-  * names protected tables). */
+  * injects [[GraftExtensions.functions]] into every session built with it,
+  * plus the [[graft.plans.PartitionFilterGuard]] plan check (no-op until
+  * its conf names protected tables). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(PolyHash.descriptor)
-    ext.injectFunction(DotI64.descriptor)
-    ext.injectFunction(NgramHashes.descriptor)
-    ext.injectFunction(GramStrHashes.descriptor)
-    ext.injectFunction(CdcCuts.descriptor)
-    ext.injectFunction(ZInterleave.descriptor)
-    ext.injectFunction(MinHashSigs.descriptor)
-    ext.injectFunction(BloomFunctions.aggDescriptor)
-    ext.injectFunction(BloomFunctions.mightContainDescriptor)
-    ext.injectFunction(CmsEstimate.descriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(s => new graft.plans.PartitionFilterGuard(s))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions
 
 /** Pins the r22 persisted band-candidate pair index to an INDEPENDENT
   * derivation of the capped candidate pipeline it replaced at its five
@@ -45,8 +46,7 @@ class BandCandIndexSpec extends SparkSuite {
 
   for (rows <- Seq(2, 4)) {
     test(s"persisted band-candidate index (rows=$rows) equals the independent pipeline") {
-      graft.functions.PolyHash.register(spark)
-      graft.functions.MinHashSigs.register(spark)
+      GraftExtensions.register(spark)
       val idx = Dedup.bandCandIndex(spark, dir, rows)
       val exp = expected(rows)
       idx.columns.toSeq shouldBe Seq("id1", "id2")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{CdcCuts, PolyHash}
+import graft.functions.{CdcCuts, GraftExtensions, PolyHash}
 
 /** The native content-defined-chunking boundary scan: value parity with
   * the filter + poly_hash(substring) HOF it replaced (the m11 cut rule),
@@ -16,8 +16,7 @@ class CdcCutsSpec extends SparkSuite {
       s"poly_hash(substring(text, i - ${w - 1}, $w)) % $div = 0)"
 
   test("matches the HOF form on real documents for several (w, div)") {
-    CdcCuts.register(spark)
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     val docs = graft.analytics.Tables
       .docsNarrow(spark, "/root/testdata/sf0.001").select(col("text"))
     Seq((8, 16), (4, 8), (2, 3)).foreach { case (w, div) =>
@@ -30,7 +29,7 @@ class CdcCutsSpec extends SparkSuite {
   }
 
   test("shorter-than-w input yields an empty array; NULL input yields NULL") {
-    CdcCuts.register(spark)
+    GraftExtensions.register(spark)
     Seq("short").toDF("text")
       .select(expr("cdc_cuts(text, 8, 16)")).as[Array[Int]]
       .head() shouldBe Array.empty[Int]

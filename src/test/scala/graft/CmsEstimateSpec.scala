@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
-import graft.functions.CmsEstimate
+import graft.functions.GraftExtensions
 
 /** The native cms_estimate probe: hash parity with how the builtin
   * count_min_sketch aggregate inserts (strings as UTF-8 bytes, integrals
@@ -18,7 +18,7 @@ class CmsEstimateSpec extends SparkSuite {
       .head.getAs[Array[Byte]]("sk")
 
   test("string probes return the exact count on a tiny domain (codegen path)") {
-    CmsEstimate.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq("a", "a", "a", "b", "b", "c").toDF("k")
     val sk = sketchOf(df, "k")
     val est = df.distinct()
@@ -30,7 +30,7 @@ class CmsEstimateSpec extends SparkSuite {
   }
 
   test("integral probes hash as longs, matching the aggregate") {
-    CmsEstimate.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq(7, 7, 8).toDF("k")
     val sk = sketchOf(df, "k")
     val est = df.distinct()
@@ -40,7 +40,7 @@ class CmsEstimateSpec extends SparkSuite {
   }
 
   test("a non-foldable sketch argument is rejected at analysis") {
-    CmsEstimate.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq((sketchOf(Seq("a").toDF("k"), "k"), "a")).toDF("sk", "k")
     val e = intercept[AnalysisException] {
       // sk is a data column here, not a literal: per-row deserialization

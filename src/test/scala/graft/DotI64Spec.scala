@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.DotI64
+import graft.functions.{DotI64, GraftExtensions}
 
 /** The native dot_i64 expression: value parity with the HOF fold it
   * replaced (including the fold's null semantics — length mismatch and
@@ -14,7 +14,7 @@ class DotI64Spec extends SparkSuite {
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
 
   test("matches the HOF fold on varied arrays (codegen path)") {
-    DotI64.register(spark)
+    GraftExtensions.register(spark)
     val rows = Seq(
       (Array(1L, 2L, 3L), Array(4L, 5L, 6L)),
       (Array.empty[Long], Array.empty[Long]),
@@ -28,20 +28,20 @@ class DotI64Spec extends SparkSuite {
   }
 
   test("known value") {
-    DotI64.register(spark)
+    GraftExtensions.register(spark)
     Seq((Array(1L, 2L, 3L), Array(4L, 5L, 6L))).toDF("a", "b")
       .select(expr("dot_i64(a, b)")).as[Long].head() shouldBe 32L
   }
 
   test("length mismatch yields NULL (zip_with pads with NULL)") {
-    DotI64.register(spark)
+    GraftExtensions.register(spark)
     val rows = Seq((Array(1L, 2L), Array(1L))).toDF("a", "b")
     val both = rows.select(expr("dot_i64(a, b)").as("native"), expr(fold).as("sql")).collect().head
     assert(both.isNullAt(0) && both.isNullAt(1))
   }
 
   test("NULL element poisons to NULL, NULL array to NULL") {
-    DotI64.register(spark)
+    GraftExtensions.register(spark)
     val withNullElem = Seq((Array[java.lang.Long](1L, null), Array[java.lang.Long](2L, 3L)))
       .toDF("a", "b").select(expr("dot_i64(a, b)")).collect().head
     assert(withNullElem.isNullAt(0))
@@ -50,7 +50,7 @@ class DotI64Spec extends SparkSuite {
   }
 
   test("usable inside a higher-order-function lambda (interpreted path)") {
-    DotI64.register(spark)
+    GraftExtensions.register(spark)
     val out = Seq((Array(Array(1L, 2L), Array(3L, 4L)), Array(10L, 100L))).toDF("arrs", "q")
       .select(expr("transform(arrs, v -> dot_i64(v, q))").as("ds"))
       .as[Array[Long]].head()
@@ -65,7 +65,7 @@ class DotI64Spec extends SparkSuite {
     val vec = Gen.listOfN(64, comp)
     val pairs = Gen.listOfN(50, Gen.zip(vec, vec))
       .apply(Gen.Parameters.default, Seed(42L)).get
-    DotI64.register(spark)
+    GraftExtensions.register(spark)
     val df = pairs.map { case (a, b) => (a.toArray, b.toArray) }.toDF("a", "b")
     val native = df.select(expr("dot_i64(a, b)")).as[Long].collect()
     val ref = pairs.map { case (a, b) =>

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftExtensions
 
 /** minhash_sigs must be value-identical to the 8-fold
   * array_min(transform(...)) SQL form it replaced — including null
@@ -17,7 +18,7 @@ class MinHashSigsSpec extends SparkSuite {
   }: _*)
 
   test("matches the legacy 8-fold SQL form on varied arrays (codegen path)") {
-    graft.functions.MinHashSigs.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq(
       Seq(1L, 2L, 3L),
       Seq(999999999L, 5L),
@@ -32,7 +33,7 @@ class MinHashSigsSpec extends SparkSuite {
   }
 
   test("null elements are skipped; empty and all-null arrays yield 8 nulls; null input is null") {
-    graft.functions.MinHashSigs.register(spark)
+    GraftExtensions.register(spark)
     val out = spark.sql(
       s"""SELECT minhash_sigs(array(CAST(NULL AS BIGINT), 7L, NULL)) AS a,
              minhash_sigs(array(CAST(NULL AS BIGINT))) AS b,
@@ -47,7 +48,7 @@ class MinHashSigsSpec extends SparkSuite {
   }
 
   test("interpreted path (inside a HOF lambda) agrees with codegen") {
-    graft.functions.MinHashSigs.register(spark)
+    GraftExtensions.register(spark)
     // wrapping in a transform forces the interpreted eval of the child
     val r = spark.sql(
       """SELECT transform(array(array(3L, 11L)), x -> minhash_sigs(x))[0] AS sig,

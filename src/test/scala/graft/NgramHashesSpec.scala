@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{NgramHashes, PolyHash}
+import graft.functions.{GraftExtensions, NgramHashes, PolyHash}
 
 /** The native rolling n-gram hash: value parity with the transform +
   * aggregate HOF fold it replaced (the t12/t13 machinery), short-array
@@ -18,7 +18,7 @@ class NgramHashesSpec extends SparkSuite {
     ELSE CAST(array() AS ARRAY<BIGINT>) END"""
 
   test("matches the HOF fold for n = 1..5 on varied arrays") {
-    NgramHashes.register(spark)
+    GraftExtensions.register(spark)
     val rows = Seq(
       Array(1L, 2L, 3L, 4L, 5L),
       Array.empty[Long],
@@ -33,7 +33,7 @@ class NgramHashesSpec extends SparkSuite {
   }
 
   test("shorter-than-n input yields an empty array; NULL input yields NULL") {
-    NgramHashes.register(spark)
+    GraftExtensions.register(spark)
     Seq(Array(1L, 2L)).toDF("th")
       .select(expr("ngram_hashes(th, 3)")).as[Array[Long]].head() shouldBe Array.empty[Long]
     val r = spark.sql("SELECT ngram_hashes(CAST(NULL AS ARRAY<BIGINT>), 3)").collect().head

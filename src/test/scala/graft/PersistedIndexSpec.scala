@@ -57,6 +57,19 @@ class PersistedIndexSpec extends SparkSuite {
     Dedup.simhashIndex(spark, dir).count() shouldBe 50L
   }
 
+  test("a failed build leaves the key to the next caller's own build") {
+    val dir = corpusCopy()
+    val builds = new AtomicInteger(0)
+    val e = intercept[RuntimeException](PersistedIndex(spark, "retry", dir) { _ =>
+      builds.incrementAndGet(); sys.error("boom in build")
+    })
+    e.getMessage should include("boom in build")
+    PersistedIndex(spark, "retry", dir) { p =>
+      builds.incrementAndGet(); writeOne(p)
+    }.count() shouldBe 1L
+    builds.get shouldBe 2
+  }
+
   test("a build that reads another index adds its time to BenchSplit once") {
     val dir = corpusCopy()
     BenchSplit.drainSeconds()

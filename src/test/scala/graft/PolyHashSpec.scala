@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.PolyHash
+import graft.functions.{GraftExtensions, PolyHash}
 
 /** The native poly_hash expression: value parity with the pure-SQL fold it
   * replaced, null handling, and both execution paths (codegen at top level,
@@ -13,7 +13,7 @@ class PolyHashSpec extends SparkSuite {
     s"aggregate(transform(split($c, ''), ch -> CAST(ascii(ch) AS BIGINT)), CAST(0 AS BIGINT), (acc, ch) -> (acc * 31 + ch) % ${PolyHash.Mod})"
 
   test("matches the legacy SQL fold on varied strings (codegen path)") {
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     val rows = Seq("", "a", "the quick brown fox", "MixedCase 123 !?",
       "repeated repeated repeated", "x" * 500).toDF("s")
     val diff = rows
@@ -23,23 +23,23 @@ class PolyHashSpec extends SparkSuite {
   }
 
   test("known value: single character = its code point") {
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     Seq("A").toDF("s").select(expr("poly_hash(s)")).as[Long].head() shouldBe 65L
   }
 
   test("known value: two characters = c0*31 + c1") {
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     Seq("AB").toDF("s").select(expr("poly_hash(s)")).as[Long].head() shouldBe (65L * 31 + 66)
   }
 
   test("NULL input yields NULL") {
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     val r = Seq[Option[String]](None).toDF("s").select(expr("poly_hash(s)")).collect()
     assert(r.head.isNullAt(0))
   }
 
   test("usable inside a higher-order-function lambda (interpreted path)") {
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     val out = Seq(Array("A", "AB")).toDF("arr")
       .select(expr("transform(arr, x -> poly_hash(x))").as("hs"))
       .as[Array[Long]].head()
@@ -53,7 +53,7 @@ class PolyHashSpec extends SparkSuite {
   }
 
   test("SQL registration survives into spark.sql") {
-    PolyHash.register(spark)
+    GraftExtensions.register(spark)
     spark.sql("SELECT poly_hash('AB') AS h").collect().head.getLong(0) shouldBe (65L * 31 + 66)
   }
 }

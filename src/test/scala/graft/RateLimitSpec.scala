@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.streaming.Trigger
 import graft.sources.{KafkaSource, TextFileSource}
 
 /** Source backpressure: a rate-capped bounded drain splits into several
@@ -15,17 +14,14 @@ class RateLimitSpec extends SparkSuite {
     }
     val batches = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     var rows = 0L
-    val q = TextFileSource(dir.toString, maxFilesPerTrigger = Some(1))
+    graft.streaming.drain(TextFileSource(dir.toString, maxFilesPerTrigger = Some(1))
       .load(spark)
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         batches.add(id); rows += df.count()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ratelimit-ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        Files.createTempDirectory("graft-ratelimit-ckpt").toString))
     batches.size shouldBe 3
     rows shouldBe 3L
   }
@@ -36,17 +32,14 @@ class RateLimitSpec extends SparkSuite {
       Files.writeString(dir.resolve(s"part$i.jsonl"), s"""{"n":$i}\n""")
     }
     val batches = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val q = TextFileSource(dir.toString)
+    graft.streaming.drain(TextFileSource(dir.toString)
       .load(spark)
       .writeStream
       .foreachBatch { (_: org.apache.spark.sql.DataFrame, id: Long) =>
         batches.add(id); ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ratelimit2-ckpt").toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        Files.createTempDirectory("graft-ratelimit2-ckpt").toString))
     batches.size shouldBe 1
   }
 

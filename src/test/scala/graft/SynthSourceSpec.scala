@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -91,18 +93,19 @@ class SynthSourceSpec extends SparkSuite with BeforeAndAfterEach {
   }
 
   test("micro-batch stream honors maxRowsPerBatch and drains exactly once") {
-    import org.apache.spark.sql.streaming.Trigger
     val agg = spark.readStream.format(classOf[SynthSource].getName)
       .option("rows", 50000).option("parts", 4).option("maxRowsPerBatch", 10000)
       .load()
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-    val q = agg.writeStream.format("memory").queryName("synth_stream_test")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val progress = graft.streaming.drain(agg.writeStream.format("memory")
+      .queryName("synth_stream_test").outputMode("complete"))
     // admission control: 50k rows at 10k/batch = 5 micro-batches
-    q.recentProgress.count(_.numInputRows > 0) shouldBe 5
-    q.recentProgress.map(_.numInputRows).filter(_ > 0).max shouldBe 10000
-    q.stop()
+    val data = progress.filter(_.numInputRows > 0)
+    data should have size 5
+    data.map(_.numInputRows).max shouldBe 10000
+    progress.foreach { p =>
+      p.durationMs.asScala.keySet should contain allOf ("addBatch", "triggerExecution")
+    }
     val row = spark.table("synth_stream_test").head()
     spark.catalog.dropTempView("synth_stream_test")
     row.getLong(0) shouldBe 50000
@@ -110,18 +113,15 @@ class SynthSourceSpec extends SparkSuite with BeforeAndAfterEach {
   }
 
   test("stream resumes from checkpointed offsets without re-reading") {
-    import org.apache.spark.sql.streaming.Trigger
     val ckpt = java.nio.file.Files.createTempDirectory("synth-ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("synth-out").toString + "/t"
-    def drain(rows: Long): Unit = {
-      val q = spark.readStream.format(classOf[SynthSource].getName)
+    def drain(rows: Long): Unit =
+      graft.streaming.drain(spark.readStream.format(classOf[SynthSource].getName)
         .option("rows", rows).option("parts", 4).option("maxRowsPerBatch", 500)
         .load()
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(); q.stop()
-    }
+        .outputMode("append"))
     drain(2000)
     spark.read.parquet(out).count() shouldBe 2000
     // restart against a grown source: only the new offsets [2000, 3000) land

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-import graft.functions.ZInterleave
+import graft.functions.{GraftExtensions, ZInterleave}
 
 /** The native z_interleave expression and the Z-order layout win it
   * exists for: a Morton-sorted parquet layout must prune strictly more
@@ -36,7 +36,7 @@ class ZOrderSpec extends SparkSuite {
   }
 
   test("z_interleave SQL function evaluates via codegen and interpreter") {
-    ZInterleave.register(spark)
+    GraftExtensions.register(spark)
     val got = spark.range(1000)
       .select(expr("z_interleave(id % 100, id % 37)").as("z"),
         col("id") % 100, col("id") % 37)
@@ -50,7 +50,7 @@ class ZOrderSpec extends SparkSuite {
   }
 
   test("z_interleave builder: arity error is an analysis error; narrow ints widen") {
-    ZInterleave.register(spark)
+    GraftExtensions.register(spark)
     // wrong arity must name the function and expected signature, not
     // throw IndexOutOfBoundsException from the builder
     val e = intercept[org.apache.spark.sql.AnalysisException] {
@@ -83,7 +83,7 @@ class ZOrderSpec extends SparkSuite {
   }
 
   test("z-order layout prunes a 2-D box strictly better than a lexicographic sort") {
-    ZInterleave.register(spark)
+    GraftExtensions.register(spark)
     // a symmetric 1000 × 1000 INDEPENDENT grid — two multiplicative
     // hashes of id mod the same modulus would be bijective maps of each
     // other (perfectly correlated) and no layout could separate them;

@@ -81,4 +81,18 @@ class IvfAssignSpec extends SparkSuite {
     val end = text.indexOf("private[analytics]def", start + 1)
     assert(start < at && at < end, "the window sits outside the body of ivfAssign")
   }
+
+  test("the quantized cosine is written only in Tables.cosine") {
+    // whitespace-free text, so a formula split over lines is still found
+    val formula = """\.cast\("double"\)/\(*sqrt\(col\(""".r
+    val hits = SourceScan.files("src/main").flatMap { case (p, lines) =>
+      val text = lines.mkString.replaceAll("\\s", "")
+      formula.findAllMatchIn(text).map(m => (p.getFileName.toString, text, m.start)).toSeq
+    }
+    hits.map(_._1) shouldBe Seq("Tables.scala")
+    val (_, text, at) = hits.head
+    val start = text.indexOf("defcosine(")
+    start should be >= 0
+    assert(start < at && at < text.indexOf("def", start + 1), "the formula sits outside Tables.cosine")
+  }
 }

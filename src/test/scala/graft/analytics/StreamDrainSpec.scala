@@ -91,4 +91,18 @@ class StreamDrainSpec extends SparkSuite {
     mentions.filter(_._1 != drainFile) shouldBe empty
     mentions.count(_._2.contains("Trigger.AvailableNow()")) shouldBe 1
   }
+
+  test("the click-purchase interval join is written once, in Streams.clickPurchaseJoin") {
+    val sources = SourceScan.files("src/main/scala/graft/analytics")
+    Seq("expr(\"INTERVAL 30 MINUTES\")", "withWatermark(\"p_ts\"").foreach { needle =>
+      val hits = for {
+        (p, lines) <- sources
+        (l, i) <- lines.zipWithIndex if l.contains(needle)
+      } yield (p.getFileName.toString, lines(lines.lastIndexWhere(_.contains(" def "), i)))
+      withClue(needle) {
+        hits.map(_._1) shouldBe Seq("Streams.scala")
+        hits.head._2 should include("def clickPurchaseJoin(")
+      }
+    }
+  }
 }
