@@ -100,16 +100,9 @@ object CorpusPipeline {
         .orderBy(col("source"), col("shard_id"))
     },
     Some(s"""WITH RECURSIVE ${Dedup.simhashCteDuck},
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp
-             FROM r GROUP BY node),
+    ${Dedup.simhashPairsCte("p")},
+    ${Dedup.undirectedCte("e", "p")},
+    ${Dedup.componentsCte("comp")},
     cl AS (SELECT d.doc_id, d.n_chars, c.comp
            FROM documents d JOIN comp c ON c.node = d.doc_id),
     reps AS (SELECT doc_id FROM (

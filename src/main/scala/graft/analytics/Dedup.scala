@@ -183,6 +183,34 @@ object Dedup {
              FROM tok GROUP BY doc_id),
     sh AS (SELECT doc_id, CAST(${simhashFromBits(b => s"s$b")} AS BIGINT) AS simhash FROM bits)"""
 
+  /** `name(id1, id2)`: the near-duplicate pairs over [[simhashCteDuck]]'s
+    * `sh`, met inside the `simhash >> 8` bucket at Hamming distance ≤ 6,
+    * id1 < id2 (the DuckDB twin of [[simhashPairs]]). */
+  private[analytics] def simhashPairsCte(name: String) =
+    s"""$name AS (SELECT a.doc_id AS id1, b.doc_id AS id2
+          FROM sh a JOIN sh b
+            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
+          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6)"""
+
+  /** `name(id1, id2)`: both directions of the pair CTE `pairs`. UNION
+    * drops repeated edges; `all` (UNION ALL) keeps them for degree counts. */
+  private[analytics] def undirectedCte(name: String, pairs: String, all: Boolean = false) =
+    s"$name AS (SELECT id1, id2 FROM $pairs UNION${if (all) " ALL" else ""} SELECT id2, id1 FROM $pairs)"
+
+  /** `r(node, reach)`: every node each node reaches over the undirected
+    * edges `e`, by recursive union (needs `WITH RECURSIVE`). */
+  private[analytics] val reachCte =
+    """r AS (SELECT id1 AS node, id2 AS reach FROM e
+          UNION
+          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1)"""
+
+  /** [[reachCte]] plus `comp(node, <label>)`: each node's connected
+    * component, labelled by the least id in it. */
+  private[analytics] def componentsCte(label: String) =
+    s"""$reachCte,
+    comp AS (SELECT node, LEAST(node, MIN(reach)) AS $label
+             FROM r GROUP BY node)"""
+
   private val d04 = QueryDef(
     "d04_simhash",
     (s, dir) => simhashIndex(s, dir).orderBy(col("doc_id")),
@@ -535,16 +563,9 @@ object Dedup {
       }
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS cluster_rep
-             FROM r GROUP BY node)
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("cluster_rep")}
     SELECT cluster_rep, COUNT(*) AS n_members
     FROM comp GROUP BY cluster_rep ORDER BY cluster_rep"""))
 
@@ -640,11 +661,8 @@ object Dedup {
       out
     },
     Some(s"""WITH $simhashCteDuck,
-    pp AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM pp UNION ALL SELECT id2, id1 FROM pp),
+    ${simhashPairsCte("pp")},
+    ${undirectedCte("e", "pp", all = true)},
     deg AS (SELECT id1 AS node, COUNT(*) AS deg FROM e GROUP BY id1),
     n AS (SELECT COUNT(DISTINCT id1) AS nn FROM e),
     pr0 AS (SELECT DISTINCT id1 AS node, CAST($PrUnit // nn AS BIGINT) AS pr
@@ -1048,16 +1066,9 @@ object Dedup {
         .orderBy(col("source"))
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp
-             FROM r GROUP BY node),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("comp")},
     cl AS (SELECT d.doc_id, d.n_chars, c.comp
            FROM documents d JOIN comp c ON c.node = d.doc_id),
     reps AS (SELECT doc_id FROM (
@@ -1155,11 +1166,8 @@ object Dedup {
     * indistinguishable from the full recompute. */
   private[analytics] lazy val kcoreOracle: String =
     s"""WITH $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p", all = true)},
     n0 AS (SELECT DISTINCT id1 AS node FROM e),
     ${(1 to KCoreRounds).map(k =>
         s"""n$k AS (SELECT id1 AS node FROM e
@@ -1369,16 +1377,9 @@ object Dedup {
     // recursive-CTE transitive closure, verbatim: the incremental merge
     // must be indistinguishable from rebuilding from scratch
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS cluster_rep
-             FROM r GROUP BY node)
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("cluster_rep")}
     SELECT cluster_rep, COUNT(*) AS n_members
     FROM comp GROUP BY cluster_rep ORDER BY cluster_rep"""))
 
@@ -1525,11 +1526,8 @@ object Dedup {
       out
     },
     Some(s"""WITH $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p", all = true)},
     d0 AS (SELECT DISTINCT id1 AS node, CAST(0 AS BIGINT) AS d FROM e
            WHERE id1 % 7 = 0),
     ${(1 to BfsRounds).map(k =>
@@ -1629,7 +1627,7 @@ object Dedup {
       FROM lineitem WHERE l_orderkey % 10 = 0),
     p AS (SELECT DISTINCT a.pk AS id1, b.pk AS id2
           FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk),
-    e AS (SELECT id1, id2 FROM p UNION ALL SELECT id2, id1 FROM p),
+    ${undirectedCte("e", "p", all = true)},
     deg AS (SELECT id1 AS node, COUNT(*) AS deg FROM e GROUP BY 1),
     o AS (SELECT CASE WHEN lt THEN id1 ELSE id2 END AS src,
                  CASE WHEN lt THEN id2 ELSE id1 END AS dst,
@@ -2173,14 +2171,9 @@ object Dedup {
       out
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    $reachCte,
     comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp FROM r GROUP BY node),
     reps AS (SELECT doc_id, COALESCE(c.comp, doc_id) AS rep
              FROM documents LEFT JOIN comp c ON c.node = doc_id),
@@ -2248,14 +2241,9 @@ object Dedup {
       out
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    $reachCte,
     comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp FROM r GROUP BY node),
     cs AS (SELECT comp, COUNT(*) AS csz FROM comp GROUP BY 1),
     d AS (SELECT doc_id, source, COALESCE(cs.csz, 1) AS csz
@@ -2356,10 +2344,7 @@ object Dedup {
           expr("(n_both * 1000000) DIV n_union").as("agree_ppm"))
     },
     Some(s"""WITH $simhashCteDuck,
-    sp AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-           FROM sh a JOIN sh b
-             ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
+    ${simhashPairsCte("sp")},
     msh AS (SELECT doc_id, $shingleSqlDuck AS shg FROM documents
             WHERE len(string_split(text, ' ')) >= 3),
     mhh AS (SELECT doc_id, shg, list_transform(shg, x -> ${strHashSql("x")}) AS hs FROM msh),
@@ -2550,16 +2535,9 @@ object Dedup {
       }
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS cluster_rep
-             FROM r GROUP BY node),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("cluster_rep")},
     mem AS (SELECT cluster_rep, COUNT(*) AS n_members FROM comp GROUP BY cluster_rep),
     ed AS (SELECT c.cluster_rep, COUNT(*) AS n_edges
            FROM p JOIN comp c ON p.id1 = c.node GROUP BY c.cluster_rep)
@@ -2841,16 +2819,9 @@ object Dedup {
         .orderBy(col("cluster_rep"))
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS cluster_rep
-             FROM r GROUP BY node)
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("cluster_rep")}
     SELECT cluster_rep, COUNT(*) AS n_members,
       CAST(SUM(node % $HashMod) % $HashMod AS BIGINT) AS member_checksum
     FROM comp GROUP BY cluster_rep ORDER BY cluster_rep"""))
@@ -3019,16 +2990,9 @@ object Dedup {
         .orderBy(col("cluster_rep"))
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS cluster_rep
-             FROM r GROUP BY node)
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("cluster_rep")}
     SELECT cluster_rep, COUNT(*) AS n_members,
       CAST(SUM(node % $HashMod) % $HashMod AS BIGINT) AS member_checksum
     FROM comp GROUP BY cluster_rep ORDER BY cluster_rep"""))
@@ -3083,16 +3047,9 @@ object Dedup {
       out
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp
-             FROM r GROUP BY node),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("comp")},
     csz AS (SELECT comp, COUNT(*) AS csz FROM comp GROUP BY comp),
     per AS (SELECT d.source,
         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS tokens,
@@ -3438,12 +3395,12 @@ object Dedup {
                SELECT src, dst,
                  ROW_NUMBER() OVER (PARTITION BY src ORDER BY jacc DESC, dst) AS rnk
                FROM dirx) WHERE rnk <= 3),
-    ef AS (SELECT id1, id2 FROM edges UNION SELECT id2, id1 FROM edges),
+    ${undirectedCte("ef", "edges")},
     rf AS (SELECT id1 AS node, id2 AS reach FROM ef
            UNION
            SELECT rf.node, ef.id2 FROM rf JOIN ef ON rf.reach = ef.id1),
     cf AS (SELECT node, LEAST(node, MIN(reach)) AS comp FROM rf GROUP BY node),
-    es AS (SELECT id1, id2 FROM kept UNION SELECT id2, id1 FROM kept),
+    ${undirectedCte("es", "kept")},
     rs AS (SELECT id1 AS node, id2 AS reach FROM es
            UNION
            SELECT rs.node, es.id2 FROM rs JOIN es ON rs.reach = es.id1),
@@ -3567,7 +3524,7 @@ object Dedup {
              WHERE df BETWEEN 2 AND 5),
     edges AS (SELECT DISTINCT doc_id AS id1, shx.sid AS id2
               FROM shx JOIN rare ON shx.sid = rare.sid),
-    e AS (SELECT id1, id2 FROM edges UNION SELECT id2, id1 FROM edges),
+    ${undirectedCte("e", "edges")},
     r AS (SELECT id1 AS node, id2 AS reach FROM e
           UNION
           SELECT r.node, e.id2 FROM r JOIN e ON r.reach = e.id1),
@@ -3763,10 +3720,7 @@ object Dedup {
       perClass.unionByName(total).orderBy(col("cls"))
     },
     Some(s"""WITH $simhashCteDuck,
-    pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-      FROM sh a JOIN sh b
-        ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
+    ${simhashPairsCte("pairs")},
     tf AS (SELECT doc_id, w, COUNT(*) AS c FROM
              (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
            GROUP BY 1, 2),
@@ -3861,20 +3815,13 @@ object Dedup {
       }
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
-    comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp_f
-             FROM r GROUP BY node),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    ${componentsCte("comp_f")},
     ps AS (SELECT id1, id2 FROM p
            WHERE ${strHashSql("CAST(id1 AS VARCHAR)")} % 10 <> 0
              AND ${strHashSql("CAST(id2 AS VARCHAR)")} % 10 <> 0),
-    es AS (SELECT id1, id2 FROM ps UNION SELECT id2, id1 FROM ps),
+    ${undirectedCte("es", "ps")},
     rs AS (SELECT id1 AS node, id2 AS reach FROM es
            UNION
            SELECT rs.node, es.id2 AS reach FROM rs JOIN es ON rs.reach = es.id1),
@@ -4052,14 +3999,9 @@ object Dedup {
       perBucket.unionByName(total).orderBy(col("bucket"))
     },
     Some(s"""WITH RECURSIVE $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
-    r AS (SELECT id1 AS node, id2 AS reach FROM e
-          UNION
-          SELECT r.node, e.id2 AS reach FROM r JOIN e ON r.reach = e.id1),
+    ${simhashPairsCte("p")},
+    ${undirectedCte("e", "p")},
+    $reachCte,
     comp AS (SELECT node, LEAST(node, MIN(reach)) AS comp FROM r GROUP BY node),
     cl AS (SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster
            FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
@@ -4155,10 +4097,7 @@ object Dedup {
         (col("n_open") - col("n_open_near")).as("n_chain_artifacts"))
     },
     Some(s"""WITH $simhashCteDuck,
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
+    ${simhashPairsCte("p")},
     und AS (SELECT id1 AS a, id2 AS b FROM p UNION ALL SELECT id2, id1 FROM p),
     ep AS (SELECT DISTINCT l.a, r.a AS c
            FROM und l JOIN und r ON l.b = r.b AND l.a < r.a),
@@ -4281,10 +4220,7 @@ object Dedup {
     st$x AS (SELECT CAST((SELECT COUNT(*) FROM sh$x) AS BIGINT) AS n_docs,
                     CAST((SELECT COUNT(*) FROM dp$x) AS BIGINT) AS n_pairs)"""
       s"""WITH $simhashCteDuck,
-    sp AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-           FROM sh a JOIN sh b
-             ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
+    ${simhashPairsCte("sp")},
     dropped AS (SELECT DISTINCT id2 AS doc_id FROM sp),
     surv AS (SELECT d.* FROM documents d WHERE NOT EXISTS
                (SELECT 1 FROM dropped WHERE dropped.doc_id = d.doc_id)),

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
@@ -24,6 +25,42 @@ import Tables._
  * shuffle-free.
  */
 object Pipeline {
+
+  /** The silence that ends a session: 30 minutes, in µs. */
+  private val SessionGapUs = 30L * 60 * 1000000L
+
+  /** Gaps-and-islands session numbering of `df` (`us` event time in µs,
+    * `event_id` tie-break) within each `keys` group: `prev_us` is the
+    * previous event's time, `is_new` flags a gap above `gapUs` (or the
+    * group's first event), and `sess` is the running count of flags. */
+  private def sessionNumbers(df: DataFrame, keys: Seq[String], gapUs: Long): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("us"), col("event_id"))
+    df.withColumn("prev_us", lag(col("us"), 1).over(w))
+      .withColumn("is_new",
+        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
+          .otherwise(0L))
+      .withColumn("sess",
+        sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** DuckDB twin of [[sessionNumbers]] over `events` at the 30-minute
+    * [[SessionGapUs]]: `ev` → `marked(is_new)` → `numbered(sess)`, grouped
+    * by `keys` (`user_id` first). */
+  private def sessionCte(keys: String*): String = {
+    val k = keys.mkString(", ")
+    s"""ev AS (
+      SELECT ${(keys.head +: "event_id" +: keys.tail).mkString(", ")}, epoch_us(ts) AS us FROM events),
+    marked AS (
+      SELECT $k, us, event_id,
+        CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
+             THEN 1 ELSE 0 END AS is_new
+      FROM ev WINDOW w AS (PARTITION BY $k ORDER BY us, event_id)),
+    numbered AS (
+      SELECT $k, us,
+        SUM(is_new) OVER (PARTITION BY $k ORDER BY us, event_id
+          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
+      FROM marked)"""
+  }
 
   // ---------------------------------------------------------------- q51
   // Bloom-filter pre-filtered join: build a bloom over the BUILDING-segment
@@ -72,16 +109,9 @@ object Pipeline {
   private val q52 = QueryDef(
     "q52_sessionize",
     (s, dir) => {
-      val gapUs = 30L * 60 * 1000000L
-      val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-      val sessions = events(s, dir)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-        .withColumn("prev_us", lag(col("us"), 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("sess",
-          sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sessions = sessionNumbers(
+          events(s, dir).select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us")),
+          Seq("user_id"), SessionGapUs)
         .groupBy(col("user_id"), col("sess"))
         .agg(count(lit(1)).as("n_events"), (max(col("us")) - min(col("us"))).as("dur_us"))
       sessions.groupBy(col("n_events"))
@@ -91,18 +121,7 @@ object Pipeline {
           max(col("dur_us")).as("max_dur_us"))
         .orderBy(col("n_events"))
     },
-    Some("""WITH ev AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-    marked AS (
-      SELECT user_id, us, event_id,
-        CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-             THEN 1 ELSE 0 END AS is_new
-      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-    numbered AS (
-      SELECT user_id, us,
-        SUM(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM marked),
+    Some(s"""WITH ${sessionCte("user_id")},
     sessions AS (
       SELECT user_id, sess, COUNT(*) AS n_events, MAX(us) - MIN(us) AS dur_us
       FROM numbered GROUP BY 1, 2)
@@ -522,18 +541,11 @@ object Pipeline {
   private val q122 = QueryDef(
     "q122_peak_concurrency",
     (s, dir) => {
-      val gapUs = 30L * 60 * 1000000L
       val padUs = 60L * 1000000L
       val dayUs = 86400L * 1000000L
-      val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-      val sessions = events(s, dir)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-        .withColumn("prev_us", lag(col("us"), 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("sess",
-          sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sessions = sessionNumbers(
+          events(s, dir).select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us")),
+          Seq("user_id"), SessionGapUs)
         .groupBy(col("user_id"), col("sess"))
         .agg(min(col("us")).as("s_us"), (max(col("us")) + padUs).as("e_us"))
       // materialize the point list ONCE before fanning out: it feeds both
@@ -566,18 +578,7 @@ object Pipeline {
           min(when(col("conc") === col("peak"), col("us"))).as("peak_first_us"))
         .orderBy(col("day"))
     },
-    Some("""WITH ev AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-    marked AS (
-      SELECT user_id, us, event_id,
-        CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-             THEN 1 ELSE 0 END AS is_new
-      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-    numbered AS (
-      SELECT user_id, us,
-        SUM(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM marked),
+    Some(s"""WITH ${sessionCte("user_id")},
     sessions AS (
       SELECT user_id, sess, MIN(us) AS s_us, MAX(us) + 60000000 AS e_us
       FROM numbered GROUP BY 1, 2),
@@ -713,17 +714,10 @@ object Pipeline {
   private val q125 = QueryDef(
     "q125_interval_overlap_join",
     (s, dir) => {
-      val gapUs = 30L * 60 * 1000000L
       val dayUs = 86400L * 1000000L
-      val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-      val sessions = events(s, dir)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-        .withColumn("prev_us", lag(col("us"), 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("sess",
-          sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val sessions = sessionNumbers(
+          events(s, dir).select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us")),
+          Seq("user_id"), SessionGapUs)
         .groupBy(col("user_id"), col("sess"))
         .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
         .cache()
@@ -750,18 +744,7 @@ object Pipeline {
             % lit(HashMod)).as("pair_checksum"))
         .orderBy(col("day"))
     },
-    Some(s"""WITH ev AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-    marked AS (
-      SELECT user_id, us, event_id,
-        CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-             THEN 1 ELSE 0 END AS is_new
-      FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-    numbered AS (
-      SELECT user_id, us,
-        SUM(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM marked),
+    Some(s"""WITH ${sessionCte("user_id")},
     sessions AS (
       SELECT user_id, sess, MIN(us) AS s_us, MAX(us) AS e_us
       FROM numbered GROUP BY 1, 2),
@@ -876,18 +859,10 @@ object Pipeline {
   private val q131 = QueryDef(
     "q131_interval_coalesce",
     (s, dir) => {
-      val gapUs = 30L * 60 * 1000000L
-      val w = Window.partitionBy(col("user_id"), col("event_type"))
-        .orderBy(col("us"), col("event_id"))
-      val intervals = events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-        .withColumn("prev_us", lag(col("us"), 1).over(w))
-        .withColumn("is_new",
-          when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("sess",
-          sum(col("is_new")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val intervals = sessionNumbers(
+          events(s, dir).select(col("user_id"), col("event_id"), col("event_type"),
+            unix_micros(col("ts")).as("us")),
+          Seq("user_id", "event_type"), SessionGapUs)
         .groupBy(col("user_id"), col("event_type"), col("sess"))
         .agg(min(col("us")).as("s_us"), max(col("us")).as("e_us"))
       val mw = Window.partitionBy(col("user_id")).orderBy(col("s_us"), col("e_us"))
@@ -909,18 +884,7 @@ object Pipeline {
           sum(col("n_iv")).as("n_intervals"))
         .orderBy(col("user_id"))
     },
-    Some("""WITH ev AS (
-      SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
-    marked AS (
-      SELECT user_id, event_type, us, event_id,
-        CASE WHEN lag(us) OVER w IS NULL OR us - lag(us) OVER w > 1800000000
-             THEN 1 ELSE 0 END AS is_new
-      FROM ev WINDOW w AS (PARTITION BY user_id, event_type ORDER BY us, event_id)),
-    numbered AS (
-      SELECT user_id, event_type, us,
-        SUM(is_new) OVER (PARTITION BY user_id, event_type ORDER BY us, event_id
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess
-      FROM marked),
+    Some(s"""WITH ${sessionCte("user_id", "event_type")},
     iv AS (SELECT user_id, event_type, sess,
              MIN(us) AS s_us, MAX(us) AS e_us
            FROM numbered GROUP BY 1, 2, 3),

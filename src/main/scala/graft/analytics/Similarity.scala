@@ -31,6 +31,25 @@ object Similarity {
     s"""qe AS (SELECT vec_id, label, ${quantizeSql("embedding")} AS qv FROM embeddings),
     qn AS (SELECT vec_id, label, qv, ${dotSql("qv", "qv")} AS norm2 FROM qe)"""
 
+  /** `name(key, pos, v)`: one row per component of `src`'s 64-dim `qv`. */
+  private[analytics] def vecComponentsCte(name: String, key: String, src: String) =
+    s"""$name AS (SELECT $key, i AS pos, qv[i] AS v
+           FROM $src CROSS JOIN generate_series(1, 64) AS g(i))"""
+
+  /** A centroid component: the floored mean of a group's `v`, int64 like
+    * every quantized vector. */
+  private[analytics] val meanCvSql = "CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv"
+
+  /** `ex`→`cd`→`ce(outKey, vec)`: the centroid of `src`'s quantized
+    * vectors per `key` (by default the label centroids over [[quantCte]]'s
+    * `qn`). `sfx` renames the three CTEs for a second centroid set. */
+  private[analytics] def centroidCte(key: String = "label", src: String = "qn",
+      outKey: String = "c_label", vec: String = "cqv", sfx: String = "") =
+    s"""${vecComponentsCte(s"ex$sfx", key, src)},
+    cd$sfx AS (SELECT $key, pos, $meanCvSql
+           FROM ex$sfx GROUP BY $key, pos),
+    ce$sfx AS (SELECT ${if (outKey == key) key else s"$key AS $outKey"}, list(cv ORDER BY pos) AS $vec FROM cd$sfx GROUP BY $key)"""
+
   private[analytics] val simSql =
     s"CAST(${dotSql("a.qv", "b.qv")} AS DOUBLE) / (sqrt(CAST(a.norm2 AS DOUBLE)) * sqrt(CAST(b.norm2 AS DOUBLE)))"
 
@@ -149,11 +168,7 @@ object Similarity {
         .orderBy(col("label"), col("c_label"))
     },
     Some(s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS qv FROM cd GROUP BY label),
+    ${centroidCte(vec = "qv")},
     cn AS (SELECT c_label, qv, ${dotSql("qv", "qv")} AS norm2 FROM ce),
     asg AS (SELECT a.vec_id, a.label, b.c_label,
               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY $simSql DESC, b.c_label) AS rnk
@@ -194,11 +209,7 @@ object Similarity {
     * per-label centroids, nearest-centroid assignment, inverted lists,
     * and the anchors' nearest-2 probe rule — shared by the s04/s12
     * oracle and s16's evaluation side. Expects [[quantCte]] upstream. */
-  private[analytics] lazy val ivfProbeCte: String = s"""ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+  private[analytics] lazy val ivfProbeCte: String = s"""${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     asg AS (SELECT a.vec_id, a.qv, a.norm2, b.c_label,
               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
@@ -333,21 +344,16 @@ object Similarity {
         .orderBy(col("cluster"), col("pos"))
     },
     Some(s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     asg AS (SELECT a.vec_id, a.qv, b.c_label,
               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
                 CAST(${dotSql("a.qv", "b.cqv")} AS DOUBLE) / (sqrt(CAST(a.norm2 AS DOUBLE)) * sqrt(CAST(b.cnorm2 AS DOUBLE))) DESC, b.c_label) AS rnk
             FROM qn a CROSS JOIN cn b),
     m AS (SELECT c_label AS cluster, qv FROM asg WHERE rnk = 1),
-    ex2 AS (SELECT cluster, i AS pos, qv[i] AS v
-            FROM m CROSS JOIN generate_series(1, 64) AS g(i))
+    ${vecComponentsCte("ex2", "cluster", "m")}
     SELECT cluster, pos, COUNT(*) AS n_members,
-      CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
+      $meanCvSql
     FROM ex2 GROUP BY cluster, pos ORDER BY cluster, pos"""))
 
   // ---------------------------------------------------------------- s08
@@ -610,11 +616,7 @@ object Similarity {
       }.mkString(",\n            ")
       val adc = (0 until PqM).map(m => s"dq$m[code$m]").mkString(" + ")
       s"""WITH $quantCte,
-      ex AS (SELECT label, i AS pos, qv[i] AS v
-             FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-      cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-             FROM ex GROUP BY label, pos),
-      ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+      ${centroidCte()},
       cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
       asg AS (SELECT a.vec_id, a.qv, a.norm2, b.c_label,
                 ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
@@ -679,11 +681,7 @@ object Similarity {
         .orderBy(col("c_label"))
     },
     Some(s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS qv FROM cd GROUP BY label),
+    ${centroidCte(vec = "qv")},
     cn AS (SELECT c_label, qv, ${dotSql("qv", "qv")} AS norm2 FROM ce),
     asg AS (SELECT vec_id, qv, norm2, c_label FROM (
               SELECT a.vec_id, a.qv, a.norm2, b.c_label,
@@ -841,11 +839,7 @@ object Similarity {
         .orderBy(col("q_id"), col("rnk"))
     },
     Some(s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     asg AS (SELECT a.vec_id, a.label, a.qv, a.norm2, b.c_label,
               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
@@ -1553,11 +1547,7 @@ object Similarity {
         .orderBy(col("label"))
     },
     Some(s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     sc AS (SELECT qn.vec_id, qn.label,
              CAST(${dotSql("qn.qv", "cn.cqv")} AS DOUBLE)
@@ -1802,11 +1792,7 @@ object Similarity {
     Some {
       val d2 = s"(v.norm2 - 2 * ${dotSql("v.qv", "c.cqv")} + c.cnorm2)"
       s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     dd AS (SELECT v.vec_id, v.label, c.c_label, $d2 AS d2
            FROM qn v CROSS JOIN cn c),
@@ -2495,11 +2481,7 @@ object Similarity {
     * (the balanced assignment), shared by the s34 and s36 oracles.
     * Expects nothing upstream — starts with [[quantCte]]. */
   private lazy val balancedCte: String = s"""$quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     sims0 AS (SELECT a.vec_id, b.c_label,
         CAST(${dotSql("a.qv", "b.cqv")} AS DOUBLE) / (sqrt(CAST(a.norm2 AS DOUBLE)) * sqrt(CAST(b.cnorm2 AS DOUBLE))) AS csim,
@@ -3202,21 +3184,13 @@ object Similarity {
     Some {
       val simA = s"CAST(${dotSql("a.qv", "b.cqv")} AS DOUBLE) / (sqrt(CAST(a.norm2 AS DOUBLE)) * sqrt(CAST(b.cnorm2 AS DOUBLE)))"
       s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label AS c_label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte()},
     cn AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce),
     a0 AS (SELECT vec_id, qv, c_label AS cell0 FROM (
         SELECT a.vec_id, a.qv, b.c_label,
           ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY $simA DESC, b.c_label) AS rnk
         FROM qn a CROSS JOIN cn b) WHERE rnk = 1),
-    ex1 AS (SELECT cell0, i AS pos, qv[i] AS v
-            FROM a0 CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd1 AS (SELECT cell0, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-            FROM ex1 GROUP BY cell0, pos),
-    ce1 AS (SELECT cell0 AS c_label, list(cv ORDER BY pos) AS cqv FROM cd1 GROUP BY cell0),
+    ${centroidCte(key = "cell0", src = "a0", sfx = "1")},
     cn1 AS (SELECT c_label, cqv, ${dotSql("cqv", "cqv")} AS cnorm2 FROM ce1),
     a1 AS (SELECT vec_id, c_label AS cell1 FROM (
         SELECT a.vec_id, b.c_label,
@@ -3305,11 +3279,7 @@ object Similarity {
         s"(CASE WHEN list_reduce($arr[${8 * j + 1}:${8 * j + 8}], (acc, v) -> acc + v) > 0 THEN ${1 << j} ELSE 0 END)"
       }.mkString(" + ")
       s"""WITH $quantCte,
-    ex AS (SELECT label, i AS pos, qv[i] AS v
-           FROM qn CROSS JOIN generate_series(1, 64) AS g(i)),
-    cd AS (SELECT label, pos, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
-           FROM ex GROUP BY label, pos),
-    ce AS (SELECT label, list(cv ORDER BY pos) AS cqv FROM cd GROUP BY label),
+    ${centroidCte(outKey = "label")},
     rs AS (SELECT qn.vec_id, qn.label,
              list_transform(generate_series(1, 64), i -> qn.qv[i] - ce.cqv[i]) AS rv
            FROM qn JOIN ce USING (label)),
@@ -3724,10 +3694,9 @@ object Similarity {
           i -> (w.qv[i] - s2.s2qv[i]) * (w.qv[i] - s2.s2qv[i]))) AS BIGINT)
         THEN 'a' ELSE 'b' END AS side
       FROM wd1 w CROSS JOIN s2),
-    exn AS (SELECT side, i AS pos, qv[i] AS v
-            FROM sides CROSS JOIN generate_series(1, 64) AS g(i)),
+    ${vecComponentsCte("exn", "side", "sides")},
     ncd AS (SELECT side, pos,
-              CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS cv
+              $meanCvSql
             FROM exn GROUP BY 1, 2),
     nc AS (SELECT side, list(cv ORDER BY pos) AS scv FROM ncd GROUP BY side),
     aft AS (SELECT MIN(n_side) AS side_small, MAX(n_side) AS side_large,

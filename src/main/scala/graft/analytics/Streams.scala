@@ -128,12 +128,14 @@ object Streams {
       how)
   }
 
-  /** The watermark, in µs, at which a drained [[clickPurchaseJoin]] rests:
-    * the min over SIDES of (that side's max event time − 1h). Each
-    * watermark node only sees its own filtered stream, so a sparse
-    * purchase tail drags the global watermark back. `name` is the query
-    * the `require` blames when a side has no events. */
-  private def joinWatermarkUs(s: SparkSession, dir: String, name: String): Long = {
+  /** The watermark, in µs, at which a drained stream over a click side
+    * and a purchase side rests: the min over SIDES of (that side's max
+    * event time − its declared delay; 1 h each for [[clickPurchaseJoin]]).
+    * Each watermark node only sees its own filtered stream, so a sparse
+    * tail on either side drags the global watermark back. `name` is the
+    * query the `require` blames when a side has no events. */
+  private def joinWatermarkUs(s: SparkSession, dir: String, name: String,
+      clickDelayUs: Long, purchaseDelayUs: Long): Long = {
     val maxRow = events(s, dir)
       .agg(
         max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
@@ -147,8 +149,18 @@ object Streams {
     require(maxClick != null && maxPurch != null,
       s"$name needs both click and purchase events at $dir " +
         s"(max click us = $maxClick, max purchase us = $maxPurch)")
-    math.min(maxClick.longValue, maxPurch.longValue) - 3600000000L
+    math.min(maxClick.longValue - clickDelayUs, maxPurch.longValue - purchaseDelayUs)
   }
+
+  /** DuckDB twin of [[joinWatermarkUs]] with 1 h on each side:
+    * `mx(<alias>)` is the lesser side maximum − 1 h, less each of `minus`. */
+  private def joinCutCte(alias: String, minus: Long*): String =
+    s"""mx AS (
+      SELECT LEAST(
+          MAX(CASE WHEN event_type = 'click' THEN epoch_us(ts) END),
+          MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END))
+        - 3600000000${minus.map(m => s" - $m").mkString} AS $alias
+      FROM events)"""
 
   // ---------------------------------------------------------------- q18
   // Approx distinct (HLL++) verified against its exact twin. The raw
@@ -579,7 +591,7 @@ object Streams {
     (s, dir) => withShuffle(s, StreamStores) {
       // Finalized clicks are those a further 30min (join bound) + 1min
       // safety margin below the join's final watermark.
-      val cutUs = joinWatermarkUs(s, dir, "q81") - 1800000000L - 60000000L
+      val cutUs = joinWatermarkUs(s, dir, "q81", 3600000000L, 3600000000L) - 1800000000L - 60000000L
       val joined = clickPurchaseJoin(s, dir, "left_outer")
       drainToMemory(joined, "append")
         .filter(unix_micros(col("c_ts")) <= cutUs)
@@ -592,12 +604,7 @@ object Streams {
             .otherwise(0L)).as("sum_gap_us"))
         .orderBy(col("user_id"))
     },
-    Some("""WITH mx AS (
-      SELECT LEAST(
-          MAX(CASE WHEN event_type = 'click' THEN epoch_us(ts) END),
-          MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END))
-        - 3600000000 - 1800000000 - 60000000 AS cut_us
-      FROM events),
+    Some(s"""WITH ${joinCutCte("cut_us", 1800000000L, 60000000L)},
     c AS (SELECT user_id, ts FROM events, mx
           WHERE event_type = 'click' AND epoch_us(ts) <= cut_us),
     p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
@@ -1108,7 +1115,7 @@ object Streams {
   private val q95 = QueryDef(
     "q95_stream_full_outer",
     (s, dir) => withShuffle(s, StreamStores) {
-      val cutUs = joinWatermarkUs(s, dir, "q95") - 1800000000L - 60000000L
+      val cutUs = joinWatermarkUs(s, dir, "q95", 3600000000L, 3600000000L) - 1800000000L - 60000000L
       val joined = clickPurchaseJoin(s, dir, "full_outer")
       drainToMemory(joined, "append")
         .filter(
@@ -1124,12 +1131,7 @@ object Streams {
             .otherwise(0L)).as("sum_gap_us"))
         .orderBy(col("user_id"))
     },
-    Some("""WITH mx AS (
-      SELECT LEAST(
-          MAX(CASE WHEN event_type = 'click' THEN epoch_us(ts) END),
-          MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END))
-        - 3600000000 - 1800000000 - 60000000 AS cut_us
-      FROM events),
+    Some(s"""WITH ${joinCutCte("cut_us", 1800000000L, 60000000L)},
     c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
     p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
     j AS (SELECT c.user_id AS c_user, p.user_id AS p_user,
@@ -1475,7 +1477,7 @@ object Streams {
   private val q100 = QueryDef(
     "q100_stream_right_outer",
     (s, dir) => withShuffle(s, StreamStores) {
-      val cutUs = joinWatermarkUs(s, dir, "q100") - 1800000000L - 60000000L
+      val cutUs = joinWatermarkUs(s, dir, "q100", 3600000000L, 3600000000L) - 1800000000L - 60000000L
       val joined = clickPurchaseJoin(s, dir, "right_outer")
       drainToMemory(joined, "append")
         .filter(
@@ -1490,12 +1492,7 @@ object Streams {
             .otherwise(0L)).as("sum_gap_us"))
         .orderBy(col("user_id"))
     },
-    Some("""WITH mx AS (
-      SELECT LEAST(
-          MAX(CASE WHEN event_type = 'click' THEN epoch_us(ts) END),
-          MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END))
-        - 3600000000 - 1800000000 - 60000000 AS cut_us
-      FROM events),
+    Some(s"""WITH ${joinCutCte("cut_us", 1800000000L, 60000000L)},
     c AS (SELECT user_id, ts FROM events WHERE event_type = 'click'),
     p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
     j AS (SELECT p.user_id AS p_user, c.ts AS c_ts, p.ts AS p_ts
@@ -1533,7 +1530,7 @@ object Streams {
   private val q99 = QueryDef(
     "q99_join_state_reader",
     (s, dir) => withShuffle(s, StreamStores) {
-      val wmUs = joinWatermarkUs(s, dir, "q99")
+      val wmUs = joinWatermarkUs(s, dir, "q99", 3600000000L, 3600000000L)
       val marginUs = 60000000L
       val ckpt = Tables.tmp("graft-q99-ckpt")
       val joined = clickPurchaseJoin(s, dir, "inner")
@@ -1557,12 +1554,7 @@ object Streams {
           col("min_off_us"), col("max_off_us"), col("sum_off_us"), col("n_stale"))
         .orderBy(col("side"))
     },
-    Some("""WITH mx AS (
-      SELECT LEAST(
-          MAX(CASE WHEN event_type = 'click' THEN epoch_us(ts) END),
-          MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END))
-        - 3600000000 AS wm_us
-      FROM events),
+    Some(s"""WITH ${joinCutCte("wm_us")},
     lf AS (SELECT 'left' AS side,
         user_id, epoch_us(ts) - (wm_us - 1800000000) AS off_us
       FROM events, mx WHERE event_type = 'click'),
@@ -1644,18 +1636,7 @@ object Streams {
   private val q103 = QueryDef(
     "q103_union_two_watermarks",
     (s, dir) => withShuffle(s, StreamStores) {
-      val maxRow = events(s, dir)
-        .agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("c"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("p"))
-        .head
-      val (maxClick, maxPurch) =
-        (maxRow.getAs[java.lang.Long]("c"), maxRow.getAs[java.lang.Long]("p"))
-      require(maxClick != null && maxPurch != null,
-        s"q103 needs both click and purchase events at $dir " +
-          s"(max click us = $maxClick, max purchase us = $maxPurch)")
-      val cutUs = math.min(maxClick.longValue - 3600000000L,
-        maxPurch.longValue - 7200000000L) - 60000000L
+      val cutUs = joinWatermarkUs(s, dir, "q103", 3600000000L, 7200000000L) - 60000000L
       val clicks = eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("ts"), col("event_type"), col("value"))

@@ -20,6 +20,24 @@ import Tables._
  */
 object Text {
 
+  /** `bx(cols, i)`: one row per bigram start `i` of each word list `ws`
+    * in `d`; `cols` ends with `ws`. */
+  private def bigramStepCte(cols: String) =
+    s"bx AS (SELECT $cols, unnest(generate_series(1, len(ws) - 1)) AS i FROM d)"
+
+  /** The bigram language models' shared source: `d` (documents of two or
+    * more words), `bx`, `bi(doc_id, source, w1, w2)`, and the training
+    * split's (doc hash % 10 < 8) bigram counts `bc(w1, w2, c12)`. */
+  private val lmBigramCte =
+    s"""d AS (
+      SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents
+      WHERE len(string_split(text, ' ')) >= 2),
+    bx AS (SELECT doc_id, source, ws,
+             unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
+    bi AS (SELECT doc_id, source, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
+    bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi
+           WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1, 2)"""
+
   // ---------------------------------------------------------------- t01
   // Whitespace token counting: explode + hash aggregate (map-side combine
   // keeps the shuffle bounded by vocabulary size, not token count).
@@ -1461,14 +1479,7 @@ object Text {
           expr("-CAST(sq AS DOUBLE) / n_test_bigrams / 10000.0D").as("cross_entropy"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH d AS (
-      SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT doc_id, source, ws,
-             unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
-    bi AS (SELECT doc_id, source, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
-    bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi
-           WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1, 2),
+    Some(s"""WITH $lmBigramCte,
     cc AS (SELECT w1, COUNT(*) AS c1 FROM bi
            WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1),
     sc AS (SELECT COUNT(DISTINCT w) AS v FROM (
@@ -2380,10 +2391,10 @@ object Text {
             .as("p_cont_ppm"))
         .orderBy(col("w"))
     },
-    Some("""WITH d AS (
+    Some(s"""WITH d AS (
       SELECT string_split(text, ' ') AS ws FROM documents
       WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
+    ${bigramStepCte("ws")},
     ty AS (SELECT DISTINCT ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
     cont AS (SELECT w2 AS w, COUNT(*) AS cont_count FROM ty GROUP BY 1),
     fert AS (SELECT w1 AS w, COUNT(*) AS fert_count FROM ty GROUP BY 1),
@@ -2589,14 +2600,7 @@ object Text {
         .withColumn("gain", expr("ce_addone - ce_jm"))
         .orderBy(col("source"), col("lam_ppm"))
     },
-    Some(s"""WITH d AS (
-      SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT doc_id, source, ws,
-             unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
-    bi AS (SELECT doc_id, source, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
-    bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi
-           WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1, 2),
+    Some(s"""WITH $lmBigramCte,
     cc AS (SELECT w1, COUNT(*) AS c1 FROM bi
            WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1),
     tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -2807,14 +2811,7 @@ object Text {
     },
     Some {
       val numQ = "CASE WHEN COALESCE(c12, 0) >= 1 THEN 4 * c12 - 3 ELSE 0 END"
-      s"""WITH d AS (
-      SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT doc_id, source, ws,
-             unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
-    bi AS (SELECT doc_id, source, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
-    bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi
-           WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1, 2),
+      s"""WITH $lmBigramCte,
     ctx AS (SELECT w1, SUM(c12) AS c1, COUNT(*) AS nf FROM bc GROUP BY 1),
     cont AS (SELECT w2, COUNT(*) AS np2, SUM(c12) AS cw2 FROM bc GROUP BY 1),
     sc AS (SELECT COUNT(*) AS nbt, COUNT(DISTINCT w2) AS vc, SUM(c12) AS ntr FROM bc),
@@ -2980,11 +2977,8 @@ object Text {
         .orderBy(col("variant"))
     },
     Some(s"""WITH RECURSIVE ${Dedup.simhashCteDuck},
-    p AS (SELECT a.doc_id AS id1, b.doc_id AS id2
-          FROM sh a JOIN sh b
-            ON (a.simhash >> 8) = (b.simhash >> 8) AND a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-    e AS (SELECT id1, id2 FROM p UNION SELECT id2, id1 FROM p),
+    ${Dedup.simhashPairsCte("p")},
+    ${Dedup.undirectedCte("e", "p")},
     r AS (SELECT id1 AS node, id2 AS reach FROM e
           UNION
           SELECT r.node, e.id2 FROM r JOIN e ON r.reach = e.id1),
@@ -2992,7 +2986,7 @@ object Text {
     dropped AS (SELECT node AS doc_id FROM lab WHERE node <> comp),
     d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
           WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
+    ${bigramStepCte("doc_id, ws")},
     bi AS (SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
     trn AS (SELECT * FROM bi WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8),
     trd AS (SELECT * FROM trn WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),
@@ -3084,14 +3078,7 @@ object Text {
         .withColumn("delta", expr("ce_sb - ce_jm"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH d AS (
-      SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT doc_id, source, ws,
-             unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
-    bi AS (SELECT doc_id, source, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
-    bc AS (SELECT w1, w2, COUNT(*) AS c12 FROM bi
-           WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1, 2),
+    Some(s"""WITH $lmBigramCte,
     cc AS (SELECT w1, COUNT(*) AS c1 FROM bi
            WHERE ${strHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 8 GROUP BY 1),
     tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -3247,7 +3234,7 @@ object Text {
            FROM uc JOIN un ON uc.source = un.source GROUP BY 1),
     d AS (SELECT source, string_split(text, ' ') AS ws FROM documents
           WHERE len(string_split(text, ' ')) >= 2),
-    bx AS (SELECT source, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM d),
+    ${bigramStepCte("source, ws")},
     bi AS (SELECT source, ws[i] AS w1, ws[i + 1] AS w2 FROM bx),
     bc AS (SELECT source, w1, w2, COUNT(*) AS cb FROM bi GROUP BY 1, 2, 3),
     bn AS (SELECT source, SUM(cb) AS m FROM bc GROUP BY 1),

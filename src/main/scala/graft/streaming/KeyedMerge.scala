@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -27,32 +26,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * version is a full (small, |keys|-bounded) table.
  *
  * Exactly-once under `foreachBatch`'s at-least-once retries: the same
- * two-phase commit as [[StreamUpsert]] (versioned snapshots +
- * `_commit_<batchId>` markers renamed atomically to fresh names, replayed
- * batch ids ≤ the committed id skipped, superseded versions vacuumed only
- * after the newer marker exists, immediately-superseded version retained
- * for concurrent readers) — see StreamUpsert's scaladoc for the full
- * crash-window argument; the marker protocol here is byte-identical, only
+ * two-phase commit as [[StreamUpsert]], through the one [[CommitLog]]
+ * (versioned snapshots + `_commit_<batchId>` markers renamed atomically to
+ * fresh names, replayed batch ids ≤ the committed id skipped, superseded
+ * versions vacuumed only after the newer marker exists,
+ * immediately-superseded version retained for concurrent readers); only
  * the snapshot payload differs (bucketed catalog table vs plain parquet).
  */
 object KeyedMerge {
 
-  private def fsOf(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val MarkerPrefix = "_commit_"
-
   /** The committed batch id (max `_commit_<id>` marker), or -1. */
-  def committedBatch(spark: SparkSession, tablePath: String): Long = {
-    val root = new Path(tablePath)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) -1L
-    else fs.listStatus(root).iterator
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(MarkerPrefix) =>
-        n.stripPrefix(MarkerPrefix).toLong }
-      .foldLeft(-1L)(math.max)
-  }
+  def committedBatch(spark: SparkSession, tablePath: String): Long =
+    CommitLog.committed(spark, tablePath)
 
   private def versionTable(qualifiedTable: String, batchId: Long): String =
     s"${qualifiedTable}_v$batchId"
@@ -61,16 +46,8 @@ object KeyedMerge {
     * exactly the last two after steady state (current + the
     * immediately-superseded version a concurrent reader may still be
     * scanning) — which is also what snapshot-diff CDC needs (q113). */
-  def commits(spark: SparkSession, tablePath: String): Seq[Long] = {
-    val root = new Path(tablePath)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).iterator
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(MarkerPrefix) =>
-        n.stripPrefix(MarkerPrefix).toLong }
-      .toSeq.sorted
-  }
+  def commits(spark: SparkSession, tablePath: String): Seq[Long] =
+    CommitLog.commits(spark, tablePath)
 
   /** A specific retained version as its BUCKETED catalog table. */
   def readVersion(spark: SparkSession, qualifiedTable: String,
@@ -196,37 +173,12 @@ object KeyedMerge {
       .bucketBy(buckets, keyCol).sortBy(keyCol)
       .option("path", s"$tablePath/v$batchId")
       .saveAsTable(versionTable(qualifiedTable, batchId))
-    // two-phase commit (StreamUpsert's protocol): marker renamed to a
-    // FRESH name after the snapshot lands; no commit record is ever
-    // deleted before its successor exists
-    val fs = fsOf(ss, new Path(tablePath))
-    val tmp = new Path(tablePath, s".tmp$MarkerPrefix$batchId")
-    fs.create(tmp, true).close()
-    val marker = new Path(tablePath, s"$MarkerPrefix$batchId")
-    if (!fs.rename(tmp, marker))
-      sys.error(s"could not commit marker for batch $batchId")
-    // vacuum strictly-older-than-superseded versions (catalog entry +
-    // marker + data dir); the immediately-superseded version is retained
-    // for concurrent readers mid-scan — same retention as StreamUpsert
-    val keep = committed
-    val tmpPrefix = s".tmp$MarkerPrefix"
-    fs.listStatus(new Path(tablePath)).foreach { st =>
-      val n = st.getPath.getName
-      val vOld = n.length > 1 && n.head == 'v' &&
-        n.tail.forall(_.isDigit) && n.tail.toLong < keep
-      val mOld = n.startsWith(MarkerPrefix) &&
-        n.stripPrefix(MarkerPrefix).toLong < keep
-      // a `.tmp_commit_<id>` orphaned by a crash between create() and
-      // rename() is consumed by the redelivered batch's own rename; one
-      // whose batch was never redelivered is garbage once superseded
-      val tOld = n.startsWith(tmpPrefix) &&
-        n.stripPrefix(tmpPrefix).forall(_.isDigit) &&
-        n.stripPrefix(tmpPrefix).toLong < keep
-      if (vOld || mOld || tOld) try {
-        if (vOld) ss.sql(
-          s"DROP TABLE IF EXISTS ${versionTable(qualifiedTable, n.tail.toLong)}")
-        fs.delete(st.getPath, true)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // two-phase commit ([[CommitLog]]): the marker lands after the
+    // snapshot; then strictly-older-than-superseded versions go (catalog
+    // entry + marker + data dir), the immediately-superseded one retained
+    // for concurrent readers mid-scan
+    CommitLog.commit(ss, tablePath, batchId)
+    CommitLog.vacuum(ss, tablePath, keep = committed, onVersion = v =>
+      ss.sql(s"DROP TABLE IF EXISTS ${versionTable(qualifiedTable, v)}"))
   }
 }

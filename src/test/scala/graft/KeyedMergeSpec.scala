@@ -238,6 +238,26 @@ class KeyedMergeSpec extends SparkSuite {
     fs.exists(orphan) shouldBe false
     // commit records themselves untouched beyond the standard retention
     KeyedMerge.committedBatch(spark, path) shouldBe 2L
+    // the vacuumed version's catalog table went with its data dir
+    spark.catalog.tableExists(s"${table}_v0") shouldBe false
+    spark.catalog.tableExists(s"${table}_v1") shouldBe true
+
+    // StreamUpsert commits through the same log: same orphan, same rule
+    import spark.implicits._
+    val upsertPath = java.nio.file.Files
+      .createTempDirectory("upsert-tmpvac").toString + "/t"
+    def upsert(id: Long): Unit = graft.streaming.StreamUpsert.applyBatch(
+      Seq(("a", id)).toDF("k", "v"), id,
+      _.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("sum_v")),
+      Seq("k"), Seq("n", "sum_v"), upsertPath)
+    upsert(0L)
+    val upsertOrphan = new org.apache.hadoop.fs.Path(upsertPath, ".tmp_commit_0")
+    fs.create(upsertOrphan, true).close()
+    upsert(1L)
+    fs.exists(upsertOrphan) shouldBe true
+    upsert(2L)
+    fs.exists(upsertOrphan) shouldBe false
+    graft.streaming.StreamUpsert.committedBatch(spark, upsertPath) shouldBe 2L
   }
 
   test("a durable checkpointLocation makes a second run continue batch ids") {
