@@ -1,7 +1,6 @@
 package graft.cli
 
 import java.nio.file.Paths
-import java.time.Duration
 import org.apache.spark.sql.SparkSession
 import graft.ddl.BillingTables
 import graft.ingest.BillingIngest
@@ -10,17 +9,17 @@ import graft.sources.{BillingSource, KafkaSource, TextFileSource}
 /**
  * CLI driver 1: create tables + run one bounded streaming ingest window,
  * mirroring `run_kafka_to_hive.py:31-72` (args at `:7-28`): lock check,
- * DDL, time-boxed stream (≤ 2 trigger intervals — docstring
+ * DDL, one AvailableNow drain of everything the source holds (in place of
+ * the reference's time-boxed ≤ 2 trigger intervals,
  * `Dcache_kafka_to_hive.py:305`), lock release, 0/1 status file.
  *
  * Args (`--key value`):
  *   --database <db>            target database        (default billing)
  *   --checkpoint <dir>         checkpoint location    (default
  *                              <lock-dir>/checkpoint_run_stream, so each
- *                              cron window resumes where the last ended)
+ *                              cron window resumes where the last ended;
+ *                              it also holds the per-table replay ledger)
  *   --lock-dir <dir>           lock + status files    (default /tmp)
- *   --trigger-s <n>            micro-batch seconds; omit → AvailableNow
- *                              drain (modern idiom for the cron window)
  *   --source-dir <dir>         JSON-lines dir source (Kafka stand-in)
  *   --kafka-servers <csv>      Kafka bootstrap servers \  used when
  *   --topic-pattern <regex>    subscribePattern       /  no --source-dir
@@ -39,17 +38,9 @@ object RunIngest {
       val tables = new BillingTables(spark, db)
       tables.createDatabase()
       tables.createAll()
-      val ingest = new BillingIngest(spark, source.load(spark), db)
       val ckpt = opts.getOrElse("checkpoint",
         lockDir.resolve("checkpoint_run_stream").toString)
-      opts.get("trigger-s") match {
-        case Some(s) =>
-          // reference parity: stream for at most two trigger intervals
-          val q = ingest.start(ckpt, Duration.ofSeconds(s.toLong))
-          q.awaitTermination(2 * s.toLong * 1000)
-          q.stop()
-        case None => ingest.runBounded(ckpt)
-      }
+      new BillingIngest(spark, source.load(spark), db).runBounded(ckpt)
     }
   }
 

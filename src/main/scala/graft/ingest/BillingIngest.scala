@@ -1,10 +1,11 @@
 package graft.ingest
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 import graft.parse.BillingParse
 import graft.route.BillingRouter
+import graft.streaming.CommitLog
 
 /**
  * Streaming ingest: a Kafka-shaped stream (any streaming DataFrame with a
@@ -15,9 +16,12 @@ import graft.route.BillingRouter
  *   - foreachBatch sink, one parse + four routed inserts per micro-batch
  *     (`Dcache_kafka_to_hive.py:317-336`)
  *   - checkpointed offsets (`:341`)
- *   - at-least-once delivery (inserts are appends, replays duplicate)
  *
  * and its missed optimizations fixed (SURVEY §4.2):
+ *   - exactly-once per table (except the window stated at `processBatch`):
+ *     the reference accepts `batchid` (`:317`) but never uses it, so a
+ *     replayed micro-batch appends twice; here each table's append is
+ *     recorded in a `CommitLog` under the checkpoint and skipped on replay
  *   - the parsed micro-batch is persisted once instead of re-parsed by each
  *     of the four inserts (the reference re-plans the parse 4×)
  *   - the Python↔JVM callback hop and global-temp-view + SQL-string
@@ -28,25 +32,28 @@ import graft.route.BillingRouter
  * (map-only) over however many Kafka partitions the topic has, and the
  * partitioned-append write is dynamic-partition parquet with no exchange.
  */
-class BillingIngest(
-    spark: SparkSession,
-    source: DataFrame,
-    database: String = "default",
-    idempotenceDir: Option[String] = None) {
+class BillingIngest(spark: SparkSession, source: DataFrame, database: String = "default") {
 
   private def tableName(t: String) = s"$database.$t"
 
   /** The per-micro-batch body (reference `forEachBatch`, `:317-336`).
     *
-    * With `idempotenceDir` set, each (batchId, table) insert is recorded
-    * in a marker file after it commits; a replayed batch (foreachBatch is
-    * at-least-once — the reference accepts `batchid` at `:317` but never
-    * uses it) skips inserts whose marker exists. This closes the
-    * crash-between-insert-1-and-4 duplication window except for a crash
-    * between an insert's commit and its marker write — the best
-    * achievable without a transactional table format. Off by default
-    * (reference-parity at-least-once). */
-  private[graft] def processBatch(batch: DataFrame, batchId: Long): Unit = {
+    * Replay ledger: foreachBatch is at-least-once (a batch whose offsets
+    * were logged but not committed runs again after a restart), so each
+    * table's append goes through a [[CommitLog]] at
+    * `<checkpointDir>/tables/<table>`: a table whose log has committed
+    * `batchId` is skipped, and after its insert and `refreshTable` the
+    * batch id is committed and older markers are vacuumed (at most two
+    * stay). The ledger lives INSIDE the checkpoint because it is keyed by
+    * the checkpoint's batch ids: deleting the checkpoint restarts batch ids
+    * at 0, and a ledger that outlived it would silently skip the new
+    * batches, so the two must be deleted together.
+    *
+    * The one window left open: a crash between an insert's commit and its
+    * marker. The replay then appends that table's rows of the batch a
+    * second time. The repair is [[BillingBackfill]], which replaces the
+    * affected days exactly. */
+  private[graft] def processBatch(checkpointDir: String)(batch: DataFrame, batchId: Long): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration.Inf
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -57,9 +64,9 @@ class BillingIngest(
       // them serially, and each of its jobs re-parsed the batch)
       val inserts = BillingRouter.route(parsed).toSeq.map { case (table, routed) =>
         Future {
-          val marker = idempotenceDir.map(d =>
-            java.nio.file.Paths.get(d, s"batch-$batchId-$table"))
-          if (!marker.exists(java.nio.file.Files.exists(_))) {
+          val ledger = new Path(checkpointDir, s"tables/$table").toString
+          val previous = CommitLog.committed(spark, ledger)
+          if (previous < batchId) {
             // cluster each table's rows by day BEFORE the dynamic-partition
             // write: without this every write task holds every day, so a
             // batch emits tasks × days × tables files (measured ~3800/batch
@@ -74,31 +81,24 @@ class BillingIngest(
             // refresh doesn't reach this (the caller's) session's relation
             // cache, so invalidate here or later reads see stale file lists
             spark.catalog.refreshTable(tableName(table))
-            marker.foreach { m =>
-              java.nio.file.Files.createDirectories(m.getParent)
-              java.nio.file.Files.write(m, Array.emptyByteArray)
-            }
+            CommitLog.commit(spark, ledger, batchId)
+            CommitLog.vacuum(spark, ledger, keep = previous)
           }
         }
       }
-      Await.result(Future.sequence(inserts), Inf)
+      // wait for EVERY insert before rethrowing: failing on the first error
+      // would leave the others writing after the unpersist below and after
+      // the caller has released its lock
+      inserts.foreach(Await.ready(_, Inf))
+      inserts.foreach(_.value.get.get) // rethrows the first failure, in route order
     } finally parsed.unpersist()
   }
-
-  private def writer(checkpointDir: String) =
-    source.writeStream
-      .foreachBatch(processBatch _)
-      .option("checkpointLocation", checkpointDir)
-
-  /** Continuous micro-batch mode (reference `to_hive`, `:303-347`). */
-  def start(checkpointDir: String, triggerInterval: java.time.Duration): StreamingQuery =
-    writer(checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerInterval.toMillis, java.util.concurrent.TimeUnit.MILLISECONDS))
-      .start()
 
   /** Bounded run: drain everything available, then stop. Modern idiom for
     * the reference's cron-driven `awaitTermination(2*trigger); stop()`
     * window (`Dcache_kafka_to_hive.py:305,345-347`). */
   def runBounded(checkpointDir: String): Unit =
-    graft.streaming.drain(writer(checkpointDir))
+    graft.streaming.drain(source.writeStream
+      .foreachBatch(processBatch(checkpointDir) _)
+      .option("checkpointLocation", checkpointDir))
 }

@@ -30,9 +30,9 @@ object BillingRouter {
   /** Split a parsed frame into table-name → DDL-ordered projection with the
     * partition column appended. Filter comes before projection so Catalyst
     * collapses it into the JSON-parse projection and prunes unused fields. */
-  def route(parsed: DataFrame, tablePrefix: String = ""): Map[String, DataFrame] =
+  def route(parsed: DataFrame): Map[String, DataFrame] =
     routes.map { r =>
-      (tablePrefix + r.table) -> parsed
+      r.table -> parsed
         .filter(r.predicate)
         .select(r.columns.map(col) :+
           substring(col("date"), 1, 10).as(BillingSchema.partitionField): _*)

@@ -14,9 +14,11 @@ import org.apache.spark.sql.SparkSession
  * record, silently resetting the table to empty); superseded versions are
  * vacuumed only after the newer marker exists. Batch ids are monotonic,
  * so the max marker doubles as the replay ledger: a re-delivered batch id
- * ≤ the committed id is skipped.
+ * ≤ the committed id is skipped. `graft.ingest.BillingIngest` keeps one
+ * such log per billing table as its replay ledger (markers only, no
+ * snapshot dirs).
  */
-private[streaming] object CommitLog {
+private[graft] object CommitLog {
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,11 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ddl.BillingTables
 import graft.ingest.BillingIngest
 
 /** End-to-end streaming ingest over MemoryStream (SURVEY §5.2 item 2):
-  * foreachBatch parse→route→append, AvailableNow drain, checkpoint resume. */
+  * foreachBatch parse→route→append, AvailableNow drain, checkpoint resume,
+  * and the per-table replay ledger under the checkpoint. */
 class BillingIngestSpec extends SparkSuite {
   import spark.implicits._
 
@@ -58,28 +60,69 @@ class BillingIngestSpec extends SparkSuite {
     counts().values.sum shouldBe 1L
   }
 
-  test("batch replay duplicates by default; idempotenceDir makes it exactly-once") {
-    freshTables()
-    import org.apache.spark.sql.functions.col
-    val batch = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(Fixtures.removeJson))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.StringType))))
+  /** One clean run of `Fixtures.all`, per table. */
+  private val clean = Map("transfer" -> 1L, "request" -> 1L, "storage" -> 2L, "remove" -> 1L)
 
-    // reference parity: replaying the same batch appends again
-    val plain = new BillingIngest(spark, batch.select(col("value")), db)
-    plain.processBatch(batch, 7L)
-    plain.processBatch(batch, 7L)
-    counts()("remove") shouldBe 2L
+  private def tmpDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
+  test("a replayed batch appends each table once, also after a failed insert") {
     freshTables()
-    val ledger = java.nio.file.Files.createTempDirectory("graft-ledger").toString
-    val once = new BillingIngest(spark, batch.select(col("value")), db, Some(ledger))
-    once.processBatch(batch, 7L)
-    once.processBatch(batch, 7L) // marker exists -> skipped
-    counts()("remove") shouldBe 1L
-    once.processBatch(batch, 8L) // a NEW batch id still appends
-    counts()("remove") shouldBe 2L
+    val batch = Fixtures.all.toDF("value")
+    val ingest = new BillingIngest(spark, batch, db)
+    val ckpt = tmpDir("graft-ckpt")
+    new BillingTables(spark, db).drop(Seq("remove"))
+    // transfer, request and storage commit; the insert into remove fails
+    an[Exception] should be thrownBy ingest.processBatch(ckpt)(batch, 7L)
+    new BillingTables(spark, db).createAll()
+    ingest.processBatch(ckpt)(batch, 7L) // the replay fills only remove
+    counts() shouldBe clean
+    ingest.processBatch(ckpt)(batch, 7L) // every table has committed 7
+    counts() shouldBe clean
+    ingest.processBatch(ckpt)(batch, 8L) // a NEW batch id still appends
+    counts() shouldBe clean.map { case (t, n) => t -> 2 * n }
+  }
+
+  test("a failed insert is rethrown only after the other inserts have finished") {
+    freshTables()
+    val copies = 200
+    val batch = Seq.fill(copies)(Fixtures.all).flatten.toDF("value")
+    new BillingTables(spark, db).drop(Seq("remove"))
+    an[Exception] should be thrownBy
+      new BillingIngest(spark, batch, db).processBatch(tmpDir("graft-ckpt"))(batch, 0L)
+    // read before anything else starts a job: no insert is still running
+    spark.sparkContext.statusTracker.getActiveJobIds() shouldBe empty
+    new BillingTables(spark, db).createAll()
+    counts() shouldBe clean.map { case (t, n) => t -> (if (t == "remove") 0L else copies * n) }
+  }
+
+  test("the ledger keeps two markers per table, and a replayed window adds no rows") {
+    freshTables()
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[String]
+    val ckpt = tmpDir("graft-ckpt")
+    val ingest = new BillingIngest(spark, mem.toDF(), db)
+    for (_ <- 1 to 6) {
+      mem.addData(Fixtures.all: _*)
+      ingest.runBounded(ckpt) // one window, one batch: ids 0 to 5
+    }
+    val six = clean.map { case (t, n) => t -> 6 * n }
+    counts() shouldBe six
+    def markers(t: String) = {
+      val dir = java.nio.file.Paths.get(ckpt, "tables", t)
+      val st = java.nio.file.Files.list(dir)
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_commit_")).toSeq.sorted
+      finally st.close()
+    }
+    clean.keys.foreach(t => markers(t) shouldBe Seq("_commit_4", "_commit_5"))
+    // a crash after the sink but before Spark's own commit: the restart
+    // runs batch 5 again, and every table's ledger skips it
+    val commits = java.nio.file.Paths.get(ckpt, "commits")
+    Seq("5", ".5.crc").foreach(n => java.nio.file.Files.deleteIfExists(commits.resolve(n)))
+    new BillingIngest(spark, mem.toDF(), db).runBounded(ckpt)
+    java.nio.file.Files.exists(commits.resolve("5")) shouldBe true
+    counts() shouldBe six
   }
 
   test("rows land in the partition derived from their own embedded date") {

@@ -6,7 +6,8 @@ import org.scalatest.matchers.should.Matchers
 /** Mechanisms that used to be copied from query to query, each pinned to
   * the one definition that now writes it: the DuckDB oracle fragments
   * (the simhash graph's recursive reach, the label centroid, the session
-  * gap), the Spark session window, and the versioned sinks' commit log. */
+  * gap), the Spark session window, the commit log of the versioned sinks
+  * and the ingest ledger, and the one place a stream's trigger is set. */
 class WrittenOnceSpec extends AnyFunSuite with Matchers {
 
   private lazy val sources = SourceScan.files("src/main")
@@ -21,7 +22,8 @@ class WrittenOnceSpec extends AnyFunSuite with Matchers {
       ("Similarity.scala", "val meanCvSql"),
     "OVER w > 1800000000" -> ("Pipeline.scala", "def sessionCte("),
     "lag(col(\"us\"), 1)" -> ("Pipeline.scala", "def sessionNumbers("),
-    "\"_commit_\"" -> ("CommitLog.scala", "val MarkerPrefix"))
+    "\"_commit_\"" -> ("CommitLog.scala", "val MarkerPrefix"),
+    ".trigger(" -> ("package.scala", "def drain("))
 
   for ((needle, (file, definition)) <- needles)
     test(s"$needle is written once, in $file $definition") {
