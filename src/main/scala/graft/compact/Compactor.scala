@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.schema.BillingSchema
 
 /**
@@ -33,9 +34,17 @@ import graft.schema.BillingSchema
  *     files its own scan is reading (Spark rejects the plan with "Cannot
  *     overwrite a path that is also being read from"). Checkpointing is
  *     executor block storage, so the listed partitions are processed in
- *     batches of `partitionsPerJob` — exposure is bounded to one batch's
- *     worth of blocks regardless of how many partitions were requested
+ *     batches of `partitionsPerJob`, each batch's blocks freed right after
+ *     its write. The four tables compact concurrently, one batch at a time
+ *     each, so at most tables × `partitionsPerJob` partitions' worth of
+ *     blocks are held at once, however many partitions were requested
  *     (`--partition all` on a 100 TB table never materializes the table).
+ *
+ * Crash window: a JVM killed inside a batch's overwrite commit (after the
+ * old partition directory is deleted, before the staged files are renamed
+ * in) loses that day, since its old rows were only in the lost checkpoint
+ * blocks. Running the tables concurrently leaves that window as it was,
+ * one per table and batch; it can now be open in up to four tables at once.
  */
 class Compactor(
     spark: SparkSession,
@@ -85,6 +94,11 @@ class Compactor(
 
   /** Compact the given partitions (None = all) of the given tables.
     *
+    * The tables run concurrently: each is an independent chain of jobs
+    * over its own files. Every table finishes (or fails) before the call
+    * returns, and the first failure, in `tables` order, is rethrown, so
+    * one table's failure fails the run while the others still complete.
+    *
     * ONE Spark job per BATCH of `partitionsPerJob` partitions, not one
     * per partition (the reference loops partitions serially, `:374`):
     * within a batch, rows are shuffled on
@@ -101,44 +115,53 @@ class Compactor(
   def compact(
       tables: Seq[String] = BillingSchema.tableSchemas.keys.toSeq.sorted,
       partitions: Option[Seq[String]] = None): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration.Inf
+    import scala.concurrent.ExecutionContext.Implicits.global
     val field = BillingSchema.partitionField
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      tables.foreach { table =>
-        val sizes = partitionSizes(table, partitions)
-        val parts = partitions.getOrElse(sizes.keys.toSeq.sorted)
-        def filesFor(p: String): Int = math.max(1,
-          math.ceil(sizes.getOrElse(p, 0L).toDouble / targetFileBytes).toInt)
-        parts.grouped(partitionsPerJob).foreach { batch =>
-          // SHOW PARTITIONS / the catalog report NULL keys as the Hive
-          // default-partition sentinel; equality would select zero rows
-          val nonNull = batch.filterNot(_ == nullPartition)
-          val predicate = (
-            Option.when(nonNull.nonEmpty)(col(field).isin(nonNull: _*)) ++
-              Option.when(batch.contains(nullPartition))(col(field).isNull)
-          ).reduce(_ || _)
-          val df = spark.table(qualified(table)).where(predicate)
-          // per-partition target file count as a lookup expression
-          val filesExpr = {
-            val m = if (nonNull.isEmpty) lit(1) else
-              coalesce(element_at(
-                map(nonNull.flatMap(p => Seq(lit(p), lit(filesFor(p)))): _*),
-                col(field)), lit(1))
-            when(col(field).isNull, lit(filesFor(nullPartition))).otherwise(m)
+      val rewrites = tables.map { table =>
+        Future {
+          val sizes = partitionSizes(table, partitions)
+          val parts = partitions.getOrElse(sizes.keys.toSeq.sorted)
+          def filesFor(p: String): Int = math.max(1,
+            math.ceil(sizes.getOrElse(p, 0L).toDouble / targetFileBytes).toInt)
+          parts.grouped(partitionsPerJob).foreach { batch =>
+            // SHOW PARTITIONS / the catalog report NULL keys as the Hive
+            // default-partition sentinel; equality would select zero rows
+            val nonNull = batch.filterNot(_ == nullPartition)
+            val predicate = (
+              Option.when(nonNull.nonEmpty)(col(field).isin(nonNull: _*)) ++
+                Option.when(batch.contains(nullPartition))(col(field).isNull)
+            ).reduce(_ || _)
+            val df = spark.table(qualified(table)).where(predicate)
+            // per-partition target file count as a lookup expression
+            val filesExpr = {
+              val m = if (nonNull.isEmpty) lit(1) else
+                coalesce(element_at(
+                  map(nonNull.flatMap(p => Seq(lit(p), lit(filesFor(p)))): _*),
+                  col(field)), lit(1))
+              when(col(field).isNull, lit(filesFor(nullPartition))).otherwise(m)
+            }
+            val salt = pmod(xxhash64(df.columns.map(col): _*), filesExpr.cast("long"))
+            // explicit partition count = total target files: exactly the
+            // right task count for the rewrite, and AQE won't coalesce the
+            // salted buckets back together (an explicit N disables it)
+            val totalFiles = batch.map(filesFor).sum
+            // materialize before overwriting the files being read, then let
+            // the dynamic overwrite atomically replace only these partitions
+            val rows = df.repartition(totalFiles, col(field), salt).localCheckpoint()
+            try rewriteHook(rows).write.mode("overwrite").insertInto(qualified(table))
+            finally Checkpoints.release(rows)
           }
-          val salt = pmod(xxhash64(df.columns.map(col): _*), filesExpr.cast("long"))
-          // explicit partition count = total target files: exactly the
-          // right task count for the rewrite, and AQE won't coalesce the
-          // salted buckets back together (an explicit N disables it)
-          val totalFiles = batch.map(filesFor).sum
-          // materialize before overwriting the files being read, then let
-          // the dynamic overwrite atomically replace only these partitions
-          rewriteHook(df.repartition(totalFiles, col(field), salt)
-            .localCheckpoint())
-            .write.mode("overwrite").insertInto(qualified(table))
         }
       }
+      // wait for EVERY table before rethrowing, so no rewrite is still
+      // running once the caller restores the conf or releases its lock
+      rewrites.foreach(Await.ready(_, Inf))
+      rewrites.foreach(_.value.get.get) // rethrows the first failure, in table order
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)

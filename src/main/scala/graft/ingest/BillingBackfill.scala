@@ -1,8 +1,8 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
+import graft.Checkpoints
 import graft.parse.BillingParse
 import graft.route.BillingRouter
 import graft.schema.BillingSchema
@@ -31,11 +31,13 @@ import graft.schema.BillingSchema
  *     with the same rows.
  *
  * Scale notes (100 TB): parse + route are narrow (map-only) over the raw
- * archive's input partitioning; the one shuffle clusters rows by day so
- * each day's overwrite writes one file set (the BillingIngest lesson —
- * without it, tasks × days small files). The slice is localCheckpoint'd
- * once and reused by every per-day insert and the returned count, so the
- * raw archive is read ONCE per backfill, not once per day.
+ * archive's input partitioning. The requested days are parsed once and
+ * clustered by day in the backfill's one shuffle (the BillingIngest
+ * layout: each day in one task, so each day's overwrite writes one file
+ * set, not one per task), then localCheckpoint'd once. Every table's
+ * route, every per-day insert and the returned counts read that
+ * checkpoint, so the raw archive is read and parsed ONCE per backfill, not
+ * once per table or per day; its blocks are freed before returning.
  */
 class BillingBackfill(spark: SparkSession, database: String = "default") {
 
@@ -53,14 +55,15 @@ class BillingBackfill(spark: SparkSession, database: String = "default") {
     require(days.nonEmpty, "backfill requires at least one partition day")
     days.foreach(d => require(DayPattern.matches(d),
       s"not a YYYY-MM-DD partition day: '$d'"))
-    val parsed = BillingParse.parse(raw)
-    BillingRouter.route(parsed).map { case (table, routed) =>
-      val slice = routed
-        .filter(col(BillingSchema.partitionField).isin(days: _*))
-        .repartition(col(BillingSchema.partitionField))
-        .localCheckpoint()
+    // parse once, keep the requested days, cluster them by day once and
+    // hold the result: every table and every day reads these blocks
+    val clustered = BillingParse.parse(raw)
+      .filter(BillingRouter.partitionDate.isin(days: _*))
+      .repartition(BillingRouter.partitionDate)
+      .localCheckpoint()
+    try BillingRouter.route(clustered).map { case (table, routed) =>
       val view = s"backfill_${table}_src"
-      slice.createOrReplaceTempView(view)
+      routed.createOrReplaceTempView(view)
       try {
         days.foreach { d =>
           spark.sql(
@@ -71,7 +74,7 @@ class BillingBackfill(spark: SparkSession, database: String = "default") {
         }
       } finally spark.catalog.dropTempView(view)
       spark.catalog.refreshTable(qualified(table))
-      table -> slice.count()
-    }
+      table -> routed.count()
+    } finally Checkpoints.release(clustered)
   }
 }

@@ -2,7 +2,7 @@ package graft.ingest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import graft.Checkpoints
 import graft.parse.BillingParse
 import graft.route.BillingRouter
 import graft.streaming.CommitLog
@@ -22,15 +22,26 @@ import graft.streaming.CommitLog
  *     the reference accepts `batchid` (`:317`) but never uses it, so a
  *     replayed micro-batch appends twice; here each table's append is
  *     recorded in a `CommitLog` under the checkpoint and skipped on replay
- *   - the parsed micro-batch is persisted once instead of re-parsed by each
- *     of the four inserts (the reference re-plans the parse 4×)
+ *   - the micro-batch is parsed once, not once per insert (the reference
+ *     re-plans the parse 4×)
  *   - the Python↔JVM callback hop and global-temp-view + SQL-string
  *     indirection are gone: foreachBatch is an in-process Scala closure
  *     doing direct DataFrame writes.
  *
- * At 100 TB scale this operator is shuffle-free: parse and route are narrow
- * (map-only) over however many Kafka partitions the topic has, and the
- * partitioned-append write is dynamic-partition parquet with no exchange.
+ * One exchange per micro-batch: parse and route are narrow (map-only) over
+ * however many Kafka partitions the topic has, and the one shuffle
+ * clusters the parsed batch by day (`BillingRouter.partitionDate`) before
+ * it is held as a `localCheckpoint`. Without the clustering every write
+ * task holds every day, so a batch emits tasks × days × tables files
+ * (measured ~3800 per batch at 32 tasks) and file commits dominate; with
+ * it each day sits in one task, every routed projection inherits that
+ * layout, and each of the four dynamic-partition appends is a write-only
+ * job that writes one file per non-empty day. A steady batch is six jobs:
+ * the exchange's map stage, the checkpoint, and the four writes. The
+ * checkpoint holds rows, not a columnar cache: it is read four times and
+ * dropped, so building column statistics for it would be wasted. At
+ * cluster scale with giant batches, add a salt to the clustering key to
+ * split hot days across several writers.
  */
 class BillingIngest(spark: SparkSession, source: DataFrame, database: String = "default") {
 
@@ -52,31 +63,31 @@ class BillingIngest(spark: SparkSession, source: DataFrame, database: String = "
     * The one window left open: a crash between an insert's commit and its
     * marker. The replay then appends that table's rows of the batch a
     * second time. The repair is [[BillingBackfill]], which replaces the
-    * affected days exactly. */
+    * affected days exactly.
+    *
+    * The checkpoint lives in executor block storage for the batch only
+    * (released in `finally`, also on failure). Losing one of its blocks
+    * (a lost executor) fails every insert that still needs it, so the
+    * batch fails; the restart replays it from the logged offsets, parses
+    * it again, and the ledger makes each table append it exactly once. */
   private[graft] def processBatch(checkpointDir: String)(batch: DataFrame, batchId: Long): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration.Inf
     import scala.concurrent.ExecutionContext.Implicits.global
-    val parsed = BillingParse.parse(batch).persist(StorageLevel.MEMORY_AND_DISK)
+    // the batch's one exchange (see the class doc): each insert below is
+    // a write-only job over these day-clustered blocks
+    val clustered = BillingParse.parse(batch)
+      .repartition(BillingRouter.partitionDate).localCheckpoint()
     try {
       // the four inserts are independent jobs on disjoint tables over the
-      // shared persisted parse — run them concurrently (the reference runs
+      // shared checkpoint — run them concurrently (the reference runs
       // them serially, and each of its jobs re-parsed the batch)
-      val inserts = BillingRouter.route(parsed).toSeq.map { case (table, routed) =>
+      val inserts = BillingRouter.route(clustered).toSeq.map { case (table, routed) =>
         Future {
           val ledger = new Path(checkpointDir, s"tables/$table").toString
           val previous = CommitLog.committed(spark, ledger)
           if (previous < batchId) {
-            // cluster each table's rows by day BEFORE the dynamic-partition
-            // write: without this every write task holds every day, so a
-            // batch emits tasks × days × tables files (measured ~3800/batch
-            // at 32 tasks) and file-commit overhead dominates; with it the
-            // count is one file per non-empty day per table. The shuffle is
-            // narrow (rows move once, within a micro-batch). At cluster
-            // scale with giant batches, add a salt column to the
-            // repartition to split hot days across several writers.
-            routed.repartition(org.apache.spark.sql.functions.col("partition_date"))
-              .write.mode("append").insertInto(tableName(table))
+            routed.write.mode("append").insertInto(tableName(table))
             // the insert runs in the stream's cloned session; its file-index
             // refresh doesn't reach this (the caller's) session's relation
             // cache, so invalidate here or later reads see stale file lists
@@ -87,11 +98,11 @@ class BillingIngest(spark: SparkSession, source: DataFrame, database: String = "
         }
       }
       // wait for EVERY insert before rethrowing: failing on the first error
-      // would leave the others writing after the unpersist below and after
+      // would leave the others writing after the release below and after
       // the caller has released its lock
       inserts.foreach(Await.ready(_, Inf))
       inserts.foreach(_.value.get.get) // rethrows the first failure, in route order
-    } finally parsed.unpersist()
+    } finally Checkpoints.release(clustered)
   }
 
   /** Bounded run: drain everything available, then stop. Modern idiom for

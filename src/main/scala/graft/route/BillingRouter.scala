@@ -27,6 +27,12 @@ object BillingRouter {
     Route("storage", col("msgType").isin("store", "restore"), BillingSchema.storageCols),
     Route("remove", col("msgType") === "remove", BillingSchema.removeCols))
 
+  /** The day a record lands in: the one definition of the partition value,
+    * so the ingest's clustering key and the written partition column
+    * cannot drift apart (if they did, each day would split across write
+    * tasks and the file count would multiply). */
+  val partitionDate: Column = substring(col("date"), 1, 10)
+
   /** Split a parsed frame into table-name → DDL-ordered projection with the
     * partition column appended. Filter comes before projection so Catalyst
     * collapses it into the JSON-parse projection and prunes unused fields. */
@@ -35,6 +41,6 @@ object BillingRouter {
       r.table -> parsed
         .filter(r.predicate)
         .select(r.columns.map(col) :+
-          substring(col("date"), 1, 10).as(BillingSchema.partitionField): _*)
+          partitionDate.as(BillingSchema.partitionField): _*)
     }.toMap
 }

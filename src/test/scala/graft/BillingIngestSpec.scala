@@ -1,13 +1,15 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ddl.BillingTables
 import graft.ingest.BillingIngest
 
 /** End-to-end streaming ingest over MemoryStream (SURVEY §5.2 item 2):
   * foreachBatch parse→route→append, AvailableNow drain, checkpoint resume,
-  * and the per-table replay ledger under the checkpoint. */
+  * the per-table replay ledger under the checkpoint, and a batch's job,
+  * exchange and file counts. */
 class BillingIngestSpec extends SparkSuite {
   import spark.implicits._
 
@@ -94,6 +96,56 @@ class BillingIngestSpec extends SparkSuite {
     spark.sparkContext.statusTracker.getActiveJobIds() shouldBe empty
     new BillingTables(spark, db).createAll()
     counts() shouldBe clean.map { case (t, n) => t -> (if (t == "remove") 0L else copies * n) }
+  }
+
+  test("a batch is one exchange, at most six jobs, one file per table and day, and frees its blocks") {
+    freshTables()
+    // three days, each at 40 times of day spread over all input
+    // partitions: only a clustering on the day itself keeps a day in one
+    // task (a key with the time in it splits it across tasks)
+    val copies = 40
+    val batch = (0 until copies).flatMap { i =>
+      val at = f"${i % 24}%02d:$i%02d:00.000"
+      Fixtures.all.map(_.replaceAll("(\"date\":\"[0-9-]{10}) [0-9:.]+", "$1 " + at))
+    }.toDF("value")
+    val sc = spark.sparkContext
+    // StageInfo.shuffleDepId is private[spark] to Scala, public to the JVM
+    val depId = classOf[StageInfo].getMethod("shuffleDepId")
+    val shuffles = java.util.concurrent.ConcurrentHashMap.newKeySet[Any]()
+    val stages = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        js.stageInfos.foreach(depId.invoke(_).asInstanceOf[Option[Any]].foreach(shuffles.add))
+    }
+    val persisted = sc.getPersistentRDDs.size
+    sc.addSparkListener(stages)
+    // AQE would coalesce so small a batch into one task, where any key
+    // gives one file per day; keep every shuffle partition
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    // JobCount returns once every event of the body has been delivered
+    val (_, jobs) = try JobCount.jobsIn(spark)(
+      new BillingIngest(spark, batch, db).processBatch(tmpDir("graft-ckpt"))(batch, 0L))
+    finally { sc.removeSparkListener(stages); spark.conf.unset(coalesce) }
+    shuffles.size shouldBe 1
+    jobs should be <= 6
+    sc.getPersistentRDDs.size should be <= persisted
+    counts() shouldBe clean.map { case (t, n) => t -> copies * n }
+    val warehouse = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), s"$db.db")
+    def list(dir: java.nio.file.Path) = {
+      val st = java.nio.file.Files.list(dir)
+      try st.iterator().asScala.toList finally st.close()
+    }
+    val files = for {
+      t <- clean.keys.toSeq.sorted
+      day <- list(warehouse.resolve(t)).sortBy(_.toString)
+      if day.getFileName.toString.startsWith("partition_date=")
+    } yield s"$t/${day.getFileName}" -> list(day).map(_.getFileName.toString)
+      .count(n => !n.startsWith(".") && !n.startsWith("_"))
+    files.map(_._1) shouldBe Seq("remove/partition_date=2024-03-03",
+      "request/partition_date=2024-03-01", "storage/partition_date=2024-03-02",
+      "transfer/partition_date=2024-03-01")
+    all(files.map(_._2)) shouldBe 1
   }
 
   test("the ledger keeps two markers per table, and a replayed window adds no rows") {

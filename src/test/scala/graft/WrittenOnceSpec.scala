@@ -23,7 +23,8 @@ class WrittenOnceSpec extends AnyFunSuite with Matchers {
     "OVER w > 1800000000" -> ("Pipeline.scala", "def sessionCte("),
     "lag(col(\"us\"), 1)" -> ("Pipeline.scala", "def sessionNumbers("),
     "\"_commit_\"" -> ("CommitLog.scala", "val MarkerPrefix"),
-    ".trigger(" -> ("package.scala", "def drain("))
+    ".trigger(" -> ("package.scala", "def drain("),
+    "substring(col(\"date\"), 1, 10)" -> ("BillingRouter.scala", "val partitionDate"))
 
   for ((needle, (file, definition)) <- needles)
     test(s"$needle is written once, in $file $definition") {
